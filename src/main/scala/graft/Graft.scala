@@ -98,26 +98,11 @@ object Graft {
             .config("spark.hadoop.fs.s3a.path.style.access", "true"))
     }
 
-  /** Delta Lake readiness — the SnapshotStore `delta` backend's session
-    * half (extensions are fixed at session build, so they must ride the
-    * factory, not the store). Gated behind SPARK_GRAFT_DELTA=1 exactly
-    * like the s3a conf: this container ships no delta-spark jars, so the
-    * configs would name absent classes; where a classpath provides them,
-    * the same session factory turns the DeltaSnapshotStore binding live
-    * (DeltaContractSpec certifies it under the gate). */
-  private def withDeltaConf(b: SparkSession.Builder): SparkSession.Builder =
-    if (!sys.env.get("SPARK_GRAFT_DELTA").contains("1")) b
-    else b
-      .config("spark.sql.extensions",
-        "io.delta.sql.DeltaSparkSessionExtension")
-      .config("spark.sql.catalog.spark_catalog",
-        "org.apache.spark.sql.delta.catalog.DeltaCatalog")
-
   def session(appName: String = "graft"): SparkSession = {
-    val spark = withClusterConf(withDeltaConf(withObjectStoreConf(SparkSession
+    val spark = withClusterConf(withObjectStoreConf(SparkSession
       .builder()
       .master(master)
-      .appName(appName))))
+      .appName(appName)))
       // custom codegen expressions (cosine_sim) via the sanctioned
       // extension point — resolves in DataFrame expr() and spark.sql alike
       .withExtensions(graft.functions.VectorExtensions.apply)

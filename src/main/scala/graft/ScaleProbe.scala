@@ -10,9 +10,11 @@ import graft.plans.PlanMetrics
   * SURVEY-claimed complexity over a real decade of data — wall time and
   * OBS-2 shuffle bytes (PlanMetrics), the unit Spark prices.
   *
-  * Method: per query per SF, median-of-3 wall times (Bench's discipline,
-  * incl. per-run BlockHygiene) plus one instrumented run for executed-plan
-  * shuffleBytesWritten. Shuffle bytes are the scale-stable signal — they
+  * Method: per query per SF, three runs (per-run BlockHygiene), each one
+  * [[PlanMetrics.measureShuffleBytes]] call that executes the query's own
+  * plan — final sorts and projections included, unlike `count()` — and
+  * reads its shuffleBytesWritten. Reported: the median run's wall time
+  * and shuffle bytes. Shuffle bytes are the scale-stable signal — they
   * don't move with JIT/GC/host noise, so the growth column is trustworthy
   * even when wall time wobbles.
   *
@@ -50,16 +52,14 @@ object ScaleProbe {
 
     def run(name: String, dir: String): (Double, Long) = {
       val fn = SparkEntry.queries(name)
-      def once(): Double = {
+      def once(): (Double, Long) = {
         val t0 = System.nanoTime()
-        try { fn(spark, dir).count(); (System.nanoTime() - t0) / 1e9 }
-        finally BlockHygiene.dropUnpinned(spark)
+        try {
+          val bytes = PlanMetrics.measureShuffleBytes(fn(spark, dir))
+          ((System.nanoTime() - t0) / 1e9, bytes)
+        } finally BlockHygiene.dropUnpinned(spark)
       }
-      val runs = Seq(once(), once(), once())
-      val bytes =
-        try PlanMetrics.measureShuffleBytes(fn(spark, dir))
-        finally BlockHygiene.dropUnpinned(spark)
-      (runs.sorted.apply(1), bytes)
+      Seq(once(), once(), once()).sortBy(_._1).apply(1)
     }
 
     val rows = names.map { n =>

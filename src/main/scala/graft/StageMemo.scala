@@ -18,8 +18,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `localCheckpoint` and pins it ([[BlockHygiene]]) so Bench/Verify's
   * between-query block drop doesn't evict it. [[value]] memoizes an
   * arbitrary build artifact (e.g. the path of a written index store).
-  * Entries evict when the owning SparkContext ends, so short-lived test
-  * sessions don't accumulate.
+  * Entries and their build-ledger lines evict ([[evict]]) when the owning
+  * SparkContext ends, so short-lived sessions stay unreachable once
+  * stopped.
   *
   * Builds run OUTSIDE the map update: stages nest (importedState builds on
   * patchedLog; the llm28d store build reads the memoized codebook), so a
@@ -59,11 +60,17 @@ object StageMemo {
       s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
             e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          cache.keys.filter(_._1 eq s).foreach(cache.remove)
+          evict(s)
           evictionHooked.remove(s): Unit
         }
       })
     }
+
+  /** Forget every memo entry and build-ledger line of `s`. */
+  private[graft] def evict(s: SparkSession): Unit = {
+    cache.keys.filter(_._1 eq s).foreach(cache.remove)
+    buildLog.keys.filter(_._1 eq s).foreach(buildLog.remove)
+  }
 
   /** The stage frame for (session, key): built, localCheckpointed, and
     * pinned on first use; returned from the memo afterwards.

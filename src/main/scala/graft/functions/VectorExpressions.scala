@@ -286,8 +286,14 @@ case class Shingles3(child: Expression)
   * buffer only across multi-space gaps. */
 case class WordNGrams(child: Expression, n: Int, dropEmpty: Boolean)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+    with org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   require(n >= 1, s"word_ngrams n must be >= 1, got $n")
+
+  override def prettyName: String = "word_ngrams"
+
+  // AbstractDataType is sql-private: let the override's type be inferred
+  override def inputTypes = Seq(org.apache.spark.sql.types.StringType)
 
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.StringType)
@@ -629,13 +635,19 @@ object VectorExtensions {
       new FunctionIdentifier("word_ngrams"),
       new ExpressionInfo(classOf[WordNGrams].getName, "word_ngrams"),
       (children: Seq[Expression]) => {
-        def lit(e: Expression): Any = e match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v, _) => v
+        require(children.length == 3, "word_ngrams takes 3 arguments " +
+          s"(text, n, drop_empty), got ${children.length}")
+        def lit(e: Expression, arg: String): String = e match {
+          case org.apache.spark.sql.catalyst.expressions.Literal(null, _) =>
+            throw new IllegalArgumentException(
+              s"word_ngrams $arg must not be NULL")
+          case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
+            v.toString
           case other => throw new IllegalArgumentException(
-            s"word_ngrams n/drop_empty must be literals, got $other")
+            s"word_ngrams $arg must be a literal, got $other")
         }
-        WordNGrams(children(0), lit(children(1)).toString.toInt,
-          lit(children(2)).toString.toBoolean)
+        WordNGrams(children(0), lit(children(1), "n").toInt,
+          lit(children(2), "drop_empty").toBoolean)
       }))
     ext.injectFunction((
       new FunctionIdentifier("rolling_hash64"),

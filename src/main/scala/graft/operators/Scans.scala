@@ -484,17 +484,13 @@ object Scans extends QueryModule {
     // flip to each version is one atomic marker create — no torn reads.
     "sink9_versioned" -> ((s, d) => {
       val root = s"$SinkDir/sink9_versioned"
-      // through the backend-agnostic trait (parquet binding here;
-      // the same program runs on Delta via spark.graft.store.backend)
-      val store = SnapshotStore.forConf(s)
-      store.destroy(root) // backend-aware (Delta needs its log cache dropped)
+      VersionedStore.destroy(root)
       val orders = Tables.orders(s, d)
-      // time-travel to the version the FIRST commit returned — version
-      // numbering is backend-dependent (parquet 1-based, Delta 0-based),
-      // so a hardcoded 1L would silently read the wrong snapshot on Delta
-      val v1 = store.commit(orders.filter(col("o_orderstatus") === "F"), root)
-      store.commit(orders.filter(col("o_orderstatus") === "O"), root)
-      store.read(s, root, version = v1)
+      val v1 = VersionedStore.commit(
+        orders.filter(col("o_orderstatus") === "F"), root)
+      VersionedStore.commit(
+        orders.filter(col("o_orderstatus") === "O"), root)
+      VersionedStore.read(s, root, version = v1)
         .groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
         .orderBy("o_orderpriority")
     }),
@@ -526,11 +522,10 @@ object Scans extends QueryModule {
     // (v1 stays time-travel readable; sink9 proves that isolation).
     "sink10_merge" -> ((s, d) => {
       val root = s"$SinkDir/sink10_merge"
-      val store = SnapshotStore.forConf(s)
-      store.destroy(root) // backend-aware (Delta needs its log cache dropped)
+      VersionedStore.destroy(root)
       val cust = Tables.customer(s, d)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
-      store.commit(cust, root)
+      VersionedStore.commit(cust, root)
       val changes =
         cust.filter(col("c_mktsegment") === "BUILDING")
           .withColumn("c_acctbal", col("c_acctbal") + 100)
@@ -543,8 +538,8 @@ object Scans extends QueryModule {
               col("s_acctbal").as("c_acctbal"),
               lit("SUPPLIER").as("c_mktsegment"))
             .withColumn("op", lit("upsert")))
-      store.merge(s, root, changes, Seq("c_custkey"))
-      store.read(s, root)
+      VersionedStore.merge(s, root, changes, Seq("c_custkey"))
+      VersionedStore.read(s, root)
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n"), Det.dsum(col("c_acctbal")).as("sum_bal"))
         .orderBy("c_mktsegment")

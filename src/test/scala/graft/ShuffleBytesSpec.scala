@@ -66,4 +66,14 @@ class ShuffleBytesSpec extends SparkSpec {
       s"hashed inventory must ship fewer total shuffle bytes: " +
         s"hashed=$hashBytes string=$strBytes")
   }
+
+  test("measureShuffleBytes runs the frame's own AQE plan to its final form") {
+    val df = Tables.orders(spark, Sf0001)
+      .groupBy("o_orderstatus").agg(count(lit(1)).as("n"))
+    def formatted = df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+    assert(formatted.contains("isFinalPlan=false"))
+    assert(PlanMetrics.measureShuffleBytes(df) > 0L)
+    assert(formatted.contains("isFinalPlan=true"))
+  }
 }

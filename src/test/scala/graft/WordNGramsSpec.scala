@@ -69,4 +69,27 @@ class WordNGramsSpec extends SparkSpec {
     assert(rows(4).getSeq[String](1).isEmpty)
     assert(rows(5).getSeq[String](1).isEmpty)
   }
+
+  test("word_ngrams misuse fails at analysis with a message naming it") {
+    val s = spark
+    import s.implicits._
+    val text = Seq("a b c").toDF("text")
+    // select() only analyzes: each refusal happens before any job runs
+    def refusal(df: => org.apache.spark.sql.DataFrame): String =
+      intercept[Exception](df).getMessage
+    val arity = refusal(text.select(
+      call_function("word_ngrams", col("text"), lit(2))))
+    val nullN = refusal(text.select(
+      call_function("word_ngrams", col("text"), lit(null), lit(true))))
+    val nullDrop = refusal(text.select(
+      call_function("word_ngrams", col("text"), lit(2), lit(null))))
+    val nonString = refusal(Seq(1).toDF("x").select(
+      call_function("word_ngrams", col("x"), lit(2), lit(true))))
+    Seq(arity, nullN, nullDrop, nonString).foreach(m =>
+      assert(m.contains("word_ngrams"), m))
+    assert(arity.contains("3 arguments"), arity)
+    assert(nullN.contains("n must not be NULL"), nullN)
+    assert(nullDrop.contains("drop_empty must not be NULL"), nullDrop)
+    assert(nonString.contains("STRING"), nonString)
+  }
 }
