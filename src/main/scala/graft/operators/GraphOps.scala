@@ -313,60 +313,58 @@ object GraphOps extends QueryModule {
     concat(when(v % 2 === 0, lit("c")).otherwise(lit("s")),
       floor(v / 2).cast("long"))
 
-  /** Co-purchase graph over parts: one undirected edge (x < y) per pair of
-    * parts that ever appear in the same order. Unlike [[purchaseEdges]]
-    * (bipartite — triangle-free by construction) this projection has real
-    * triangle structure, so it carries the triangle/clustering queries.
-    * Same derived-dataset memoization rationale as purchaseEdges; the
-    * per-order self-join fan-out is bounded by basket size² (the agg20
-    * pattern) and the edge set is ONE distinct shuffle on (x, y). */
-  private def partCoPurchaseEdges(s: SparkSession, d: String): DataFrame =
-    graft.StageMemo.frame(s, s"graph.part_edges.$d") {
-      // r22 (guide §2.4; the llm2b/agg20 posting-list pattern): ONE
-      // exchange groups each order's distinct part set (collect_set
-      // dedups in the aggregate) and the x<y pairs expand LOCALLY —
-      // replacing the former (order, part) distinct + basket self-join,
-      // which shuffled the same rows twice and whose hash-relation build
-      // was the memo's GC hot spot (BENCH_NOTES r20: the basket² edge
-      // self-join's allocations drove graph4's sf1 spread). Same edge
-      // set: per order, all x<y combinations of its distinct parts, then
-      // one global distinct.
+  /** Co-purchase adjacency over parts: one row (v, nbrs) per part that
+    * shares an order with at least one other part, `nbrs` the distinct
+    * parts it was ever bought with. Unlike [[purchaseEdges]] (bipartite —
+    * triangle-free by construction) this graph has real triangle
+    * structure, so it carries the triangle/clustering/core queries. It is
+    * the part-graph family's ONE co-purchase build: the edge list, the
+    * both-direction adjacency and the degree table below are narrow views
+    * of it. Two exchanges (the llm2b/agg20 posting-list pattern): each
+    * order's distinct part set (collect_set dedups in the aggregate), then
+    * its v ≠ u pairs, expanded locally (fan-out bounded by basket size²),
+    * grouped per vertex (collect_set dedups across orders). */
+  private def partNbrs(s: SparkSession, d: String): DataFrame =
+    graft.StageMemo.frame(s, s"graph.part_nbrs.$d") {
       Tables.lineitem(s, d)
         .groupBy(col("l_orderkey"))
         .agg(collect_set(col("l_partkey").cast("long")).as("ps"))
-        .select(explode(col("ps")).as("x"), col("ps"))
-        .select(col("x"), explode(col("ps")).as("y"))
-        .filter(col("x") < col("y"))
-        .select("x", "y")
-        .distinct()
+        .select(explode(col("ps")).as("v"), col("ps"))
+        .select(col("v"), explode(col("ps")).as("u"))
+        .filter(col("v") =!= col("u"))
+        .groupBy("v").agg(collect_set("u").as("nbrs"))
     }
+
+  /** Undirected edge list (x < y) of a (v, nbrs) adjacency. */
+  private def edgesOf(adj: DataFrame): DataFrame =
+    adj.select(col("v").as("x"), explode(col("nbrs")).as("y"))
+      .filter(col("x") < col("y"))
+
+  /** (v, nbrs) adjacency of an undirected (x < y) edge list. */
+  private def nbrLists(edges: DataFrame): DataFrame =
+    edges.select(col("x").as("v"), col("y").as("u"))
+      .unionByName(edges.select(col("y").as("v"), col("x").as("u")))
+      .groupBy("v").agg(collect_set("u").as("nbrs"))
+
+  /** Part co-purchase edges, one per pair of parts that ever appear in
+    * the same order (x < y). */
+  private def partCoPurchaseEdges(s: SparkSession, d: String): DataFrame =
+    edgesOf(partNbrs(s, d))
 
   /** Per-vertex degree of an undirected (x < y) edge list. */
   private def degrees(edges: DataFrame): DataFrame =
     edges.select(col("x").as("v")).unionByName(edges.select(col("y").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))
 
-  /** Both-direction adjacency of the part co-purchase graph — the shared
-    * neighbor list graph5's label rounds and graph6's wedge probes both
-    * scan. Same derived-dataset memoization as [[partCoPurchaseEdges]]:
-    * built once per (session, sf-dir), read from memory afterwards. */
+  /** Both-direction adjacency (v, u) of the part co-purchase graph — the
+    * neighbor list graph5's label rounds and graph6's wedge probes scan. */
   private def partAdj(s: SparkSession, d: String): DataFrame =
-    // r22: plain StageMemo.frame again — r21's partitionedFrame(Seq("v"))
-    // layout showed NO exchange reduction in its own dumped plans (8 → 8)
-    // while its count-run went 0.21 s → 7.20 s and graph6 entered the
-    // bench slowest-5 (VERDICT r21 #1/ADVICE). The fixed-N layout claim
-    // is withdrawn; consumers keep their AQE-managed exchanges.
-    graft.StageMemo.frame(s, s"graph.part_adj.$d") {
-      val e = partCoPurchaseEdges(s, d)
-      e.select(col("x").as("v"), col("y").as("u"))
-        .unionByName(e.select(col("y").as("v"), col("x").as("u")))
-    }
+    partNbrs(s, d).select(col("v"), explode(col("nbrs")).as("u"))
 
-  /** Part co-purchase degree table (tiny — one row per part), shared by
-    * the census, clustering, and link-prediction queries. */
+  /** Part co-purchase degree table (one row per part), shared by the
+    * census, clustering, and link-prediction queries. */
   private def partDeg(s: SparkSession, d: String): DataFrame =
-    graft.StageMemo.frame(s, s"graph.part_deg.$d")(
-      partAdj(s, d).groupBy("v").agg(count(lit(1)).as("deg")))
+    partNbrs(s, d).select(col("v"), size(col("nbrs")).cast("long").as("deg"))
 
   /** Enumerated triangle rows of the part co-purchase graph. The wedge
     * join is the most expensive stage in the whole graph family and BOTH
@@ -374,7 +372,7 @@ object GraphOps extends QueryModule {
     * (graph3b) consume the identical row set — at scale this is exactly
     * the derived dataset a pipeline persists once (the reference's
     * pipeline-step artifacts, runcommand.py:389-409), so it is memoized
-    * per (session, sf-dir) like the edge tables. */
+    * per (session, sf-dir) like the adjacency. */
   private def partTriangles(s: SparkSession, d: String): DataFrame =
     graft.StageMemo.frame(s, s"graph.part_tri.$d")(
       triangleRows(partCoPurchaseEdges(s, d)))
@@ -452,28 +450,70 @@ object GraphOps extends QueryModule {
     * is well-defined at any bound, and once a round drops nothing it IS
     * the true k-core — at both gate SFs k=80 converges in 5 rounds, so
     * the 6-round bound returns the exact core and the unrolled SQL oracle
-    * hash-matches). Per round: ONE degree aggregate over the surviving
-    * edges + two anti-joins against the dropped-vertex set (broadcast —
-    * the drop set is ≤ vertices, dimension-sized under the pagerank cap),
-    * rounds cut eagerly via [[RoundCheckpointer]]. The peel is monotone
-    * (edges only shrink), so per-round cost falls as the core tightens;
-    * at 100 TB each round is a map-side-combined agg + broadcast anti-join
-    * over an edge table partitioned by x — no vertex ever sees more than
-    * its own adjacency. */
+    * hash-matches). Takes distinct undirected edges (x < y); returns the
+    * core's edges.
+    *
+    * The vertex count, measured on the per-vertex adjacency, selects
+    * one of two plans against `broadcastCap`:
+    *  - at or under the cap, the vertex-centric peel ([[peelNbrs]]): the
+    *    edges are grouped once into neighbor arrays, and each round is one
+    *    narrow job that collects the newly dropped vertices into a
+    *    driver-held dead set. The set is ≤ the vertex count, so under the
+    *    cap it is dimension-sized, like pagerank's broadcast rank vector;
+    *  - above it, the edge-list peel ([[peelEdges]]): per round one degree
+    *    aggregate over the surviving edges and two anti-joins against the
+    *    dropped set (no broadcast hint), rounds cut by [[RoundCheckpointer]].
+    */
   def kcore(edges0: DataFrame, k: Int, maxRounds: Int = 6,
             broadcastCap: Long = PagerankBroadcastVertexCap): DataFrame = {
+    val adj = nbrLists(edges0)
+    if (rowCount(adj) <= broadcastCap)
+      edgesOf(peelNbrs(adj.localCheckpoint(), k, maxRounds))
+    else peelEdges(edges0, k, maxRounds)
+  }
+
+  /** Row count in ONE job: `Dataset.count()` plans a global aggregate,
+    * which AQE runs as two (its shuffle stage, then the result). */
+  private def rowCount(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
+  /** `adj` without the `dead` vertices: their rows go, and every other
+    * row keeps only its live neighbors. OptimizeIn turns each list into
+    * an InSet hash probe, shipped once per task; a per-row `array_except`
+    * against the dead-set literal would rebuild its hash set, O(|dead|),
+    * on every row. */
+  private def live(adj: DataFrame, dead: Seq[Long]): DataFrame =
+    adj.filter(!col("v").isin(dead: _*))
+      .select(col("v"), filter(col("nbrs"), u => !u.isin(dead: _*)).as("nbrs"))
+
+  /** Vertex-centric synchronous peel of a (v, nbrs) adjacency. In a
+    * synchronous peel the only state a round needs is the set of vertices
+    * dropped so far, so the driver holds it: a round collects the live
+    * vertices whose live degree is in (0, k) and appends them; an empty
+    * collect is convergence. Every round's frame is built from `adj` plus
+    * the dead set, never from the previous round's, so plan depth stays
+    * constant without a checkpoint, and no round shuffles. Returns the
+    * core's (v, nbrs) rows, neighbors restricted to the core. */
+  private def peelNbrs(adj: DataFrame, k: Int, maxRounds: Int): DataFrame = {
+    var dead = Vector.empty[Long]
+    var i = 0
+    var converged = false
+    while (i < maxRounds && !converged) {
+      i += 1
+      val drop = live(adj, dead).filter(size(col("nbrs")).between(1, k - 1))
+        .select("v").collect().map(_.getLong(0))
+      if (drop.isEmpty) converged = true else dead ++= drop
+    }
+    live(adj, dead).filter(size(col("nbrs")) > 0)
+  }
+
+  /** Edge-list synchronous peel of an undirected (x < y) edge list: per
+    * round the dropped vertices (degree < k) are checkpointed once, both
+    * anti-joins read them, and they are released once the round's
+    * surviving edges are materialized. The peel is monotone (edges only
+    * shrink), so per-round cost falls as the core tightens. */
+  private def peelEdges(edges0: DataFrame, k: Int, maxRounds: Int)
+  : DataFrame = {
     val rc = new RoundCheckpointer
-    // one-time broadcast gate: the per-round drop set is ≤ the vertex count
-    val small = degrees(edges0).count() <= broadcastCap
-    // r22: the r20 shrinking-checkpoint loop, restored. The r21 "fast
-    // path" (one cumulative drop set + broadcast anti-joins over the
-    // ORIGINAL edge table every round) regressed the driver's bench 3.92
-    // → 9.81 s (VERDICT r21 #2): each round re-scanned the full edge set
-    // and re-shuffled the full filtered width into the degree aggregate,
-    // which costs more than the per-round |E| checkpoint it saved. The
-    // shrinking working set is the right §5 posture — per-round cost
-    // falls as the core tightens.
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     var edges = edges0
     var i = 0
     var converged = false
@@ -484,13 +524,11 @@ object GraphOps extends QueryModule {
       val drop = degrees(edges).filter(col("deg") < k).select("v")
         .localCheckpoint()
       if (drop.isEmpty) converged = true
-      else {
-        val next = edges
-          .join(bc(drop.withColumnRenamed("v", "x")), Seq("x"), "left_anti")
-          .join(bc(drop.withColumnRenamed("v", "y")), Seq("y"), "left_anti")
-          .select("x", "y")
-        edges = rc.step(next)
-      }
+      else edges = rc.step(edges
+        .join(drop.withColumnRenamed("v", "x"), Seq("x"), "left_anti")
+        .join(drop.withColumnRenamed("v", "y"), Seq("y"), "left_anti")
+        .select("x", "y"))
+      RoundCheckpointer.release(drop)
     }
     edges
   }
@@ -512,8 +550,9 @@ object GraphOps extends QueryModule {
                        prebuiltAdj: Option[DataFrame] = None)
   : DataFrame = {
     val rc = new RoundCheckpointer
-    // prebuiltAdj: an already-materialized (v, u) both-direction neighbor
-    // list (the partAdj memo) — skips rebuilding the per-call checkpoint
+    // prebuiltAdj: a (v, u) both-direction neighbor list read from memory
+    // (the partAdj view of the partNbrs memo) — skips the per-call
+    // checkpoint
     val nb = prebuiltAdj.getOrElse(
       edges.select(col("x").as("v"), col("y").as("u"))
         .unionByName(edges.select(col("y").as("v"), col("x").as("u")))
@@ -637,13 +676,6 @@ object GraphOps extends QueryModule {
         .limit(20)
     }),
 
-    // GRAPH-4: k-core census of the part co-purchase graph — the dense
-    // backbone left after iteratively peeling vertices of degree < 80
-    // (community cores, spam-farm detection, graph sparsification). One
-    // summary row: core size in vertices/edges + the minimum in-core
-    // degree (≥ k iff the peel converged — it does at both gate SFs,
-    // round 6 is a no-op). Integer end-to-end; the oracle unrolls the
-    // same 6 synchronous rounds as plain SQL.
     // GRAPH-5: community inventory after 4 synchronous LPA rounds on the
     // part co-purchase graph — top-10 communities by size plus the total
     // community count. Top-10 is TakeOrdered over the O(communities)
@@ -659,14 +691,25 @@ object GraphOps extends QueryModule {
         .limit(10)
     }),
 
+    // GRAPH-4: k-core census of the part co-purchase graph — the dense
+    // backbone left after iteratively peeling vertices of degree < 80
+    // (community cores, spam-farm detection, graph sparsification). One
+    // summary row: core size in vertices/edges + the minimum in-core
+    // degree (≥ k iff the peel converged — it does at both gate SFs,
+    // round 6 is a no-op). Integer end-to-end; the oracle unrolls the
+    // same 6 synchronous rounds as plain SQL.
+    // Under the vertex cap the peel runs on the adjacency memo itself
+    // (see kcore); above it, the edge-list peel over its edges.
     "graph4_kcore" -> ((s, d) => {
-      // kcore's rounds are checkpointed; `core` is already materialized
-      val core = kcore(partCoPurchaseEdges(s, d), k = 80)
-      val fin = degrees(core)
-      fin.agg(
+      val adj = partNbrs(s, d)
+      val core = if (rowCount(adj) <= PagerankBroadcastVertexCap)
+        peelNbrs(adj, k = 80, maxRounds = 6)
+          .select(col("v"), size(col("nbrs")).as("deg"))
+      else degrees(peelEdges(edgesOf(adj), k = 80, maxRounds = 6))
+      core.agg(
           count(lit(1)).as("n_core_vertices"),
-          coalesce(min("deg"), lit(0L)).as("min_core_deg"))
-        .crossJoin(core.agg(count(lit(1)).as("n_core_edges")))
+          coalesce(expr("sum(deg) DIV 2"), lit(0L)).as("n_core_edges"),
+          coalesce(min("deg").cast("long"), lit(0L)).as("min_core_deg"))
         .select(lit(80L).as("k"), col("n_core_vertices"),
           col("n_core_edges"), col("min_core_deg"))
     }),
@@ -688,8 +731,8 @@ object GraphOps extends QueryModule {
     // a, b) is TakeOrdered over the O(|F|·V) candidate rollup.
     "graph6_link_prediction" -> ((s, d) => {
       // adj (anchor side + wedge side + anti) and deg (anchor selection +
-      // two score joins) come from the shared memos — each a single set of
-      // in-memory blocks across the whole graph family
+      // two score joins) are narrow views of the shared adjacency memo —
+      // one set of in-memory blocks across the whole graph family
       val adj = partAdj(s, d)
       val deg = partDeg(s, d)
       val focus = deg.orderBy(col("deg").desc, col("v")).limit(100)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.GraphOps
@@ -319,5 +320,57 @@ class GraphSpec extends SparkSpec {
     assert(r.head.getLong(0) == 80L)
     val (nv, ne, md) = (r.head.getLong(1), r.head.getLong(2), r.head.getLong(3))
     assert(ne >= 0 && nv >= 0 && (nv == 0 || md >= 0), r.head.toString)
+  }
+
+  test("kcore: the above-cap edge-list peel leaves only the returned core " +
+      "resident") {
+    val s = spark
+    import s.implicits._
+    // the cascade graph: two peeling rounds, then a converged round
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L))
+      .toDF("x", "y")
+    val sc = spark.sparkContext
+    val before = sc.getRDDStorageInfo.map(_.id).toSet
+    val core = GraphOps.kcore(edges, k = 2, broadcastCap = 0)
+    core.collect()
+    val added = sc.getRDDStorageInfo.filterNot(i => before(i.id))
+    try assert(added.length == 1,
+      s"every round's drop set must be released: ${added.mkString("; ")}")
+    finally RoundCheckpointer.release(core)
+  }
+
+  test("kcore: the vertex-centric peel matches the edge-list peel on the " +
+      "sf0.001 co-purchase graph, with no exchange under the cap") {
+    // the part co-purchase edges (x < y), one per pair sharing an order
+    val edges = Tables.lineitem(spark, Sf0001)
+      .groupBy(col("l_orderkey"))
+      .agg(collect_set(col("l_partkey").cast("long")).as("ps"))
+      .select(explode(col("ps")).as("x"), col("ps"))
+      .select(col("x"), explode(col("ps")).as("y"))
+      .filter(col("x") < col("y"))
+      .distinct()
+    // (vertices, edges, min degree) of a core's edge list
+    def summary(core: DataFrame): (Long, Long, Long) = {
+      val r = core.select(col("x").as("v"))
+        .unionByName(core.select(col("y").as("v")))
+        .groupBy("v").agg(count(lit(1)).as("deg"))
+        .agg(count(lit(1)), coalesce(sum("deg"), lit(0L)),
+          coalesce(min("deg"), lit(0L)))
+        .head()
+      (r.getLong(0), r.getLong(1) / 2, r.getLong(2))
+    }
+    // k = 68 peels 12, 5, 5, 1 and 1 parts in five rounds (counted by a
+    // plain-Python peel of the DuckDB edge set); round 6 drops nothing
+    val core = GraphOps.kcore(edges, k = 68)
+    core.collect()
+    val p = core.queryExecution.executedPlan.toString
+    assert(!p.contains("Exchange"), s"under the cap no round shuffles:\n$p")
+    assert(p.contains("INSET"), s"the dead set must probe as a hash set:\n$p")
+    val got = summary(core)
+    assert(got === ((176L, 7398L, 68L)))
+    assert(summary(GraphOps.kcore(edges, k = 68, broadcastCap = 0)) === got,
+      "the edge-list peel must find the same core")
+    assert(summary(GraphOps.kcore(edges, k = 68, maxRounds = 1)) !== got,
+      "the core must take more than one peeling round")
   }
 }
