@@ -8,8 +8,12 @@ import org.apache.spark.sql.functions._
   * Design notes (100 TB posture):
   *  - UTC session timezone everywhere (oracle parity, SURVEY.md §2 protocol).
   *  - AQE on: runtime coalescing of shuffle partitions, skew-join splitting.
-  *  - shuffle.partitions sized for local[32]; on a real cluster this is
-  *    overridden by conf / AQE target size, not hardcoded logic.
+  *  - shuffle.partitions is set to `cpus` (the host's core count or
+  *    SPARK_GRAFT_CPUS), as is the local master's default parallelism; on
+  *    a real cluster this is overridden by conf / AQE target size, not
+  *    hardcoded logic. Both counts therefore follow the host: a spec that
+  *    measures per-reducer or per-mapper quantities must pin
+  *    shuffle.partitions and its inputs' partition counts itself.
   *  - No `inferSchema` anywhere: parquet is self-describing, text sources get
   *    explicit StructTypes (SURVEY.md §1.3).
   *  - This is the ONLY session factory — Verify, Bench, and tests all call

@@ -23,6 +23,12 @@ class JoinAdvisorSpec extends SparkSpec {
   private def uniform(n: Long, keys: Long) =
     spark.range(n).select((col("id") % keys).as("k"))
 
+  // The advice→evidence tests measure shuffles and per-reducer loads, so
+  // they pin what Graft.session sizes from the host's core count: the
+  // mapper count (range slices) and the reducer count (shuffle.partitions).
+  private val Slices = 8
+  private val Reducers = 32
+
   test("small dim broadcasts — and the smaller side wins each way") {
     val big = uniform(10000, 1000)
     val dim = uniform(50, 50)
@@ -107,12 +113,16 @@ class JoinAdvisorSpec extends SparkSpec {
 
   test("advice→evidence: the broadcast verdict MEASURABLY ships fewer " +
       "shuffle bytes than the naive shuffle it rejected") {
-    val big = uniform(200000, 1000)
-    val dim = uniform(50, 50)
+    // fixed slice counts: a one-slice range is already SinglePartition,
+    // which satisfies the join's distribution, so no exchange would run
+    val big = spark.range(0, 200000, 1, Slices)
+      .select((col("id") % 1000).as("k"))
+    val dim = spark.range(0, 50, 1, Slices).select((col("id") % 50).as("k"))
     assert(strategyOf(JoinAdvisor.advise("bq", big, col("k"),
       dim, col("k"), T)) === "broadcast_right")
     withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-        "spark.sql.adaptive.enabled" -> "false") {
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> Reducers.toString) {
       val naive = graft.plans.PlanMetrics.measureShuffleBytes(
         big.join(dim.hint("shuffle_hash"), "k")
           .groupBy("k").agg(count(lit(1)).as("n")))
@@ -129,17 +139,18 @@ class JoinAdvisorSpec extends SparkSpec {
   test("advice→evidence: the salt verdict MEASURABLY flattens the hot " +
       "key — max reducer load drops vs the naive shuffle join") {
     // join13's fixture shape: 50% of fact rows on key 0
-    val fact = spark.range(40000)
+    val fact = spark.range(0, 40000, 1, Slices)
       .select(when(col("id") % 2 === 0, lit(0L))
         .otherwise(col("id") % 99 + 1).as("k"), col("id").as("v"))
-    val dim = spark.range(5000).select((col("id") % 100).as("k"),
-      col("id").as("w"))
+    val dim = spark.range(0, 5000, 1, Slices)
+      .select((col("id") % 100).as("k"), col("id").as("w"))
     assert(strategyOf(JoinAdvisor.advise("sq", fact, col("k"),
       dim, col("k"), T)) === "salt")
     def maxTaskRows(df: org.apache.spark.sql.DataFrame): Long =
       df.rdd.mapPartitions(it => Iterator(it.size.toLong)).collect().max
     withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-        "spark.sql.adaptive.enabled" -> "false") {
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> Reducers.toString) {
       val S = 8
       val naive = fact.join(dim, "k")
       val salted = fact
@@ -147,9 +158,14 @@ class JoinAdvisorSpec extends SparkSpec {
         .join(dim.withColumn("salt",
             explode(sequence(lit(0L), lit(S - 1L)))),
           Seq("k", "salt"))
+      // the loads below are per reducer: measure them over the pinned
+      // count, not over however many cores the session was sized for
+      assert(naive.rdd.getNumPartitions === Reducers)
+      assert(salted.rdd.getNumPartitions === Reducers)
       assert(salted.count() === naive.count(),
         "salting must not change the join result size")
       val (nMax, sMax) = (maxTaskRows(naive), maxTaskRows(salted))
+      info(s"naive max=$nMax salted max=$sMax over $Reducers reducers")
       assert(sMax.toDouble <= nMax.toDouble / 2,
         s"salting must split the hot key's reducer load ≥2×: " +
           s"naive max=$nMax salted max=$sMax")
