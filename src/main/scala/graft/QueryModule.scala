@@ -47,14 +47,8 @@ object Det {
   def revenue(price: Column, disc: Column): Column =
     sum(price.cast("decimal(18,2)") * (lit(1).cast("decimal(3,2)") - disc.cast("decimal(3,2)")))
       .cast("double")
-  def revenueSql(price: String, disc: String): String =
-    s"CAST(SUM(CAST($price AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST($disc AS DECIMAL(3,2)))) AS DOUBLE)"
-
-  /** Timestamp (µs-long) of an event `ts` nanos column — see Tables.events. */
-  def usOf(tsNanos: Column): Column = expr(s"ts div 1000")
 
   /** yyyy-MM-dd string of a timestamp column (string output = no
     * timestamp-encoding ambiguity between parquet writers). */
   def dstr(c: Column): Column = date_format(c, "yyyy-MM-dd")
-  def dstrSql(e: String): String = s"strftime($e, '%Y-%m-%d')"
 }

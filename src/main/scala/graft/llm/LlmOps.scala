@@ -668,6 +668,47 @@ object LlmOps extends QueryModule {
       .write.mode("overwrite").partitionBy("cell").parquet(s"$store/codes")
   }
 
+  /** Pinned schema of the persisted codes table. The table is
+    * partitionBy("cell"), so a store built from an empty index has no
+    * parquet footer to infer from (EmptyAudit), and a production serve path
+    * pins its index schema anyway. PqSpec's parity tests certify it. */
+  private val PqCodesSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("sub", IntegerType),
+    StructField("code", IntegerType), StructField("cell", LongType)))
+
+  /** The (sub, code, pdist) ADC lookup table of query `q`: its m=8
+    * subvectors' squared L2 to every codebook centroid (llm28b/llm28c). */
+  private def pqLut(codebook: DataFrame, q: DataFrame): DataFrame = {
+    val qsub = pqSubvectors(q, 8, 8)
+      .select(col("sub"), col("subvec").as("qsub"))
+    codebook.join(qsub, "sub")
+      .select(col("sub"), col("cent_id").as("code"),
+        l2sq(col("qsub"), col("cent")).as("pdist"))
+  }
+
+  /** ADC shortlist: long-form codes join the broadcast LUT on `keys`, the
+    * per-vector partials sum as decimal(28,12) (engine-exact), and the n
+    * smallest (adc, vec_id) survive as a vec_id list. */
+  private def adcShortlist(codes: DataFrame, lut: DataFrame,
+                           keys: Seq[String], n: Int): DataFrame =
+    codes.join(broadcast(lut), keys)
+      .groupBy("vec_id")
+      .agg(sum(col("pdist").cast("decimal(28,12)")).as("adc"))
+      .orderBy(col("adc"), col("vec_id"))
+      .limit(n)
+      .select("vec_id")
+
+  /** Exact-L2 re-rank of a shortlist against the single query `q`:
+    * (vec_id, l2_dist) top-20, distances rounded to 6 dp. */
+  private def l2Rerank(corpus: DataFrame, shortlist: DataFrame,
+                       q: DataFrame): DataFrame =
+    corpus.join(broadcast(shortlist), "vec_id")
+      .crossJoin(broadcast(q.select(col("embedding").as("q_emb"))))
+      .select(col("vec_id"),
+        round(l2sq(col("embedding"), col("q_emb")), 6).as("l2_dist"))
+      .orderBy(col("l2_dist"), col("vec_id"))
+      .limit(20)
+
   /** Probe of a persisted [[ivfpqBuild]] index: the query's nprobe nearest
     * cells are collected as LITERAL driver scalars (nprobe values — the
     * bounded IVF-centroid pattern), so the codes read carries a static
@@ -721,34 +762,16 @@ object LlmOps extends QueryModule {
           .join(cb, "sub")
           .select(col("sub"), col("cent_id").as("code"),
             l2sq(col("qsub"), col("cent")).as("pdist"))
-    // explicit schema: the codes table is partitionBy("cell") — a store
-    // built from an empty index has no parquet footer to infer from
-    // (EmptyAudit), and a production serve path pins its index schema
-    // anyway. PqSpec's parity tests certify the pinned shape.
-    val codesSchema = StructType(Seq(
-      StructField("vec_id", LongType), StructField("sub", IntegerType),
-      StructField("code", IntegerType), StructField("cell", LongType)))
     // codes0: serve a codes table maintained OUTSIDE this store layout —
     // the STRM-22 streaming-ingested VersionedStore snapshot; the isin
     // filter prunes its hive-partitioned version dir the same way
     val codes = codes0
       .map(_.select(col("vec_id").cast("long"), col("sub").cast("int"),
         col("code").cast("int"), col("cell").cast("long")))
-      .getOrElse(s.read.schema(codesSchema).parquet(s"$store/codes"))
+      .getOrElse(s.read.schema(PqCodesSchema).parquet(s"$store/codes"))
       .filter(col("cell").isin(probeCells.map(Long.box): _*))
     val joinKeys = if (residual) Seq("cell", "sub", "code") else Seq("sub", "code")
-    val shortlist = codes.join(broadcast(lut), joinKeys)
-      .groupBy("vec_id")
-      .agg(sum(col("pdist").cast("decimal(28,12)")).as("adc"))
-      .orderBy(col("adc"), col("vec_id"))
-      .limit(shortlistN)
-      .select("vec_id")
-    corpus.join(broadcast(shortlist), "vec_id")
-      .crossJoin(broadcast(q.select(col("embedding").as("q_emb"))))
-      .select(col("vec_id"),
-        round(l2sq(col("embedding"), col("q_emb")), 6).as("l2_dist"))
-      .orderBy(col("l2_dist"), col("vec_id"))
-      .limit(20)
+    l2Rerank(corpus, adcShortlist(codes, lut, joinKeys, shortlistN), q)
   }
 
   /** BATCH probe of a persisted [[ivfpqBuild]] index — the serve-time shape
@@ -809,11 +832,8 @@ object LlmOps extends QueryModule {
       .join(cb, "sub")
       .select(col("q_id"), col("cell"), col("sub"),
         col("cent_id").as("code"), l2sq(col("qsub"), col("cent")).as("pdist"))
-    val codesSchema = StructType(Seq(
-      StructField("vec_id", LongType), StructField("sub", IntegerType),
-      StructField("code", IntegerType), StructField("cell", LongType)))
     // THE one scan: union-of-probed-cells literal partition filter
-    val codes = s.read.schema(codesSchema).parquet(s"$store/codes")
+    val codes = s.read.schema(PqCodesSchema).parquet(s"$store/codes")
       .filter(col("cell").isin(unionCells.map(Long.box): _*))
     val wAdc = Window.partitionBy("q_id").orderBy(col("adc"), col("vec_id"))
     val shortlist = codes.join(broadcast(lut), Seq("cell", "sub", "code"))
@@ -1106,6 +1126,145 @@ object LlmOps extends QueryModule {
     ("thai", "[\\u0E00-\\u0E7F]", "[\\x{0E00}-\\x{0E7F}]"),
     ("latin", "[A-Za-z]", "[A-Za-z]"))
 
+  // ---- shared query recipes ---------------------------------------------
+  // Twin queries (a base query and its unicode-tier or audit twin) call one
+  // recipe each; the twins differ only by input frame or the arguments.
+
+  /** Occurrences of `marker` in `text` via the replace-count trick (exactly
+    * SQL-expressible): the llm7 language-ID heuristic's counter. */
+  private def markerCount(text: Column, marker: String): Column =
+    ((length(text) - length(replace(text, lit(marker)))) / marker.length)
+      .cast("int")
+
+  /** llm7's language prediction: "en" iff the text holds " the ". */
+  private def predLang(text: Column): Column =
+    when(markerCount(text, " the ") > 0, "en").otherwise("unknown")
+
+  /** Order-sensitive rolling-hash fingerprint per doc (llm8, llm8u). */
+  private def fingerprints(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+        call_function("rolling_hash64", col("text")).as("fingerprint"))
+      .orderBy("doc_id")
+
+  /** PII redaction chain (llm10, llm10u): emails, then dotted IPv4s,
+    * then bare card-length digit runs. */
+  private def redactPii(text: Column): Column =
+    regexp_replace(
+      regexp_replace(
+        regexp_replace(text,
+          "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}", "<EMAIL>"),
+        "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b", "<IP>"),
+      "\\b\\d{13,19}\\b", "<CARD>")
+
+  /** URL canonicalization + dedup over a (doc_id, url) frame (llm23,
+    * llm23u): lower scheme+host, strip www., strip trailing slash, drop
+    * utm_* params, registered-domain suffix. */
+  private def urlCanonDedup(raw: DataFrame): DataFrame = {
+    val scheme = lower(regexp_extract(col("url"),
+      "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
+    val host = regexp_replace(
+      lower(regexp_extract(col("url"),
+        "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)", 1)),
+      "^www\\.", "")
+    val path0 = regexp_extract(col("url"),
+      "^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^?#]*)", 1)
+    val path = when(path0 === "", lit("/"))
+      .otherwise(regexp_replace(path0, "(.)/$", "$1"))
+    val q = regexp_extract(col("url"), "\\?([^#]*)", 1)
+    val keptQ = array_join(
+      filter(split(q, "&"),
+        x => !startswith(x, lit("utm_")) && x =!= lit("")), "&")
+    raw
+      .withColumn("registered_domain",
+        regexp_extract(host, "([^.]+\\.[^.]+)$", 1))
+      .withColumn("canonical_url", concat(scheme, lit("://"), host, path,
+        when(keptQ =!= "", concat(lit("?"), keptQ)).otherwise(lit(""))))
+      .groupBy("canonical_url", "registered_domain")
+      .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
+      .orderBy("canonical_url")
+  }
+
+  /** Boilerplate segment dedup (llm20, llm20u): `segLen`-token segments,
+    * dropped where seen in >= `dfCut` distinct docs. */
+  private def segmentDedup(docs: DataFrame, segLen: Int,
+                           dfCut: Int): DataFrame = {
+    val segs = docs
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+      .select(col("doc_id"), col("toks"),
+        explode(sequence(lit(0), greatest(size(col("toks")) - 1, lit(0)),
+          lit(segLen))).as("st"))
+      .select(col("doc_id"), (col("st") / segLen).cast("long").as("seg_idx"),
+        array_join(slice(col("toks"), col("st") + 1, lit(segLen)), " ")
+          .as("seg"))
+      .withColumn("h", xxhash64(col("seg")))
+      // feeds BOTH the df aggregate and the reassembly join — without
+      // this the tokenize+explode chain runs twice (self-join recompute)
+      .localCheckpoint()
+    val df = segs.groupBy("h").agg(countDistinct("doc_id").as("df"))
+    segs.join(df, "h")
+      .groupBy("doc_id")
+      .agg(
+        array_join(transform(
+          array_sort(collect_list(when(col("df") < dfCut,
+            struct(col("seg_idx"), col("seg"))))),
+          x => x.getField("seg")), " ").as("text_clean"),
+        count(when(col("df") < dfCut, 1)).as("n_kept"),
+        count(when(col("df") >= dfCut, 1)).as("n_dropped"))
+      .orderBy("doc_id")
+  }
+
+  /** Laplace-smoothed bigram LM per doc (llm29, llm29u). */
+  private def bigramLm(src: DataFrame): DataFrame = {
+    val arr = filter(split(lower(col("text")), "[^a-z0-9]+"), t => t =!= "")
+    val docs = src.select(col("doc_id"), arr.as("arr")).localCheckpoint()
+    val bi = docs.filter(size(col("arr")) >= 2)
+      .select(col("doc_id"), explode(zip_with(
+        slice(col("arr"), lit(1), size(col("arr")) - 1),
+        slice(col("arr"), lit(2), size(col("arr")) - 1),
+        (x, y) => struct(x.as("w1"), y.as("w2")))).as("p"))
+      .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
+      .localCheckpoint()
+    val uni = bi.groupBy("w1").agg(count(lit(1)).as("cu"))
+    val bc = bi.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
+    val vocab = docs.select(explode(col("arr")).as("tok"))
+      .agg(countDistinct("tok").cast("double").as("vsize"))
+    bi.join(bc, Seq("w1", "w2")).join(uni, "w1").crossJoin(vocab)
+      .withColumn("lp",
+        log((col("cb") + lit(1.0)) / (col("cu") + col("vsize"))))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_bigrams"),
+        (round(sum(col("lp").cast("decimal(28,12)")).cast("double") /
+          count(lit(1)) * lit(1e6)) / lit(1e6)).as("bigram_logprob"))
+      .orderBy("doc_id")
+  }
+
+  /** Exact cosine re-rank of `cands` against the query vector (vec_id 0
+    * of `e`): (vec_id, cos_sim) top-20, cosines rounded to 6 dp. */
+  private def cosineTop20(cands: DataFrame, e: DataFrame): DataFrame =
+    cands.crossJoin(broadcast(e.filter(col("vec_id") === 0)
+        .select(col("embedding").as("q_emb"))))
+      .select(col("vec_id"),
+        round(cosine(col("embedding"), col("q_emb")), 6).as("cos_sim"))
+      .orderBy(col("cos_sim").desc, col("vec_id"))
+      .limit(20)
+
+  /** IVF cosine probe (llm3e, llm3eb): assign the corpus to its nearest
+    * cell of `cents` (ivfAssignCellsCos → the RULE-1 heap operator, one
+    * row per vec per map partition, no sort), rank the query's `nprobe`
+    * nearest cells by (sim DESC, cent_id), exact-cosine re-rank only the
+    * probed cells' members. */
+  private def ivfCosineProbe(e: DataFrame, cents: DataFrame,
+                             nprobe: Int): DataFrame = {
+    val corpus = ivfAssignCellsCos(e.filter(col("vec_id") =!= 0), cents)
+    val qCells = e.filter(col("vec_id") === 0)
+      .crossJoin(broadcast(cents))
+      .select(col("cent_id"),
+        cosine(col("embedding"), col("cent")).as("sim"))
+      .orderBy(col("sim").desc, col("cent_id")).limit(nprobe)
+      .select(col("cent_id").as("cell"))
+    cosineTop20(corpus.join(broadcast(qCells), "cell"), e)
+  }
+
   // ---- declared queries --------------------------------------------------
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1159,11 +1318,7 @@ object LlmOps extends QueryModule {
     // only on ASCII, so this row pins the byte-level contract on CJK,
     // emoji (4-byte sequences), combining marks and bidi controls — and
     // pins that the NFC/NFD fixture pair fingerprint DIFFERENTLY.
-    "llm8u_fingerprint_unicode" -> ((s, _) =>
-      unicodeDocs(s).select(
-          col("doc_id"),
-          call_function("rolling_hash64", col("text")).as("fingerprint"))
-        .orderBy("doc_id")),
+    "llm8u_fingerprint_unicode" -> ((s, _) => fingerprints(unicodeDocs(s))),
 
     // LLM-10u: PII redaction with the PII planted INSIDE RTL/CJK context
     // in the fixture itself — same three patterns as llm10; additionally
@@ -1171,46 +1326,15 @@ object LlmOps extends QueryModule {
     // card numbers in either engine) and that CJK↔digit transitions count
     // as word boundaries in both.
     "llm10u_redact_pii_unicode" -> ((s, _) =>
-      unicodeDocs(s).select(
-          col("doc_id"),
-          regexp_replace(
-            regexp_replace(
-              regexp_replace(col("text"),
-                "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}", "<EMAIL>"),
-              "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b", "<IP>"),
-            "\\b\\d{13,19}\\b", "<CARD>").as("clean_text"))
+      unicodeDocs(s)
+        .select(col("doc_id"), redactPii(col("text")).as("clean_text"))
         .orderBy("doc_id")),
 
     // LLM-23u: URL canonicalization on REAL messy-url inputs with unicode
     // hosts/paths (llm23 synthesizes ASCII urls from doc columns) — same
-    // canon pipeline: lower scheme+host, strip www., strip trailing slash,
-    // drop utm_* params, registered-domain suffix. lower() must agree on
-    // Cyrillic hosts (full-unicode case folding in both engines); the
-    // unicode path segment survives untouched.
-    "llm23u_url_canon_unicode" -> ((s, _) => {
-      val scheme = lower(regexp_extract(col("url"),
-        "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
-      val host = regexp_replace(
-        lower(regexp_extract(col("url"),
-          "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)", 1)),
-        "^www\\.", "")
-      val path0 = regexp_extract(col("url"),
-        "^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^?#]*)", 1)
-      val path = when(path0 === "", lit("/"))
-        .otherwise(regexp_replace(path0, "(.)/$", "$1"))
-      val q = regexp_extract(col("url"), "\\?([^#]*)", 1)
-      val keptQ = array_join(
-        filter(split(q, "&"),
-          x => !startswith(x, lit("utm_")) && x =!= lit("")), "&")
-      unicodeDocs(s)
-        .withColumn("registered_domain",
-          regexp_extract(host, "([^.]+\\.[^.]+)$", 1))
-        .withColumn("canonical_url", concat(scheme, lit("://"), host, path,
-          when(keptQ =!= "", concat(lit("?"), keptQ)).otherwise(lit(""))))
-        .groupBy("canonical_url", "registered_domain")
-        .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
-        .orderBy("canonical_url")
-    }),
+    // canon pipeline. lower() must agree on Cyrillic hosts (full-unicode
+    // case folding in both engines); the unicode path segment survives.
+    "llm23u_url_canon_unicode" -> ((s, _) => urlCanonDedup(unicodeDocs(s))),
 
     // LLM-20u: boilerplate segment-dedup over the unicode fixture (llm20's
     // recipe at fixture grain: 4-token segments, df >= 2 drops). The
@@ -1220,29 +1344,8 @@ object LlmOps extends QueryModule {
     // text_clean reassembles byte-exactly (CJK no-space docs ride through
     // as one token; ZWSP/bidi controls survive tokenize→hash→join→
     // string_agg in both engines), n_dropped = 0 everywhere.
-    "llm20u_boilerplate_unicode" -> ((s, _) => {
-      val segs = unicodeDocs(s)
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
-        .select(col("doc_id"), col("toks"),
-          explode(sequence(lit(0), greatest(size(col("toks")) - 1, lit(0)),
-            lit(4))).as("st"))
-        .select(col("doc_id"), (col("st") / 4).cast("long").as("seg_idx"),
-          array_join(slice(col("toks"), col("st") + 1, lit(4)), " ")
-            .as("seg"))
-        .withColumn("h", xxhash64(col("seg")))
-        .localCheckpoint() // feeds the df aggregate AND the reassembly join
-      val df = segs.groupBy("h").agg(countDistinct("doc_id").as("df"))
-      segs.join(df, "h")
-        .groupBy("doc_id")
-        .agg(
-          array_join(transform(
-            array_sort(collect_list(when(col("df") < 2,
-              struct(col("seg_idx"), col("seg"))))),
-            x => x.getField("seg")), " ").as("text_clean"),
-          count(when(col("df") < 2, 1)).as("n_kept"),
-          count(when(col("df") >= 2, 1)).as("n_dropped"))
-        .orderBy("doc_id")
-    }),
+    "llm20u_boilerplate_unicode" -> ((s, _) =>
+      segmentDedup(unicodeDocs(s), segLen = 4, dfCut = 2)),
 
     // LLM-24u: unigram-LM quality scoring on the fixture — pins the
     // tokenizer's unicode edges BOTH engines must agree on: lower() on
@@ -1272,30 +1375,7 @@ object LlmOps extends QueryModule {
     // mixed-script rows produce bigrams spanning a CJK-induced split),
     // decimal-summed per doc exactly like llm29 so the engines agree at
     // 6 dp.
-    "llm29u_bigram_lm_unicode" -> ((s, _) => {
-      val arr = filter(split(lower(col("text")), "[^a-z0-9]+"), t => t =!= "")
-      val docs = unicodeDocs(s)
-        .select(col("doc_id"), arr.as("arr")).localCheckpoint()
-      val bi = docs.filter(size(col("arr")) >= 2)
-        .select(col("doc_id"), explode(zip_with(
-          slice(col("arr"), lit(1), size(col("arr")) - 1),
-          slice(col("arr"), lit(2), size(col("arr")) - 1),
-          (x, y) => struct(x.as("w1"), y.as("w2")))).as("p"))
-        .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-        .localCheckpoint()
-      val uni = bi.groupBy("w1").agg(count(lit(1)).as("cu"))
-      val bc = bi.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
-      val vocab = docs.select(explode(col("arr")).as("tok"))
-        .agg(countDistinct("tok").cast("double").as("vsize"))
-      bi.join(bc, Seq("w1", "w2")).join(uni, "w1").crossJoin(vocab)
-        .withColumn("lp",
-          log((col("cb") + lit(1.0)) / (col("cu") + col("vsize"))))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_bigrams"),
-          (round(sum(col("lp").cast("decimal(28,12)")).cast("double") /
-            count(lit(1)) * lit(1e6)) / lit(1e6)).as("bigram_logprob"))
-        .orderBy("doc_id")
-    }),
+    "llm29u_bigram_lm_unicode" -> ((s, _) => bigramLm(unicodeDocs(s))),
 
     // LLM-34u: span excision on the fixture — llm34's bench/hit/excise
     // machinery at span length 1 with bench = docs {1, 13}. The pin is
@@ -1480,14 +1560,7 @@ object LlmOps extends QueryModule {
     // the exact baseline; see llm3b for the LSH-bucketed scale path.
     "llm3_cosine_topk" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("embedding").as("q_emb"))
-      e.filter(col("vec_id") =!= 0)
-        .crossJoin(broadcast(q))
-        .select(col("vec_id"),
-          round(cosine(col("embedding"), col("q_emb")), 6).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-        .limit(20)
+      cosineTop20(e.filter(col("vec_id") =!= 0), e)
     }),
 
     // LLM-3b ⚠: multi-table sign-LSH ANN — candidates = ids sharing any
@@ -1502,17 +1575,10 @@ object LlmOps extends QueryModule {
       val e = Tables.embeddings(s, d)
       val sig = s.read.parquet(memoPersistedLshIndex(s, d))
       val qIdx = sig.filter(col("vec_id") === 0).select("table", "bucket")
-      val qEmb = e.filter(col("vec_id") === 0)
-        .select(col("embedding").as("q_emb"))
       val candIds = sig.filter(col("vec_id") =!= 0)
         .join(broadcast(qIdx), Seq("table", "bucket"), "left_semi")
         .select("vec_id").distinct()
-      e.join(candIds, "vec_id")
-        .crossJoin(broadcast(qEmb))
-        .select(col("vec_id"),
-          round(cosine(col("embedding"), col("q_emb")), 6).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-        .limit(20)
+      cosineTop20(e.join(candIds, "vec_id"), e)
     }),
 
     // LLM-3d ⚠: bucketed pairwise LSH — the scale path for llm3c's
@@ -1571,25 +1637,10 @@ object LlmOps extends QueryModule {
       // corpus assignment (r19 re-plan): the OLD shared checkpoint kept
       // the rank column alive for a second cut, which blocked the RULE-1
       // heap rewrite and shipped all n·k candidate rows — embeddings
-      // included — through a window sort exchange. Splitting the corpus
-      // cut (ivfAssignCellsCos → heap operator: one row per vec per map
-      // partition, no sort) from the query's own nprobe ranking (one
-      // vector × √n cells — driver-scalar sized) removes both.
-      val corpus = ivfAssignCellsCos(e.filter(col("vec_id") =!= 0), cents)
-      val qCells = e.filter(col("vec_id") === 0)
-        .crossJoin(broadcast(cents))
-        .select(col("cent_id"),
-          cosine(col("embedding"), col("cent")).as("sim"))
-        .orderBy(col("sim").desc, col("cent_id")).limit(nprobe)
-        .select(col("cent_id").as("cell"))
-      val qEmb = e.filter(col("vec_id") === 0)
-        .select(col("embedding").as("q_emb"))
-      corpus.join(broadcast(qCells), "cell")
-        .crossJoin(broadcast(qEmb))
-        .select(col("vec_id"),
-          round(cosine(col("embedding"), col("q_emb")), 6).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-        .limit(20)
+      // included — through a window sort exchange. [[ivfCosineProbe]]
+      // splits the corpus cut from the query's own nprobe ranking (one
+      // vector × √n cells — driver-scalar sized), which removes both.
+      ivfCosineProbe(e, cents, nprobe)
     }),
 
     // LLM-3eb: the llm3e IVF probe with an EXACT DuckDB oracle (the
@@ -1602,26 +1653,8 @@ object LlmOps extends QueryModule {
     // decision after training is hash-checked.
     "llm3eb_ann_ivf_audit" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      val cents = s.read.parquet(memoPersistedCentroids(s, d))
-      // corpus assignment re-plan (r19, same as llm3e): the rn-keeping
-      // checkpoint shipped n·k embedding-carrying rows through a window
-      // sort — the sf1 probe measured it 16× per decade. ivfAssignCellsCos
-      // → RULE-1 heap operator, one row per vec per map partition, no sort.
-      val corpus = ivfAssignCellsCos(e.filter(col("vec_id") =!= 0), cents)
-      val qCells = e.filter(col("vec_id") === 0)
-        .crossJoin(broadcast(cents))
-        .select(col("cent_id"),
-          cosine(col("embedding"), col("cent")).as("sim"))
-        .orderBy(col("sim").desc, col("cent_id")).limit(8)
-        .select(col("cent_id").as("cell"))
-      val qEmb = e.filter(col("vec_id") === 0)
-        .select(col("embedding").as("q_emb"))
-      corpus.join(broadcast(qCells), "cell")
-        .crossJoin(broadcast(qEmb))
-        .select(col("vec_id"),
-          round(cosine(col("embedding"), col("q_emb")), 6).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-        .limit(20)
+      // llm3e's probe on the persisted centroids, nprobe fixed at 8
+      ivfCosineProbe(e, s.read.parquet(memoPersistedCentroids(s, d)), 8)
     }),
 
     // LLM-3f: BATCH retrieval — k nearest corpus vectors for EACH of a set
@@ -1743,11 +1776,7 @@ object LlmOps extends QueryModule {
     // exact DuckDB oracle since r12 — the byte-polynomial fold replays in
     // SQL as a HUGEINT mod-2⁶⁴ list_reduce over the ASCII byte values).
     // Exact-dedup on fingerprints == exact-dedup on byte sequences.
-    "llm8_fingerprint" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-          call_function("rolling_hash64", col("text")).as("fingerprint"))
-        .orderBy("doc_id")),
+    "llm8_fingerprint" -> ((s, d) => fingerprints(Tables.documents(s, d))),
 
     // LLM-9: END-TO-END corpus-prep pipeline — the composition a real
     // training-data build runs over raw documents: quality gate (llm6's
@@ -1768,12 +1797,9 @@ object LlmOps extends QueryModule {
         .groupBy(sha2(lower(trim(text)).cast("binary"), 256).as("h"))
         .agg(min(col("doc_id")).as("doc_id"))
         .select("doc_id")
-      def cnt(marker: String): Column =
-        ((length(text) - length(replace(text, lit(marker))))
-          / marker.length).cast("int")
       gated.join(keep, Seq("doc_id"), "left_semi")
         .select(
-          when(cnt(" the ") > 0, "en").otherwise("unknown").as("pred_lang"),
+          predLang(text).as("pred_lang"),
           nTokens.cast("long").as("n_tokens"),
           nChars.cast("long").as("n_chars"))
         .groupBy("pred_lang")
@@ -1796,15 +1822,8 @@ object LlmOps extends QueryModule {
         lit(" contact user"), col("doc_id"),
         lit("@example.com from 10.0."), pmod(col("doc_id"), lit(256)),
         lit(".7 card 4111111111111111"))
-      val redacted =
-        regexp_replace(
-          regexp_replace(
-            regexp_replace(withPii,
-              "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}", "<EMAIL>"),
-            "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b", "<IP>"),
-          "\\b\\d{13,19}\\b", "<CARD>")
       Tables.documents(s, d)
-        .select(col("doc_id"), redacted.as("clean_text"))
+        .select(col("doc_id"), redactPii(withPii).as("clean_text"))
         .orderBy("doc_id")
     }),
 
@@ -2018,14 +2037,11 @@ object LlmOps extends QueryModule {
     // and pure map-side at any scale (broadcast join + filter, no shuffle).
     "llm14_stratified_sample" -> ((s, d) => {
       import s.implicits._
-      def cnt(marker: String): Column =
-        ((length(col("text")) - length(replace(col("text"), lit(marker))))
-          / marker.length).cast("int")
       val rates = Seq(("en", 40L), ("unknown", 80L))
         .toDF("pred_lang", "keep_mod")
       Tables.documents(s, d)
         .select(col("doc_id"),
-          when(cnt(" the ") > 0, "en").otherwise("unknown").as("pred_lang"))
+          predLang(col("text")).as("pred_lang"))
         .join(broadcast(rates), "pred_lang")
         .filter(pmod(col("doc_id"), lit(97)) < col("keep_mod"))
         .select("doc_id", "pred_lang")
@@ -2139,14 +2155,10 @@ object LlmOps extends QueryModule {
     // surface). One rollup + broadcast dim join.
     "llm42_mix_budget" -> ((s, d) => {
       import s.implicits._
-      def cnt(marker: String): Column =
-        ((length(col("text")) - length(replace(col("text"), lit(marker))))
-          / marker.length).cast("int")
       val targets = Seq(("en", 70L), ("unknown", 30L))
         .toDF("pred_lang", "target_pct")
       Tables.documents(s, d)
-        .select(when(cnt(" the ") > 0, "en").otherwise("unknown")
-            .as("pred_lang"),
+        .select(predLang(col("text")).as("pred_lang"),
           size(split(col("text"), " ")).cast("long").as("n_tok"))
         .groupBy("pred_lang").agg(sum("n_tok").as("lang_tokens"))
         .join(broadcast(targets), "pred_lang")
@@ -2217,14 +2229,10 @@ object LlmOps extends QueryModule {
     // window).
     "llm19_mix_weights" -> ((s, d) => {
       import s.implicits._
-      def cnt(marker: String): Column =
-        ((length(col("text")) - length(replace(col("text"), lit(marker))))
-          / marker.length).cast("int")
       val targets = Seq(("en", 0.7), ("unknown", 0.3))
         .toDF("pred_lang", "target_share")
       val perLang = Tables.documents(s, d)
-        .select(when(cnt(" the ") > 0, "en").otherwise("unknown")
-            .as("pred_lang"),
+        .select(predLang(col("text")).as("pred_lang"),
           size(split(col("text"), " ")).cast("long").as("n_tok"))
         .groupBy("pred_lang").agg(sum("n_tok").as("lang_tokens"))
       val total = perLang.agg(sum("lang_tokens").as("total_tokens"))
@@ -2290,14 +2298,11 @@ object LlmOps extends QueryModule {
     // language-ID by marker-token counting (deterministic heuristic; the
     // replace-count trick keeps it exactly SQL-expressible)
     "llm7_langid" -> ((s, d) => {
-      def cnt(marker: String): Column =
-        ((length(col("text")) - length(replace(col("text"), lit(marker))))
-          / marker.length).cast("int")
       Tables.documents(s, d).select(
           col("doc_id"),
-          cnt(" the ").as("c_the"),
-          cnt(" data ").as("c_data"),
-          when(cnt(" the ") > 0, "en").otherwise("unknown").as("pred_lang"))
+          markerCount(col("text"), " the ").as("c_the"),
+          markerCount(col("text"), " data ").as("c_data"),
+          predLang(col("text")).as("pred_lang"))
         .orderBy("doc_id")
     }),
 
@@ -2311,30 +2316,8 @@ object LlmOps extends QueryModule {
     // text (~60 B avg, unbounded worst case) would otherwise; the
     // reassembly groups by doc_id (high cardinality), and collect_list
     // gathers only each doc's own kept segments.
-    "llm20_boilerplate" -> ((s, d) => {
-      val segs = Tables.documents(s, d)
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
-        .select(col("doc_id"), col("toks"),
-          explode(sequence(lit(0), greatest(size(col("toks")) - 1, lit(0)),
-            lit(10))).as("st"))
-        .select(col("doc_id"), (col("st") / 10).cast("long").as("seg_idx"),
-          array_join(slice(col("toks"), col("st") + 1, lit(10)), " ").as("seg"))
-        .withColumn("h", xxhash64(col("seg")))
-        // feeds BOTH the df aggregate and the reassembly join — without
-        // this the tokenize+explode chain runs twice (self-join recompute)
-        .localCheckpoint()
-      val df = segs.groupBy("h").agg(countDistinct("doc_id").as("df"))
-      segs.join(df, "h")
-        .groupBy("doc_id")
-        .agg(
-          array_join(transform(
-            array_sort(collect_list(when(col("df") < 3,
-              struct(col("seg_idx"), col("seg"))))),
-            x => x.getField("seg")), " ").as("text_clean"),
-          count(when(col("df") < 3, 1)).as("n_kept"),
-          count(when(col("df") >= 3, 1)).as("n_dropped"))
-        .orderBy("doc_id")
-    }),
+    "llm20_boilerplate" -> ((s, d) =>
+      segmentDedup(Tables.documents(s, d), segLen = 10, dfCut = 3)),
 
     // LLM-21: embedding-cosine near-dup — the SemDeDup keep-lowest-id rule:
     // a vector is dropped iff some LOWER-id vector sits within cosine >= τ
@@ -2728,28 +2711,7 @@ object LlmOps extends QueryModule {
           (col("doc_id") % 7).cast("string"),
           lit("/?utm_source=rss&ref=home&utm_id="),
           col("doc_id").cast("string"), lit("#sec")).as("url"))
-      val scheme = lower(regexp_extract(col("url"),
-        "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
-      val host = regexp_replace(
-        lower(regexp_extract(col("url"),
-          "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)", 1)),
-        "^www\\.", "")
-      val path0 = regexp_extract(col("url"),
-        "^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^?#]*)", 1)
-      val path = when(path0 === "", lit("/"))
-        .otherwise(regexp_replace(path0, "(.)/$", "$1"))
-      val q = regexp_extract(col("url"), "\\?([^#]*)", 1)
-      val keptQ = array_join(
-        filter(split(q, "&"),
-          x => !startswith(x, lit("utm_")) && x =!= lit("")), "&")
-      raw
-        .withColumn("registered_domain",
-          regexp_extract(host, "([^.]+\\.[^.]+)$", 1))
-        .withColumn("canonical_url", concat(scheme, lit("://"), host, path,
-          when(keptQ =!= "", concat(lit("?"), keptQ)).otherwise(lit(""))))
-        .groupBy("canonical_url", "registered_domain")
-        .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
-        .orderBy("canonical_url")
+      urlCanonDedup(raw)
     }),
 
     // LLM-24: unigram language-model quality score — the honest in-container
@@ -2875,30 +2837,7 @@ object LlmOps extends QueryModule {
     // row-local pairing, no position self-join; count tables join back on
     // (w1, w2) hashes of bounded strings, text never shuffles. Per-doc
     // mean rides the decimal-sum + multiply-round protocol.
-    "llm29_bigram_lm" -> ((s, d) => {
-      val arr = filter(split(lower(col("text")), "[^a-z0-9]+"), t => t =!= "")
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), arr.as("arr")).localCheckpoint()
-      val bi = docs.filter(size(col("arr")) >= 2)
-        .select(col("doc_id"), explode(zip_with(
-          slice(col("arr"), lit(1), size(col("arr")) - 1),
-          slice(col("arr"), lit(2), size(col("arr")) - 1),
-          (x, y) => struct(x.as("w1"), y.as("w2")))).as("p"))
-        .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-        .localCheckpoint()
-      val uni = bi.groupBy("w1").agg(count(lit(1)).as("cu"))
-      val bc = bi.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
-      val vocab = docs.select(explode(col("arr")).as("tok"))
-        .agg(countDistinct("tok").cast("double").as("vsize"))
-      bi.join(bc, Seq("w1", "w2")).join(uni, "w1").crossJoin(vocab)
-        .withColumn("lp",
-          log((col("cb") + lit(1.0)) / (col("cu") + col("vsize"))))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_bigrams"),
-          (round(sum(col("lp").cast("decimal(28,12)")).cast("double") /
-            count(lit(1)) * lit(1e6)) / lit(1e6)).as("bigram_logprob"))
-        .orderBy("doc_id")
-    }),
+    "llm29_bigram_lm" -> ((s, d) => bigramLm(Tables.documents(s, d))),
 
     // LLM-31 ⚠: source-overlap matrix via MERGEABLE MinHash — which corpus
     // sources share content? MinHash signatures merge like agg16's HLL
@@ -3296,24 +3235,9 @@ object LlmOps extends QueryModule {
       val codebook = s.read.parquet(memoPersistedCodebook(s, d, 8))
       val q = e.filter(col("vec_id") === 0)
       val corpus = e.filter(col("vec_id") =!= 0)
-      val qsub = pqSubvectors(q, 8, 8)
-        .select(col("sub"), col("subvec").as("qsub"))
-      val lut = codebook.join(qsub, "sub")
-        .select(col("sub"), col("cent_id").as("code"),
-          l2sq(col("qsub"), col("cent")).as("pdist"))
-      val shortlist = pqEncodeLong(corpus, codebook, m = 8)
-        .join(broadcast(lut), Seq("sub", "code"))
-        .groupBy("vec_id")
-        .agg(sum(col("pdist").cast("decimal(28,12)")).as("adc"))
-        .orderBy(col("adc"), col("vec_id"))
-        .limit(100)
-        .select("vec_id")
-      corpus.join(broadcast(shortlist), "vec_id")
-        .crossJoin(broadcast(q.select(col("embedding").as("q_emb"))))
-        .select(col("vec_id"),
-          round(l2sq(col("embedding"), col("q_emb")), 6).as("l2_dist"))
-        .orderBy(col("l2_dist"), col("vec_id"))
-        .limit(20)
+      val shortlist = adcShortlist(pqEncodeLong(corpus, codebook, m = 8),
+        pqLut(codebook, q), Seq("sub", "code"), 100)
+      l2Rerank(corpus, shortlist, q)
     }),
 
     // LLM-28c ⚠: IVF-PQ — the billion-vector architecture (FAISS IVFPQ
@@ -3352,26 +3276,11 @@ object LlmOps extends QueryModule {
         .orderBy(col("cdist"), col("cent_id")).limit(8)
         .select(col("cent_id").as("cell"))
       val codebook = s.read.parquet(memoPersistedCodebook(s, d, 8))
-      val qsub = pqSubvectors(q, 8, 8)
-        .select(col("sub"), col("subvec").as("qsub"))
-      val lut = codebook.join(qsub, "sub")
-        .select(col("sub"), col("cent_id").as("code"),
-          l2sq(col("qsub"), col("cent")).as("pdist"))
       val candidates = cells.join(broadcast(qCells), "cell").select("vec_id")
-      val shortlist = pqEncodeLong(corpus, codebook, m = 8)
-        .join(candidates, "vec_id")
-        .join(broadcast(lut), Seq("sub", "code"))
-        .groupBy("vec_id")
-        .agg(sum(col("pdist").cast("decimal(28,12)")).as("adc"))
-        .orderBy(col("adc"), col("vec_id"))
-        .limit(200)
-        .select("vec_id")
-      corpus.join(broadcast(shortlist), "vec_id")
-        .crossJoin(broadcast(q.select(col("embedding").as("q_emb"))))
-        .select(col("vec_id"),
-          round(l2sq(col("embedding"), col("q_emb")), 6).as("l2_dist"))
-        .orderBy(col("l2_dist"), col("vec_id"))
-        .limit(20)
+      val shortlist = adcShortlist(
+        pqEncodeLong(corpus, codebook, m = 8).join(candidates, "vec_id"),
+        pqLut(codebook, q), Seq("sub", "code"), 200)
+      l2Rerank(corpus, shortlist, q)
     }),
 
     // LLM-28d: IVF-PQ against a PERSISTED, cell-partitioned index —
