@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * those blocks live until the JVM exits — after ~150 declared queries the
   * storage pool is full of dead blocks and late queries run under
   * eviction+GC pressure (strm12 benched 4× slower than its isolated time).
-  * Bench and Verify therefore drop all cached state BETWEEN queries.
+  * [[SparkEntry.run]] therefore drops all cached state BETWEEN queries.
   *
   * The one legitimate cross-query cache is the migration stage memo
   * (MigrationOps.stage): mig3–mig12 deliberately share one materialized

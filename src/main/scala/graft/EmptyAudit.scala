@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.plans.PlanMetrics
+
 /** Run every declared query against an EMPTY lake — a lake with every
   * table present but zero rows — and report which queries throw. Empty
   * inputs are routine at scale (a filter or a partition prune can empty
@@ -20,32 +22,18 @@ object EmptyAudit {
         .parquet(s"$out/$t.parquet")
     }
 
-  /** Execute every `SparkEntry.queries` entry against the empty lake
-    * (minus any `exclude` matches — EmptyInputSpec passes its shared-path
-    * writers, which other suites read concurrently in the parallel test
-    * JVM); returns (ok count, failures as "name: root cause" lines). */
+  /** Execute every `SparkEntry.queries` entry's OWN plan against the
+    * empty lake (minus any `exclude` matches — EmptyInputSpec passes its
+    * shared-path writers, which other suites read concurrently in the
+    * parallel test JVM); returns (ok count, failures as
+    * "name: RootCauseClass: message" lines). A `count()` sweep would pass
+    * a query whose final projection throws: Catalyst prunes it away. */
   def audit(s: SparkSession, emptyLakeDir: String,
             exclude: String => Boolean = _ => false): (Int, Seq[String]) = {
-    var ok = 0
-    val failures = Seq.newBuilder[String]
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (n, _) => exclude(n) }
-      .foreach { case (name, fn) =>
-      try {
-        fn(s, emptyLakeDir).count()
-        ok += 1
-      } catch {
-        case e: Throwable =>
-          val root = {
-            var c: Throwable = e
-            while (c.getCause != null && c.getCause != c) c = c.getCause
-            c
-          }
-          failures += s"$name: ${root.getClass.getSimpleName}: " +
-            s"${Option(root.getMessage).getOrElse("").linesIterator.take(1).mkString}"
-      }
-    }
-    (ok, failures.result())
+    val names = SparkEntry.queries.keys.toSeq.sorted.filterNot(exclude)
+    val failures = names.flatMap(name => SparkEntry.run(s, name, emptyLakeDir)(
+      PlanMetrics.measureShuffleBytes).left.toOption)
+    (names.size - failures.size, failures)
   }
 
   def main(args: Array[String]): Unit = {

@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   *    shuffle.partitions and its inputs' partition counts itself.
   *  - No `inferSchema` anywhere: parquet is self-describing, text sources get
   *    explicit StructTypes (SURVEY.md §1.3).
-  *  - This is the ONLY session factory — Verify, Bench, and tests all call
-  *    it, so the nanos / AQE / timezone configs are consistent across
-  *    entrypoints (ADVICE.md r01).
+  *  - This is the ONLY session factory — every entry point, the
+  *    benchmark and the tests call it, so the nanos / AQE / timezone
+  *    configs are consistent across entrypoints (ADVICE.md r01).
   */
 object Graft {
 

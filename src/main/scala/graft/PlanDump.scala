@@ -5,10 +5,11 @@ import graft.plans.PlanMetrics
 /** Dump `.explain("formatted")` output of declared queries to committed
   * plan-evidence files (plans/<tag dir>/<query>_<tag>.txt) — the
   * optimization rounds' before/after artifacts. Each query's OWN plan
-  * runs first ([[PlanMetrics.measureShuffleBytes]]), so AQE settles and
-  * the dumped plan is the final executed one (`isFinalPlan=true`), not
-  * the initial guess. The header carries that run's wall time and
-  * shuffle MB.
+  * runs first ([[PlanMetrics.measureShuffleBytes]] through
+  * [[SparkEntry.run]]), so AQE settles and the dumped plan is the final
+  * executed one (`isFinalPlan=true`), not the initial guess. The header
+  * carries that run's wall time (frame build included) and shuffle MB.
+  * The first failing query stops the dump.
   *
   *   sbt "runMain graft.PlanDump <sfDir> <outDir> <tag> <query>..."
   */
@@ -21,11 +22,9 @@ object PlanDump {
     val dir = new java.io.File(outDir)
     dir.mkdirs()
     args.drop(3).foreach { name =>
-      spark.sparkContext.setJobDescription(s"plandump: $name")
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val t0 = System.nanoTime()
-      val mb = PlanMetrics.measureShuffleBytes(df) / 1e6
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (sec, (df, mb)) = SparkEntry.run(spark, name, sfDir)(df =>
+        (df, PlanMetrics.measureShuffleBytes(df) / 1e6)
+      ).fold(err => sys.error(s"[plandump] $err"), identity)
       val s = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       val f = new java.io.File(dir, s"${name}_$tag.txt")
@@ -35,7 +34,6 @@ object PlanDump {
         w.println(s)
       } finally w.close()
       System.err.println(f"[plandump] $name%-28s $sec%6.2f s -> $f")
-      BlockHygiene.dropUnpinned(spark)
     }
     spark.stop()
   }

@@ -10,10 +10,11 @@ import graft.plans.PlanMetrics
   * SURVEY-claimed complexity over a real decade of data — wall time and
   * OBS-2 shuffle bytes (PlanMetrics), the unit Spark prices.
   *
-  * Method: per query per SF, three runs (per-run BlockHygiene), each one
-  * [[PlanMetrics.measureShuffleBytes]] call that executes the query's own
-  * plan — final sorts and projections included, unlike `count()` — and
-  * reads its shuffleBytesWritten. Reported: the median run's wall time
+  * Method: per query per SF, three [[SparkEntry.run]]s (per-run
+  * BlockHygiene), each one [[PlanMetrics.measureShuffleBytes]] call that
+  * executes the query's own plan — final sorts and projections included,
+  * unlike `count()` — and reads its shuffleBytesWritten. The first
+  * failing query stops the probe. Reported: the median run's wall time
   * and shuffle bytes. Shuffle bytes are the scale-stable signal — they
   * don't move with JIT/GC/host noise, so the growth column is trustworthy
   * even when wall time wobbles.
@@ -50,17 +51,11 @@ object ScaleProbe {
     val ratio = spark.read.parquet(s"$sf1/lineitem.parquet").count().toDouble /
       spark.read.parquet(s"$sf01/lineitem.parquet").count()
 
-    def run(name: String, dir: String): (Double, Long) = {
-      val fn = SparkEntry.queries(name)
-      def once(): (Double, Long) = {
-        val t0 = System.nanoTime()
-        try {
-          val bytes = PlanMetrics.measureShuffleBytes(fn(spark, dir))
-          ((System.nanoTime() - t0) / 1e9, bytes)
-        } finally BlockHygiene.dropUnpinned(spark)
-      }
-      Seq(once(), once(), once()).sortBy(_._1).apply(1)
-    }
+    def run(name: String, dir: String): (Double, Long) =
+      Seq.fill(3)(SparkEntry.run(spark, name, dir)(
+        PlanMetrics.measureShuffleBytes
+      ).fold(err => sys.error(s"[probe] $err"), identity))
+        .sortBy(_._1).apply(1)
 
     val rows = names.map { n =>
       val (s01, b01) = run(n, sf01)

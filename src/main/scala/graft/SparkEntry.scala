@@ -3,12 +3,14 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Query registry contract — see SURVEY.md §7.
   *
   * `queries` aggregates every operator module; each key is a SURVEY.md §2
   * operator ID. `oracleSql` carries the DuckDB-equivalent SQL for the
   * driver's correctness gate (column names aliased identically on both
-  * sides — the compare sorts columns by name before hashing).
+  * sides — the compare sorts columns by name before hashing). [[run]] is
+  * the one per-query loop body every entry point (Verify, EmptyAudit,
+  * PlanDump, ScaleProbe) shares.
   */
 object SparkEntry {
 
@@ -49,4 +51,32 @@ object SparkEntry {
     * driver records a weaker rows-only check; ScalaTest covers those). */
   def oracleSql: Map[String, String] =
     modules.flatMap(_.oracle).toMap
+
+  /** Run declared query `name` on the lake at `sfDir`: build its frame and
+    * hand it to `action`, which must execute the frame's OWN plan (a
+    * write, a noop sink, [[plans.PlanMetrics.measureShuffleBytes]]) —
+    * never `count()`, which lets Catalyst prune final sorts and
+    * projections and so hides faults in them. The frame build is timed
+    * with the action: memo stages build eagerly inside it. Every
+    * unpinned cached block is dropped afterwards, failed or not, so each
+    * query runs free of its predecessors' dead `localCheckpoint` blocks
+    * (the pinned [[StageMemo]] stages survive). Returns (seconds, the
+    * action's result), or `name: RootCauseClass: first message line`. */
+  def run[T](spark: SparkSession, name: String, sfDir: String)(
+      action: DataFrame => T): Either[String, (Double, T)] = {
+    spark.sparkContext.setJobDescription(name)
+    try {
+      val build = queries(name)
+      val t0 = System.nanoTime()
+      val out = action(build(spark, sfDir))
+      Right(((System.nanoTime() - t0) / 1e9, out))
+    } catch {
+      case e: Throwable =>
+        var root = e
+        while (root.getCause != null && root.getCause != root)
+          root = root.getCause
+        Left(s"$name: ${root.getClass.getSimpleName}: " +
+          Option(root.getMessage).getOrElse("").linesIterator.take(1).mkString)
+    } finally BlockHygiene.dropUnpinned(spark)
+  }
 }

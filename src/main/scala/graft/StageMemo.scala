@@ -9,13 +9,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * one parse→latest-wins log) and the llm28 ANN family (llm28/b/c/d all
   * train the same PQ codebook and IVF centroid table; llm28d/e build a
   * persisted index once and probe it). Recomputing those per query — and
-  * ×3 again under the bench's median-of-3 — is pure waste: on a cluster
+  * again on every repeated run of a query — is pure waste: on a cluster
   * each would be a written stage output built once (the reference's
   * pipeline-step artifacts, runcommand.py:389-409), not a per-query
   * recompute.
   *
   * [[frame]] materializes a DataFrame stage once per (session, key) via
-  * `localCheckpoint` and pins it ([[BlockHygiene]]) so Bench/Verify's
+  * `localCheckpoint` and pins it ([[BlockHygiene]]) so [[SparkEntry.run]]'s
   * between-query block drop doesn't evict it. [[value]] memoizes an
   * arbitrary build artifact (e.g. the path of a written index store).
   * Entries and their build-ledger lines evict ([[evict]]) when the owning
@@ -36,11 +36,10 @@ object StageMemo {
     scala.collection.concurrent.TrieMap.empty[SparkSession, Unit]
 
   /** Per-session ledger of (memo key → build seconds), appended on every
-    * actual build (cache miss). Bench reports the total as
-    * `memo_build_total` and each entry on stderr (VERDICT r21 #5: memo
-    * builds are untimed by the per-query medians — the first run of a
-    * query pays them and median-of-3 discards it — so their cost must be
-    * visible SOMEWHERE for plan-layout claims to be falsifiable). */
+    * actual build (cache miss). The benchmark (`perfbench`) charges each
+    * build to the query that paid it (VERDICT r21 #5: a memo build's cost
+    * must be visible SOMEWHERE for plan-layout claims to be
+    * falsifiable). */
   private val buildLog =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Double]
 

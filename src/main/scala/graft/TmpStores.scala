@@ -12,10 +12,10 @@ import java.util.Comparator
   * unbounded disk growth under median-of-3 bench).
   *
   * [[scratch]] pairs the UUID dir with a JVM shutdown hook that deletes it,
-  * so every normally-exiting Bench/Verify/test JVM leaves zero scratch
-  * dirs behind. [[sweep]] (called at Bench/Verify startup, before any
-  * query can hold a live reader on a scratch path) removes whatever a
-  * crashed or killed JVM still left.
+  * so every normally-exiting Verify/ScaleProbe/test JVM leaves zero
+  * scratch dirs behind. [[sweep]] (called at Verify/ScaleProbe startup,
+  * before any query can hold a live reader on a scratch path) removes
+  * whatever a crashed or killed JVM still left.
   */
 object TmpStores {
 
@@ -26,7 +26,7 @@ object TmpStores {
     * dirTag-suffixed memoized stores (ivm1_store_<8hex> …) are
     * session-stable by design and never swept. The old pattern was any
     * trailing 8-hex suffix, which ALSO matched the dirTag stores: a
-    * concurrently-starting Verify/Bench JVM would sweep a running JVM's
+    * concurrently-starting Verify/ScaleProbe JVM would sweep a running JVM's
     * live ivm stores mid-query ("version 1 not committed" in the r11
     * sf0.1 bench). The marker makes scratch-ness explicit in the name. */
   private val ScratchName = "^[A-Za-z0-9_]+_scr[0-9a-f]{8}$".r.pattern

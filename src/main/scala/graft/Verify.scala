@@ -1,11 +1,13 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * plus oracle_sql.json, for the DuckDB compare (tools/compare.py). Each
+  * query runs through [[SparkEntry.run]], so its `[verify]` line carries
+  * the seconds of a run that actually wrote its output.
   *
   * Uses Graft.session — the single session factory — so the nanosAsLong /
-  * UTC / AQE configs apply identically here, in Bench, and in tests
-  * (ADVICE.md r01, VERDICT r02 item 2).
+  * UTC / AQE configs apply identically here, in the other entry points,
+  * and in tests (ADVICE.md r01, VERDICT r02 item 2).
   */
 object Verify {
 
@@ -35,21 +37,19 @@ object Verify {
     val spark = Graft.session("graft-verify")
     TmpStores.sweep() // leftover scratch stores from crashed JVMs
     new java.io.File(outDir).mkdirs()
-    var failed = 0
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        failed += 1
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val selected = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => only.forall(_.contains(n)))
+    val failed = selected.count { name =>
+      SparkEntry.run(spark, name, sfDir)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      ) match {
+        case Right((sec, _)) =>
+          System.err.println(f"[verify] $name%-28s $sec%8.3f s")
+          false
+        case Left(err) =>
+          System.err.println(s"[verify] failed: $err")
+          true
       }
-      finally
-        // drop per-query localCheckpoint blocks — dead after the write, and
-        // ~170 queries of them otherwise pile up into eviction pressure
-        // (the mig stage memo is pinned and survives)
-        BlockHygiene.dropUnpinned(spark)
     }
     // one-SF-per-Verify invariant: fail loudly before emitting replay SQL
     // that could name another SF's artifact bytes

@@ -556,6 +556,23 @@ object LlmOps extends QueryModule {
       out
     }
 
+  /** Shared by LLM-3d / LLM-21b: candidate pairs a_id < b_id sharing a
+    * (table, bucket) of the persisted sign-LSH index, with both
+    * embeddings of corpus `e` re-attached by id as a_emb / b_emb. Only
+    * ids cross the bucket self-join; both of its sides scan the dump. */
+  private def lshCandidatePairs(s: SparkSession, d: String,
+                                e: DataFrame): DataFrame = {
+    val sig = s.read.parquet(memoPersistedLshIndex(s, d))
+    val a = sig.select(col("table"), col("bucket"), col("vec_id").as("a_id"))
+    val b = sig.select(col("table"), col("bucket"), col("vec_id").as("b_id"))
+    val ea = e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
+    val eb = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
+    a.join(b, Seq("table", "bucket"))
+      .filter(col("a_id") < col("b_id"))
+      .select("a_id", "b_id").distinct()
+      .join(ea, "a_id").join(eb, "b_id")
+  }
+
   /** Memoized STABLE-PATH dump of the per-source aggregated MinHash
     * signatures (llm31's oracle surface, r18): C sources × k=128 lanes,
     * each lane the min over the source's per-doc signature lanes —
@@ -724,15 +741,19 @@ object LlmOps extends QueryModule {
     * one probe per request). A multi-row `q` would mix all queries' nearest
     * cells into one probe set and cross-product the re-rank, so the probe
     * hard-limits to the first row; batch retrieval is llm3f's shape (one
-    * ranked scan per query via a windowed join), not this one. */
+    * ranked scan per query via a windowed join), not this one. That row
+    * is collected ONCE: the cell probe, the LUT and the re-rank broadcast
+    * all read the same local row, so neither the embeddings scan nor the
+    * limit's single-partition shuffle repeats per branch. */
   def ivfpqProbe(q0: DataFrame, corpus: DataFrame, store: String,
                  m: Int = 8, dim: Int = 64, nprobe: Int = 8,
                  residual: Boolean = false,
                  codes0: Option[DataFrame] = None,
                  cents0: Option[DataFrame] = None,
                  shortlistN: Int = 200): DataFrame = {
-    val q = q0.limit(1)
-    val s = q.sparkSession
+    val s = q0.sparkSession
+    val q = s.createDataFrame(
+      java.util.Arrays.asList(q0.limit(1).collect(): _*), q0.schema)
     // cents0: serve a centroid generation maintained OUTSIDE the build
     // layout — STRM-22's drift-retrained manifest generation
     val cents = cents0.getOrElse(s.read.parquet(s"$store/centroids"))
@@ -1589,18 +1610,7 @@ object LlmOps extends QueryModule {
     // from the PERSISTED index dump, and the r18 DuckDB oracle replays
     // the bucket self-join + exact re-rank off those bytes.
     "llm3d_embed_pairs_lsh" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      // parquet-backed — both sides of the bucket self-join scan the dump
-      val sig = s.read.parquet(memoPersistedLshIndex(s, d))
-      val a = sig.select(col("table"), col("bucket"), col("vec_id").as("a_id"))
-      val b = sig.select(col("table"), col("bucket"), col("vec_id").as("b_id"))
-      // candidate ids only cross the bucket join; embeddings re-attach by id
-      val pairs = a.join(b, Seq("table", "bucket"))
-        .filter(col("a_id") < col("b_id"))
-        .select("a_id", "b_id").distinct()
-      val ea = e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
-      val eb = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
-      pairs.join(ea, "a_id").join(eb, "b_id")
+      lshCandidatePairs(s, d, Tables.embeddings(s, d))
         .select(col("a_id"), col("b_id"),
           round(cosine(col("a_emb"), col("b_emb")), 6).as("cos_sim"))
         .orderBy(col("cos_sim").desc, col("a_id"), col("b_id"))
@@ -2347,15 +2357,7 @@ object LlmOps extends QueryModule {
     // replays bucket pairing + threshold keep/drop off those bytes.
     "llm21b_embed_neardup_lsh" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      val sig = s.read.parquet(memoPersistedLshIndex(s, d))
-      val pa = sig.select(col("table"), col("bucket"), col("vec_id").as("a_id"))
-      val pb = sig.select(col("table"), col("bucket"), col("vec_id").as("b_id"))
-      val cand = pa.join(pb, Seq("table", "bucket"))
-        .filter(col("a_id") < col("b_id"))
-        .select("a_id", "b_id").distinct()
-      val ea = e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
-      val eb = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
-      val dupIds = cand.join(ea, "a_id").join(eb, "b_id")
+      val dupIds = lshCandidatePairs(s, d, e)
         .filter(round(cosine(col("a_emb"), col("b_emb")), 6) >= 0.45)
         .select(col("b_id").as("vec_id")).distinct()
       e.select(col("vec_id"))

@@ -248,7 +248,7 @@ object MultimodalOps extends QueryModule {
       // close the ImageInputStream on EVERY path: with ImageIO's default
       // disk cache it is temp-file-backed, and a per-row leak only
       // reclaimed by finalizers would exhaust tmpdir/fds across a long
-      // Verify/Bench session
+      // Verify session
       val iis = javax.imageio.ImageIO.createImageInputStream(
         new java.io.ByteArrayInputStream(payload))
       try {

@@ -73,6 +73,14 @@ object Analytics extends QueryModule {
       .select(col("user_id"), unix_micros(col("hr")).as("hour_us"), col("v"))
   }
 
+  /** Shared by ER-1/2/3: the DISTINCT part-name dictionary (name, n_parts)
+    * with its blocking key `blk`, the name's noun (last token). */
+  private def blockedNames(s: SparkSession, d: String): DataFrame =
+    Tables.part(s, d)
+      .groupBy(col("p_name").as("name"))
+      .agg(count(lit(1)).as("n_parts"))
+      .withColumn("blk", substring_index(col("name"), " ", -1))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // WIN-9: batch sessionization — split each user's event stream into
@@ -608,10 +616,7 @@ object Analytics extends QueryModule {
     // blocks. Output: cross-name match pairs at edit distance 1–3 with each
     // name's part count (the evidence weight), totally ordered.
     "er1_fuzzy_match" -> ((s, d) => {
-      val names = Tables.part(s, d)
-        .groupBy(col("p_name").as("name"))
-        .agg(count(lit(1)).as("n_parts"))
-        .withColumn("blk", substring_index(col("name"), " ", -1))
+      val names = blockedNames(s, d)
       val a = names.select(col("blk"), col("name").as("name_a"),
         col("n_parts").as("n_a"))
       val b = names.select(col("blk"), col("name").as("name_b"),
@@ -663,10 +668,7 @@ object Analytics extends QueryModule {
     // check at round-6; same dictionary+blocking discipline as er1, score
     // floor 0.93 inside blocks, top pairs per block ordered globally.
     "er3_jaro_rank" -> ((s, d) => {
-      val names = Tables.part(s, d)
-        .groupBy(col("p_name").as("name"))
-        .agg(count(lit(1)).as("n_parts"))
-        .withColumn("blk", substring_index(col("name"), " ", -1))
+      val names = blockedNames(s, d)
       val a = names.select(col("blk"), col("name").as("name_a"))
       val b = names.select(col("blk"), col("name").as("name_b"))
       a.join(b, Seq("blk"))
@@ -690,10 +692,7 @@ object Analytics extends QueryModule {
     // convergence. The name dictionary is DISTINCT names (sublinear in
     // facts — the er1 discipline); the pair graph is smaller still.
     "er2_entity_clusters" -> ((s, d) => {
-      val names = Tables.part(s, d)
-        .groupBy(col("p_name").as("name"))
-        .agg(count(lit(1)).as("n_parts"))
-        .withColumn("blk", substring_index(col("name"), " ", -1))
+      val names = blockedNames(s, d)
         .localCheckpoint() // pair join + final rollup both read it
       val a = names.select(col("blk"), col("name").as("name_a"))
       val b = names.select(col("blk"), col("name").as("name_b"))

@@ -1335,7 +1335,8 @@ object Relational extends QueryModule {
           count(when(col("nrhs") > 1, 1)).as("n_viol"),
           max(col("nrhs")).as("max_fanout"))
           .select(lit(name).as("fd"), col("n_lhs"), col("n_viol"),
-            expr("n_viol * 1000000 DIV n_lhs").as("viol_ppm"),
+            // NULL on an empty table, like the oracle's `//`
+            expr("n_viol * 1000000 DIV nullif(n_lhs, 0)").as("viol_ppm"),
             col("max_fanout"))
       }
       val li = Tables.lineitem(s, d)
