@@ -676,5 +676,7 @@ object VectorExtensions {
     // RULE-1: auto-rewrite of the row_number()<=k window pattern into
     // PLAN-1, so the idiomatic formulation gets the heap plan for free
     ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
+    // RULE-2: a sort over a driver-held local relation sorts at plan time
+    ext.injectOptimizerRule(_ => graft.plans.LocalSortFold)
   }
 }

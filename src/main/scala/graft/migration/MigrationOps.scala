@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The migration domain core — the reference's one real program
   * (SURVEY.md §3.1, §7 phase 4), re-expressed Spark-first.
@@ -17,7 +18,7 @@ import org.apache.spark.sql.types._
   *  - `.ace` paragraph → datoms: scalar UDF returning array<struct> +
   *    `explode` (UDF-1/UDF-3; paragraph format contract from the reference's
   *    acedump shape, runcommand.py:134-150; datom shape pseudoace.py:69-76);
-  *  - ordered import = `max_by(value, ts)` grouped on (e, path) — the shuffle
+  *  - ordered import = `max(struct(ts, …))` grouped on (e, path) — the shuffle
   *    carries one row per datom, the "sort" is implicit in the max, so at
   *    100 TB this is a single hash-aggregate, not a global sort
   *    (pseudoace.py:87-102's sort-then-replay collapses into latest-wins);
@@ -25,8 +26,9 @@ import org.apache.spark.sql.types._
   *    base ts (MERGE semantics, pseudoace.py:105-110);
   *  - QA report = full-outer join of per-class counts vs the id catalog
   *    (pseudoace.py:113-124), missing objects = left-anti (JOIN-5);
-  *  - markdown render of the final (small) report mirrors util.py:74-99
-  *    (dedupe, sort desc by first count column, right-justified padding);
+  *  - markdown/html render of the final (small) report mirrors
+  *    util.py:74-99 (dedupe, sort desc by first count column,
+  *    right-justified padding): one Spark query, formatted on the driver;
   *  - checkpoint/resume runner mirrors runcommand.py:389-409's
   *    last-step-ok state with idempotent skip-if-done steps.
   */
@@ -120,26 +122,23 @@ object MigrationOps extends QueryModule {
   /** Deterministic ordering key for latest-wins: ts first, then at equal ts
     * an assert beats a retract (the common `.ace` patch idiom `-D old` +
     * re-assert lands both in ONE patch, i.e. one ts), then value as a final
-    * total-order tiebreak. Because the key embeds (op, value), any two rows
-    * that tie on the FULL key carry identical (op, value) — so picking value
-    * and op via two max_by calls over the same key cannot mix rows. */
-  private def lwOrderKey: Column =
-    struct(col("ts"),
-      when(col("op") === "assert", 1).otherwise(0).as("op_rank"),
-      col("value"))
+    * total-order tiebreak. `op_rank` is 1 exactly when the op asserts, so
+    * the key's max alone says both the winning value and whether it lives. */
+  private def lwOrderKey: Column = struct(col("ts"), opRank, col("value"))
+
+  private def opRank: Column =
+    when(col("op") === "assert", 1).otherwise(0).as("op_rank")
 
   /** Final DB state from an (e, path, value, op, ts) changelog: for each
-    * (e, path) take the row winning under [[lwOrderKey]]; keep it only if
-    * that row asserts. One hash aggregate — no global sort, no window.
+    * (e, path) take the max [[lwOrderKey]]; keep it only if that row
+    * asserts. One aggregate — no global sort, no window.
     * NOTE these are cardinality-ONE semantics (a newer assert on the same
     * (e, path) replaces the old value — the Datomic card-one mapping);
     * multi-valued ACeDB tags go through [[latestWinsMulti]]. */
   def latestWins(log: DataFrame): DataFrame =
-    log.groupBy("e", "path")
-      .agg(max_by(col("value"), lwOrderKey).as("value"),
-        max_by(col("op"), lwOrderKey).as("last_op"))
-      .filter(col("last_op") === "assert")
-      .select("e", "path", "value")
+    log.groupBy("e", "path").agg(max(lwOrderKey).as("w"))
+      .filter(col("w.op_rank") === 1)
+      .select(col("e"), col("path"), col("w.value").as("value"))
 
   /** Cardinality-MANY latest-wins: the datom triple (e, path, value) is the
     * unit of assertion/retraction, so concurrent values on one tag all
@@ -148,10 +147,8 @@ object MigrationOps extends QueryModule {
     * wins (a patch that retracts and re-asserts the same datom keeps it). */
   def latestWinsMulti(log: DataFrame): DataFrame =
     log.groupBy("e", "path", "value")
-      .agg(max_by(col("op"),
-        struct(col("ts"),
-          when(col("op") === "assert", 1).otherwise(0))).as("last_op"))
-      .filter(col("last_op") === "assert")
+      .agg(max(struct(col("ts"), opRank)).as("w"))
+      .filter(col("w.op_rank") === 1)
       .select("e", "path", "value")
 
   // ---- UDAF variant (UDF-2): same semantics as an Aggregator -------------
@@ -164,8 +161,8 @@ object MigrationOps extends QueryModule {
     * commutative, so Spark's partial aggregation (map-side combine) applies —
     * the shuffle ships one buffer per (e,path) per partition, not the raw
     * changelog. Ordering matches [[lwOrderKey]]: (ts, assert>retract, value)
-    * with value compared in UTF-8 binary order (the same order max_by's
-    * struct comparison and the DuckDB oracle use — Java String.compareTo is
+    * with value compared in UTF-8 binary order (the same order Spark's
+    * struct max and the DuckDB oracle use — Java String.compareTo is
     * UTF-16 code-unit order, which diverges on supplementary-plane chars)
     * and null < any non-null value (Spark's struct-field null ordering).
     * The empty buffer is an explicit `set=false` sentinel, not inferred from
@@ -177,8 +174,7 @@ object MigrationOps extends QueryModule {
       if (a == null && b == null) 0
       else if (a == null) -1
       else if (b == null) 1
-      else org.apache.spark.unsafe.types.UTF8String.fromString(a)
-        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
+      else UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
     private def wins(aTs: Long, aOp: String, aV: String, b: LwBuf): Boolean =
       !b.set || aTs > b.ts ||
         (aTs == b.ts && (opRank(aOp) > opRank(b.op) ||
@@ -260,82 +256,65 @@ object MigrationOps extends QueryModule {
         (coalesce(col("n_db"), lit(0L)) - coalesce(col("n_ref"), lit(0L)))
           .as("n_diff"))
 
-  /** Markdown table render of a (small, final) report — the Spark analogue
-    * of util.py:74-99: dedupe, sort desc by the first count column, cells
-    * right-justified to the max width per column. Declared as a DataFrame of
-    * (line_no, line); the window is over the already-aggregated tiny report
-    * (like the reference, which renders in memory), never over raw data. */
-  def markdownReport(report: DataFrame): DataFrame = {
+  /** A (small, final) report's rows as the renderers print them, rendered
+    * in memory like the reference (util.py:74-99). One Spark query dedupes
+    * the report and casts every cell to string and the first count column
+    * to long, so Spark's formatting and cast errors stand; the driver sorts
+    * by count desc nulls last, then by the cells asc nulls first in UTF-8
+    * binary order (Spark's string order). A NULL cell is None. */
+  private def sortedCells(report: DataFrame): Seq[IndexedSeq[Option[String]]] = {
     val cols = report.columns.toIndexedSeq
     val asStr = report.distinct()
       .select(cols.map(c => col(c).cast("string").as(c)): _*)
-    // per-column max display width incl. the header label (tiny agg result)
-    val widths = asStr.agg(
-      cols.map(c => greatest(max(length(col(c))), lit(c.length)).as(s"w_$c"))
-        .head, cols.tail.map(c =>
-        greatest(max(length(col(c))), lit(c.length)).as(s"w_$c")): _*)
-    val withW = asStr.crossJoin(broadcast(widths))
-    def cell(c: String): Column =
-      concat(lit(" "), lpad(col(c), col(s"w_$c"), lit(" ")), lit(" |"))
-    val dataLines = withW.select(
-      row_number().over(org.apache.spark.sql.expressions.Window
-        .orderBy(col(cols(1)).cast("long").desc, col(cols.head))).as("rn"),
-      concat(lit("|"), concat_ws("", cols.map(cell): _*)).as("line"))
-      .select((col("rn") + 2).as("line_no"), col("line"))
-    val headerLines = widths.select(explode(array(
-      struct(lit(1L).as("line_no"),
-        concat(lit("|"), concat_ws("", cols.map(c =>
-          concat(lit(" "), lpad(lit(c), col(s"w_$c"), lit(" ")), lit(" |"))): _*))
-          .as("line")),
-      struct(lit(2L).as("line_no"),
-        concat(lit("|"), concat_ws("", cols.map(c =>
-          concat(lit(" "), lpad(lit(""), col(s"w_$c"), lit("-")), lit(" |"))): _*))
-          .as("line")))).as("h"))
-      .select(col("h.line_no").as("line_no"), col("h.line").as("line"))
-    headerLines.unionByName(dataLines).orderBy("line_no")
+    val utf8 = Ordering.by(UTF8String.fromString(_: String))
+    asStr.select(col(cols(1)).cast("long") +: cols.map(col): _*).collect()
+      .map(r => ((r.isNullAt(0), if (r.isNullAt(0)) 0L else ~r.getLong(0)),
+        cols.indices.map(i => Option(r.getString(i + 1)))))
+      .sorted(Ordering.Tuple2(Ordering[(Boolean, Long)],
+        Ordering.Implicits.seqOrdering[IndexedSeq, Option[String]](
+          Ordering.Option(utf8)))).map(_._2).toSeq
   }
 
-  /** HTML document render of a (small, final) report — the Spark analogue
-    * of qa_report_to_html (pseudoace.py:152-158): h1 title + the report as
-    * an HTML table (the reference goes CSV → markdown table → markdown lib
-    * → HTML; emitting the table directly is the same document without the
-    * intermediate). Same dedupe + desc-sort-by-first-count ordering as
-    * [[markdownReport]]; like the reference, renders only the tiny final
-    * report, never raw data. */
-  def htmlReport(report: DataFrame, title: String): DataFrame = {
-    val sp = report.sparkSession
-    import sp.implicits._
-    val cols = report.columns.toIndexedSeq
-    val asStr = report.distinct()
-      .select(cols.map(c => col(c).cast("string").as(c)): _*)
-    // & before < and > — escaping in the other order double-escapes
-    def escStr(s0: String): String =
-      s0.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-    def esc(c: Column): Column =
-      regexp_replace(regexp_replace(regexp_replace(
-        c, lit("&"), lit("&amp;")), lit("<"), lit("&lt;")), lit(">"), lit("&gt;"))
-    val dataLines = asStr.select(
-      (row_number().over(org.apache.spark.sql.expressions.Window
-        .orderBy(col(cols(1)).cast("long").desc, col(cols.head))) + 4L)
-        .as("line_no"),
-      concat(lit("<tr>"),
-        concat_ws("", cols.map(c =>
-          concat(lit("<td>"), esc(col(c)), lit("</td>"))): _*),
-        lit("</tr>")).as("line"))
-    val frame = Seq(
-      (1L, s"<html><body><h1>${escStr(title)}</h1>"),
-      (2L, "<table>"),
-      (3L, "<thead><tr>" + cols.map(c => s"<th>${escStr(c)}</th>").mkString +
-        "</tr></thead>"),
-      (4L, "<tbody>"))
+  /** A rendered document as a local (line_no, line) frame, numbered 1..N. */
+  private def lineFrame(s: SparkSession, lines: Seq[String]): DataFrame =
+    s.createDataFrame(lines.zipWithIndex.map { case (l, i) => (i + 1L, l) })
       .toDF("line_no", "line")
-    // closing tags numbered 4 + n_data + 1 so line_no is a dense 1..N
-    // sequence (the mig7b golden CSV pins it) — the count() is one job
-    // over the already-aggregated tiny report, the same cost class as
-    // the render itself
-    val closing = Seq((4L + asStr.count() + 1L,
-      "</tbody></table></body></html>")).toDF("line_no", "line")
-    frame.unionByName(dataLines).unionByName(closing).orderBy("line_no")
+
+  /** Markdown table render of a (small, final) report — util.py:74-99:
+    * dedupe, sort desc by the first count column, cells right-justified to
+    * the max width per column. Widths count code points, as Spark's
+    * `length`/`lpad` do, except the header label's own UTF-16 length; a
+    * NULL cell drops out of its line. */
+  def markdownReport(report: DataFrame): DataFrame = {
+    val cols = report.columns.toIndexedSeq
+    val rows = sortedCells(report)
+    def cp(v: String) = v.codePointCount(0, v.length)
+    val widths = cols.indices.map(i =>
+      (rows.flatMap(_(i)).map(cp) :+ cols(i).length).max)
+    def line(cells: Seq[Option[String]], pad: String) = cells.zip(widths)
+      .collect { case (Some(v), w) => s" ${pad * (w - cp(v))}$v |" }
+      .mkString("|", "", "")
+    lineFrame(report.sparkSession, line(cols.map(Some(_)), " ") +:
+      line(cols.map(_ => Some("")), "-") +: rows.map(line(_, " ")))
+  }
+
+  /** HTML document render of a (small, final) report — the analogue of
+    * qa_report_to_html (pseudoace.py:152-158): h1 title + the report as an
+    * HTML table (the reference goes CSV → markdown table → markdown lib →
+    * HTML; emitting the table directly is the same document without the
+    * intermediate). Same rows and order as [[markdownReport]]. */
+  def htmlReport(report: DataFrame, title: String): DataFrame = {
+    // & before < and > — escaping in the other order double-escapes
+    def esc(v: String): String =
+      v.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
+    val cols = report.columns.toIndexedSeq
+    lineFrame(report.sparkSession, Seq(
+      s"<html><body><h1>${esc(title)}</h1>", "<table>",
+      "<thead><tr>" + cols.map(c => s"<th>${esc(c)}</th>").mkString +
+        "</tr></thead>", "<tbody>") ++
+      sortedCells(report).map(_.flatten.map(v => s"<td>${esc(v)}</td>")
+        .mkString("<tr>", "", "</tr>")) :+
+      "</tbody></table></body></html>")
   }
 
   // ---- checkpoint/resume runner (runcommand.py:389-409) ------------------

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Minimal versioned-snapshot table — the Delta-style layout the north-star
   * contract names, stood up on plain parquet because Delta jars cannot ship
@@ -16,9 +17,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * {{{
   *   data-<uuid>/            one immutable parquet dir per commit ATTEMPT
   *   data-<uuid>/
-  *   _versions/00001.commit  marker per version; its CONTENT names the data
-  *   _versions/00002.commit  dir (a one-line manifest). Version visible iff
-  *                           its marker exists.
+  *   _versions/00001.commit  marker per version; its CONTENT is a manifest:
+  *   _versions/00002.commit  line 1 names the data dir, later lines carry
+  *                           `schema=<json>` and `txn=<appId>=<version>`.
+  *                           Version visible iff its marker exists.
   * }}}
   *
   * Commit protocol: (1) write a fresh uniquely-named `data-<uuid>` dir —
@@ -48,18 +50,33 @@ object VersionedStore {
 
   def latestVersion(root: String): Option[Long] = versions(root).lastOption
 
-  /** Data dir a committed version's manifest points at. */
-  private def markerBody(root: String, v: Long): String = {
+  /** A committed version's manifest: line 1 names the data dir; later
+    * lines carry commit metadata — `schema=<json>` (see [[schemaLine]]) and
+    * `txn=<appId>=<version>` from [[commitTxn]]. */
+  private def markerLines(root: String, v: Long): Seq[String] = {
     val m = marker(root, v)
     require(m.exists(),
       s"version $v not committed under $root (have ${versions(root)})")
     new String(Files.readAllBytes(m.toPath), StandardCharsets.UTF_8)
+      .linesIterator.toSeq
   }
 
-  /** Marker line 1 names the data dir; later lines carry commit metadata
-    * (currently `txn=<appId>=<version>` from [[commitTxn]]). */
   private def dataDirOf(root: String, v: Long): File =
-    new File(root, markerBody(root, v).linesIterator.next().trim)
+    new File(root, markerLines(root, v).head.trim)
+
+  /** The marker line recording a version's schema: the written schema made
+    * nullable at every level, which is what parquet inference returns for
+    * a Spark-written store — so [[read]] plans without an inference job. */
+  private def schemaLine(df: DataFrame): String = {
+    def nullable(t: DataType): DataType = t match {
+      case st: StructType => StructType(st.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+      case MapType(k, v, _) => MapType(nullable(k), nullable(v), true)
+      case other => other
+    }
+    s"\nschema=${nullable(df.schema).json}"
+  }
 
   /** Claim the next version number for an existing data dir: create-new
     * marker semantics, retry at the next number if another writer won. */
@@ -92,7 +109,7 @@ object VersionedStore {
   def commit(df: DataFrame, root: String, maxRetries: Int = 64): Long = {
     val dataName = s"data-${java.util.UUID.randomUUID()}"
     df.write.mode("errorifexists").parquet(new File(root, dataName).toString)
-    claimMarker(root, dataName, maxRetries)
+    claimMarker(root, dataName + schemaLine(df), maxRetries)
   }
 
   /** CHECK-constraint commit (Delta `ALTER TABLE ADD CONSTRAINT` parity):
@@ -118,7 +135,7 @@ object VersionedStore {
       .write.mode("errorifexists").parquet(new File(root, dataName).toString)
     val violations = obs.getAsJava.get("violations").asInstanceOf[Long]
     if (violations > 0L) Left(violations)
-    else Right(claimMarker(root, dataName, maxRetries))
+    else Right(claimMarker(root, dataName + schemaLine(df), maxRetries))
   }
 
   /** Highest writer-transaction version recorded for `appId` across the
@@ -129,7 +146,7 @@ object VersionedStore {
   def lastTxn(root: String, appId: String): Option[Long] = {
     val pfx = s"txn=$appId="
     val recorded = versions(root).flatMap(v =>
-      markerBody(root, v).linesIterator
+      markerLines(root, v)
         .filter(_.startsWith(pfx)).map(_.stripPrefix(pfx).trim.toLong))
     if (recorded.isEmpty) None else Some(recorded.max)
   }
@@ -153,12 +170,13 @@ object VersionedStore {
         // partitionBy (Delta partitioned-table parity): the version's data
         // dir is hive-partitioned, so serve-path key filters prune
         // directories instead of scanning the snapshot (STRM-22's
-        // cell-partitioned codes store). read() re-infers the partition
-        // column from the layout.
+        // cell-partitioned codes store). Such a version records no schema:
+        // read() re-infers the partition column from the layout.
         val w = df.write.mode("errorifexists")
         (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
           .parquet(new File(root, dataName).toString)
-        Right(claimMarker(root, s"$dataName\ntxn=$appId=$txnVersion",
+        val schema = if (partitionBy.nonEmpty) "" else schemaLine(df)
+        Right(claimMarker(root, s"$dataName\ntxn=$appId=$txnVersion$schema",
           maxRetries))
     }
 
@@ -169,7 +187,7 @@ object VersionedStore {
   def history(s: SparkSession, root: String): DataFrame = {
     import s.implicits._
     versions(root).map { v =>
-      val lines = markerBody(root, v).linesIterator.toSeq
+      val lines = markerLines(root, v)
       (v, lines.head.trim, lines.find(_.startsWith("txn=")).orNull)
     }.toDF("version", "data_dir", "txn")
   }
@@ -182,21 +200,29 @@ object VersionedStore {
     * data movement. [[vacuum]] is reference-counted, so the shared data dir
     * survives as long as ANY retained version points at it. */
   def rollback(s: SparkSession, root: String, version: Long): Long =
-    claimMarker(root, dataDirOf(root, version).getName)
+    claimMarker(root, markerLines(root, version)
+      .filterNot(_.startsWith("txn=")).mkString("\n"))
 
   /** Read a specific committed version, or the latest when version < 0.
     * `schema` (DDL string) pins the shape instead of inferring — REQUIRED
     * for reading a version that may be an EMPTY partitionBy commit: a
     * partitioned write of zero rows creates no parquet footers, so
-    * inference has nothing to read (plain empty commits keep a footer). */
+    * inference has nothing to read (plain empty commits keep a footer).
+    * Without it the version's recorded schema line is used, so building
+    * the frame runs no job; markers without one (partitioned commits,
+    * older stores) infer. */
   def read(s: SparkSession, root: String, version: Long = -1L,
            schema: Option[String] = None): DataFrame = {
     val v =
       if (version >= 0) version
       else latestVersion(root).getOrElse(
         throw new IllegalStateException(s"no committed versions under $root"))
-    val r = schema.fold(s.read)(ddl => s.read.schema(ddl))
-    r.parquet(dataDirOf(root, v).toString)
+    val lines = markerLines(root, v)
+    val recorded = lines.collectFirst { case l if l.startsWith("schema=") =>
+      DataType.fromJson(l.stripPrefix("schema=")).asInstanceOf[StructType] }
+    schema.map(ddl => s.read.schema(ddl))
+      .orElse(recorded.map(st => s.read.schema(st))).getOrElse(s.read)
+      .parquet(new File(root, lines.head.trim).toString)
   }
 
   /** MERGE INTO the latest committed version — the batch form of Delta's
@@ -206,9 +232,11 @@ object VersionedStore {
     * matches, inserts when it doesn't). Target rows unmatched by any source
     * key carry over unchanged.
     *
-    * Plan shape: ONE left-anti shuffle join on the merge key plus a union —
-    * no window, no global sort. At 100 TB both sides shuffle once on the
-    * key and AQE splits skewed keys; a small change set broadcasts. (Delta
+    * Plan shape: a left-anti join against the source keys (not deduped: an
+    * anti join only tests existence, and duplicate keys are rejected first)
+    * plus a union — no window, no global sort. At 100 TB both sides shuffle
+    * once on the key and AQE splits skewed keys; a small change set
+    * broadcasts. (Delta
     * additionally file-skips so only touched files rewrite — with a
     * partitioned store root the same effect comes from partition-pruning
     * the target before the merge.) The result commits through the atomic
@@ -229,7 +257,7 @@ object VersionedStore {
         "dedupe the change set (e.g. latest-wins) before merging")
     val target = read(s, root)
     val untouched = target.join(
-      source.select(keys.map(col): _*).distinct(), keys, "left_anti")
+      source.select(keys.map(col): _*), keys, "left_anti")
     val upserts = source.filter(col(opCol) =!= "delete").drop(opCol)
     commit(untouched.unionByName(upserts), root)
   }

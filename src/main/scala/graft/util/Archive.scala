@@ -1,12 +1,16 @@
 package graft.util
 
 import java.io.{BufferedInputStream, BufferedOutputStream}
+import java.nio.channels.{Channels, FileChannel}
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.{Executors, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveInputStream, TarArchiveOutputStream}
-import org.apache.commons.compress.compressors.xz.{XZCompressorInputStream, XZCompressorOutputStream}
+import org.apache.commons.compress.compressors.xz.XZCompressorInputStream
+import org.apache.commons.io.IOUtils
+import org.tukaani.xz.{LZMA2Options, XZOutputStream}
 
 /** UTIL-1 — tar.xz snapshot archiving, the reference's backup-upload
   * packaging (runcommand.py:245-249: `tarfile.open(path, mode='w:xz');
@@ -16,26 +20,32 @@ import org.apache.commons.compress.compressors.xz.{XZCompressorInputStream, XZCo
   * transfer, exactly as the reference tars its database backup before the
   * object-store upload.
   *
-  * Scale posture: an archive is a single sequential stream, so this runs
-  * on ONE machine over ONE store snapshot — it is the transfer-packaging
-  * tail of a pipeline, never a data-plane operator (at 100 TB the data
-  * path ships partitioned parquet, not tarballs). Uses commons-compress +
-  * the xz codec from the Spark runtime classpath; entries are added in
-  * sorted path order so identical trees produce identical member order.
+  * Scale posture: this runs on ONE machine over ONE store snapshot — it
+  * is the transfer-packaging tail of a pipeline, never a data-plane
+  * operator (at 100 TB the data path ships partitioned parquet, not
+  * tarballs). The tar is cut into one contiguous byte range per core and
+  * each range is compressed concurrently as an independent xz stream; the
+  * `.xz` file is those streams concatenated in order, which the xz format
+  * allows and every xz reader (`xz -d`, Python's `tarfile`) decodes as one.
+  * Uses commons-compress + the xz codec from the Spark runtime classpath;
+  * entries are added in sorted path order so identical trees produce
+  * identical member order.
   */
 object Archive {
 
   /** Archive `srcDir` (recursively) to `outFile` as tar.xz; entry names
     * are `arcname/<relative path>` — the reference's
     * `tf.add(dir, arcname=db_name)` shape. Parent dirs of `outFile` are
-    * created. Returns the number of file entries written. */
+    * created; the tar is staged in a temp file beside it. Returns the
+    * number of file entries written. */
   def tarXz(srcDir: String, outFile: String, arcname: String): Int = {
     val root = Paths.get(srcDir)
     require(Files.isDirectory(root), s"not a directory: $srcDir")
-    val out = Paths.get(outFile)
-    Option(out.getParent).foreach(Files.createDirectories(_))
-    val tar = new TarArchiveOutputStream(new XZCompressorOutputStream(
-      new BufferedOutputStream(Files.newOutputStream(out))))
+    val out = Paths.get(outFile).toAbsolutePath
+    Files.createDirectories(out.getParent)
+    val tmp = Files.createTempFile(out.getParent, s"${out.getFileName}.", ".tar")
+    val tar = new TarArchiveOutputStream(
+      new BufferedOutputStream(Files.newOutputStream(tmp)))
     // parquet part files exceed tar's 100-char USTAR name limit routinely
     tar.setLongFileMode(TarArchiveOutputStream.LONGFILE_POSIX)
     var n = 0
@@ -52,8 +62,43 @@ object Archive {
         tar.closeArchiveEntry()
         n += 1
       }
-    } finally tar.close()
+      tar.close()
+      xzRanges(tmp, out)
+    } finally { tar.close(); Files.deleteIfExists(tmp) }
     n
+  }
+
+  /** `src` → `out` as one xz stream (preset 6) per core-sized byte range,
+    * compressed concurrently into temp files beside `out` (at most as many
+    * at once as the heap fits ~94 MiB preset-6 encoders), then appended in
+    * order. */
+  private def xzRanges(src: Path, out: Path): Unit = {
+    val cores = Runtime.getRuntime.availableProcessors
+    val fit = Runtime.getRuntime.maxMemory /
+      (new LZMA2Options(6).getEncoderMemoryUsage * 1024L)
+    val pool =
+      Executors.newFixedThreadPool(math.max(1L, math.min(cores, fit)).toInt)
+    val len = Files.size(src)
+    val step = math.max(1L, (len + cores - 1) / cores)
+    val parts = (0L until math.max(len, 1L) by step).map(off => off ->
+      Files.createTempFile(out.getParent, s"${out.getFileName}.", ".part"))
+    try {
+      val done = parts.map { case (off, part) => pool.submit(new Runnable {
+        def run(): Unit = {
+          val in = Channels.newInputStream(FileChannel.open(src).position(off))
+          val xz = new XZOutputStream(Files.newOutputStream(part),
+            new LZMA2Options(6))
+          try IOUtils.copyLarge(in, xz, 0L, math.min(step, len - off)): Unit
+          finally { in.close(); xz.close() }
+        }
+      }) }
+      val os = new BufferedOutputStream(Files.newOutputStream(out))
+      try done.zip(parts).foreach { case (f, (_, part)) =>
+        f.get(); Files.copy(part, os) } finally os.close()
+    } finally {
+      pool.shutdownNow(); pool.awaitTermination(1, TimeUnit.MINUTES)
+      parts.foreach(p => Files.deleteIfExists(p._2))
+    }
   }
 
   /** Extract a [[tarXz]] archive under `destDir`. Entry paths are
@@ -62,8 +107,11 @@ object Archive {
   def untarXz(archive: String, destDir: String): Int = {
     val dest = Paths.get(destDir).toAbsolutePath.normalize
     Files.createDirectories(dest)
-    val tar = new TarArchiveInputStream(new XZCompressorInputStream(
-      new BufferedInputStream(Files.newInputStream(Paths.get(archive)))))
+    // a [[tarXz]] archive is several concatenated xz streams
+    val tar = new TarArchiveInputStream(XZCompressorInputStream.builder()
+      .setInputStream(new BufferedInputStream(
+        Files.newInputStream(Paths.get(archive))))
+      .setDecompressConcatenated(true).get())
     var n = 0
     try {
       var entry = tar.getNextEntry

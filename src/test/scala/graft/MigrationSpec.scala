@@ -129,6 +129,32 @@ class MigrationSpec extends SparkSpec {
     assert(b6.value === null && b6.set)
   }
 
+  test("latest-wins: both DataFrame forms equal LatestWinsAgg folds") {
+    val s = spark
+    import s.implicits._
+    // values whose UTF-8 order differs from their UTF-16 order, plus NULL
+    val supp = new String(Character.toChars(0x10000))
+    val utf8Log = (rnd: scala.util.Random, n: Int) => (0 until n).map(_ =>
+      LwIn(Seq(null, "\uFFFD", supp, "a")(rnd.nextInt(4)),
+        if (rnd.nextBoolean()) "assert" else "retract", rnd.nextInt(3).toLong))
+    val rnd = new scala.util.Random(11)
+    val logs = for ((gname, gen) <- generators :+ ("utf8" -> utf8Log);
+                    k <- 0 until 60) yield (s"$gname:$k", gen(rnd, 1 + rnd.nextInt(12)))
+    val df = logs.flatMap { case (e, log) =>
+      log.map(l => (l.ts, e, "p", l.value, l.op)) }
+      .toDF("ts", "e", "path", "value", "op")
+    val one = MigrationOps.latestWins(df).collect()
+      .map(r => r.getString(0) -> r.getString(2)).toMap
+    assert(one === logs.flatMap { case (e, log) =>
+      val b = applyAll(LatestWinsAgg.zero, log)
+      if (b.op == "assert") Some(e -> b.value) else None }.toMap)
+    val many = MigrationOps.latestWinsMulti(df).collect()
+      .map(r => (r.getString(0), r.getString(2))).toSet
+    assert(many === logs.flatMap { case (e, log) =>
+      log.groupBy(_.value).toSeq.collect { case (v, g)
+        if applyAll(LatestWinsAgg.zero, g).op == "assert" => (e, v) } }.toSet)
+  }
+
   // ---- cardinality-many patch surgery (mig3b) ----
 
   test("apply-patches multi: -D removes one value, others survive, new adds") {
@@ -201,6 +227,120 @@ class MigrationSpec extends SparkSpec {
     assert(lines.head === "<html><body><h1>R&amp;D &lt;report&gt;</h1>")
     assert(lines.contains("<tr><td>a&lt;b&gt;&amp;c</td><td>2</td></tr>"))
     assert(lines.contains("<tr><td>plain</td><td>1</td></tr>"))
+  }
+
+  // ---- renderer parity: lines pinned from the Spark-side window renderers
+  // the driver-side ones replaced. A NULL cell drops out of its line (the
+  // old concat_ws skipped NULLs); widths count code points except the
+  // header label's UTF-16 length; ties on the count sort by the cells in
+  // UTF-8 order, NULL first. ----
+
+  private def edgeReports: Seq[(String, org.apache.spark.sql.DataFrame)] = {
+    val s = spark
+    import s.implicits._
+    val supp = new String(Character.toChars(0x10000))
+    val emoji = new String(Character.toChars(0x1F600))
+    Seq(
+      "null cell" -> Seq[(String, Option[Long], Option[Double])](
+        ("a", Some(2L), Some(1.5)), (null, Some(1L), Some(5.0)),
+        ("b", Some(3L), None), ("c", Some(-4L), Some(1e10)))
+        .toDF("class_name", "n_ref", "score"),
+      "null count" -> Seq[(String, Option[Long])](("a", Some(1L)), ("b", None),
+        ("c", Some(3L)), ("d", None)).toDF("class_name", "n"),
+      "duplicates" -> Seq(("a", 1L), ("a", 1L), ("b", 2L), ("b", 2L), ("c", 2L))
+        .toDF("class_name", "n"),
+      "ties" -> Seq(("b", 1L), ("a", 1L), ("c", 1L), ("B", 1L), (null, 1L),
+        ("z", 2L)).toDF("class_name", "n"),
+      "supplementary" -> Seq(("\uFFFD", 1L), (supp, 1L), ("a", 1L),
+        (supp + "x<", 22L)).toDF("class_name", s"n_$emoji"),
+      "empty" -> Seq.empty[(String, Long)].toDF("class_name", "n"))
+  }
+
+  private def rendered(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val rows = df.collect()
+    assert(rows.map(_.getLong(0)).toSeq === (1L to rows.length.toLong))
+    rows.map(_.getString(1)).toSeq
+  }
+
+  test("markdown report: NULLs, duplicates, ties, supplementary plane, empty") {
+    val want = Map(
+      "null cell" -> Seq(
+        "| class_name | n_ref |  score |",
+        "| ---------- | ----- | ------ |",
+        "|          b |     3 |",
+        "|          a |     2 |    1.5 |",
+        "|     1 |    5.0 |",
+        "|          c |    -4 | 1.0E10 |"),
+      "null count" -> Seq(
+        "| class_name | n |",
+        "| ---------- | - |",
+        "|          c | 3 |",
+        "|          a | 1 |",
+        "|          b |",
+        "|          d |"),
+      "duplicates" -> Seq(
+        "| class_name | n |",
+        "| ---------- | - |",
+        "|          b | 2 |",
+        "|          c | 2 |",
+        "|          a | 1 |"),
+      "ties" -> Seq(
+        "| class_name | n |",
+        "| ---------- | - |",
+        "|          z | 2 |",
+        "| 1 |",
+        "|          B | 1 |",
+        "|          a | 1 |",
+        "|          b | 1 |",
+        "|          c | 1 |"),
+      "supplementary" -> Seq(
+        "| class_name |  n_\uD83D\uDE00 |",
+        "| ---------- | ---- |",
+        "|        \uD800\uDC00x< |   22 |",
+        "|          a |    1 |",
+        "|          \uFFFD |    1 |",
+        "|          \uD800\uDC00 |    1 |"),
+      "empty" -> Seq(
+        "| class_name | n |",
+        "| ---------- | - |"))
+    for ((name, report) <- edgeReports)
+      assert(rendered(MigrationOps.markdownReport(report)) === want(name), name)
+  }
+
+  test("html report: NULLs, duplicates, ties, supplementary plane, empty") {
+    val head = (cols: String) => Seq("<html><body><h1>T&lt;&amp;&gt;</h1>",
+      "<table>", s"<thead><tr>$cols</tr></thead>", "<tbody>")
+    val tail = "</tbody></table></body></html>"
+    val want = Map(
+      "null cell" -> (head("<th>class_name</th><th>n_ref</th><th>score</th>") ++ Seq(
+        "<tr><td>b</td><td>3</td></tr>",
+        "<tr><td>a</td><td>2</td><td>1.5</td></tr>",
+        "<tr><td>1</td><td>5.0</td></tr>",
+        "<tr><td>c</td><td>-4</td><td>1.0E10</td></tr>", tail)),
+      "null count" -> (head("<th>class_name</th><th>n</th>") ++ Seq(
+        "<tr><td>c</td><td>3</td></tr>",
+        "<tr><td>a</td><td>1</td></tr>",
+        "<tr><td>b</td></tr>",
+        "<tr><td>d</td></tr>", tail)),
+      "duplicates" -> (head("<th>class_name</th><th>n</th>") ++ Seq(
+        "<tr><td>b</td><td>2</td></tr>",
+        "<tr><td>c</td><td>2</td></tr>",
+        "<tr><td>a</td><td>1</td></tr>", tail)),
+      "ties" -> (head("<th>class_name</th><th>n</th>") ++ Seq(
+        "<tr><td>z</td><td>2</td></tr>",
+        "<tr><td>1</td></tr>",
+        "<tr><td>B</td><td>1</td></tr>",
+        "<tr><td>a</td><td>1</td></tr>",
+        "<tr><td>b</td><td>1</td></tr>",
+        "<tr><td>c</td><td>1</td></tr>", tail)),
+      "supplementary" -> (head("<th>class_name</th><th>n_\uD83D\uDE00</th>") ++ Seq(
+        "<tr><td>\uD800\uDC00x&lt;</td><td>22</td></tr>",
+        "<tr><td>a</td><td>1</td></tr>",
+        "<tr><td>\uFFFD</td><td>1</td></tr>",
+        "<tr><td>\uD800\uDC00</td><td>1</td></tr>", tail)),
+      "empty" -> (head("<th>class_name</th><th>n</th>") :+ tail))
+    for ((name, report) <- edgeReports)
+      assert(rendered(MigrationOps.htmlReport(report, "T<&>")) === want(name), name)
   }
 
   // ---- checkpoint/resume runner (runcommand.py:389-409 semantics) ----

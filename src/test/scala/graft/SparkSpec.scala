@@ -24,4 +24,24 @@ trait SparkSpec extends AnyFunSuite {
     finally saved.foreach { case (k, v) =>
       v.fold(conf.unset(k))(conf.set(k, _)) }
   }
+
+  /** Spark jobs `body` starts on this thread. Job starts reach the status
+    * tracker asynchronously and in order, so a marker job runs after
+    * `body`: once the marker is visible, every job of `body` is too. */
+  def jobsRun(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    def inGroup(g: String)(f: => Any): Unit = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    inGroup(group)(body)
+    inGroup(s"$group-marker")(sc.parallelize(Seq(1), 1).count())
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(s"$group-marker").isEmpty) {
+      assert(System.nanoTime() < deadline, "marker job never reported")
+      Thread.sleep(5)
+    }
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
 }

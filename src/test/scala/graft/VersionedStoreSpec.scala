@@ -73,10 +73,11 @@ class VersionedStoreSpec extends SparkSpec {
     (1 to 4).foreach(i => VersionedStore.commit(Seq(i).toDF("k"), root))
     // resolve each version's actual data-dir name from its marker manifest
     // BEFORE vacuum (markers are gone after) — data dirs are data-<uuid>,
-    // so a guessed path would make the physical-deletion assert vacuous
+    // so a guessed path would make the physical-deletion assert vacuous;
+    // the manifest's first line names the dir, later lines are metadata
     def dataDirName(v: Long): String = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-        root, "_versions", f"$v%05d.commit"))).trim
+        root, "_versions", f"$v%05d.commit"))).linesIterator.next().trim
     val dropped = Seq(1L, 2L).map(dataDirName)
     val retained = Seq(3L, 4L).map(dataDirName)
     VersionedStore.vacuum(root, keep = 2)
@@ -288,5 +289,77 @@ class VersionedStoreSpec extends SparkSpec {
     VersionedStore.vacuum(root, keep = 10, orphanGraceMs = 0L)
     assert(orphans() === 0)
     assert(VersionedStore.read(s, root).count() === 1L)
+  }
+  // ---- the marker's schema line: read plans without an inference job ----
+
+  private def markerLines(root: String, v: Long): Seq[String] =
+    scala.io.Source.fromFile(f"$root/_versions/$v%05d.commit", "UTF-8")
+      .getLines().toSeq
+
+  /** The version's schema as parquet inference returns it. */
+  private def inferred(root: String, v: Long) =
+    spark.read.parquet(s"$root/${markerLines(root, v).head}").schema
+
+  test("schema line: commit, checked, txn, merge, rollback, empty — equals inference") {
+    val s = spark
+    import s.implicits._
+    val root = freshRoot()
+    // non-nullable ints, nested struct/array/map fields: the line must be
+    // nullable at every level, as inference is
+    def rows(ks: Int*) = ks.map(k => (k, s"v$k", Seq(k, k + 1), Map(s"m$k" -> k * 1.5)))
+      .toDF("k", "v", "arr", "m").withColumn("st", struct(col("k"), lit("x").as("c")))
+    val v1 = VersionedStore.commit(rows(1, 2, 3), root)
+    val v2 = VersionedStore.commitChecked(rows(4), root, col("k") > 0).toOption.get
+    val v3 = VersionedStore.commitTxn(rows(5), root, "app", 0L).toOption.get
+    val v4 = VersionedStore.merge(s, root,
+      rows(2, 6).withColumn("op", lit("upsert")), Seq("k"))
+    val v5 = VersionedStore.rollback(s, root, v1)
+    val v6 = VersionedStore.commit(rows(), root)
+    for (v <- Seq(v1, v2, v3, v4, v5, v6)) {
+      assert(markerLines(root, v).exists(_.startsWith("schema=")), s"v$v")
+      assert(VersionedStore.read(s, root, v).schema === inferred(root, v), s"v$v")
+    }
+    assert(VersionedStore.read(s, root, v4).count() === 3L)
+    assert(VersionedStore.read(s, root, v6).count() === 0L)
+    // the schema line is invisible to the txn and history readers
+    assert(VersionedStore.lastTxn(root, "app") === Some(0L))
+    assert(VersionedStore.history(s, root).filter(col("txn").isNotNull)
+      .collect().map(_.getString(2)).toSeq === Seq("txn=app=0"))
+  }
+
+  test("schema line: building the frame from read runs no job") {
+    val s = spark
+    import s.implicits._
+    val root = freshRoot()
+    VersionedStore.commit(Seq((1, "a")).toDF("k", "v"), root)
+    assert(jobsRun(VersionedStore.read(s, root)) === 0)
+    assert(jobsRun(inferred(root, 1L)) > 0, "inference is the job the line saves")
+  }
+
+  test("schema line: a hand-written marker without it still reads") {
+    val s = spark
+    import s.implicits._
+    val root = freshRoot()
+    Seq((7, "old")).toDF("k", "v").write.parquet(s"$root/data-legacy")
+    new java.io.File(s"$root/_versions").mkdirs()
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/_versions/00001.commit"),
+      "data-legacy\ntxn=app=3".getBytes("UTF-8"))
+    assert(VersionedStore.read(s, root).collect().map(r =>
+      (r.getInt(0), r.getString(1))).toSeq === Seq((7, "old")))
+    assert(VersionedStore.lastTxn(root, "app") === Some(3L))
+  }
+
+  test("schema line: a partitioned commitTxn records none and still infers") {
+    val s = spark
+    import s.implicits._
+    val root = freshRoot()
+    val v = VersionedStore.commitTxn(Seq((1, "a", 10L), (2, "b", 20L))
+      .toDF("k", "v", "p"), root, "app", 0L, partitionBy = Seq("p")).toOption.get
+    assert(!markerLines(root, v).exists(_.startsWith("schema=")))
+    val back = VersionedStore.read(s, root)
+    assert(back.columns.toSeq === Seq("k", "v", "p"))
+    assert(back.orderBy("k").collect().map(r =>
+      (r.getInt(0), r.getString(1), r.get(2).toString)).toSeq ===
+      Seq((1, "a", "10"), (2, "b", "20")))
   }
 }
