@@ -232,32 +232,49 @@ object VersionedStore {
     * matches, inserts when it doesn't). Target rows unmatched by any source
     * key carry over unchanged.
     *
-    * Plan shape: a left-anti join against the source keys (not deduped: an
-    * anti join only tests existence, and duplicate keys are rejected first)
-    * plus a union — no window, no global sort. At 100 TB both sides shuffle
-    * once on the key and AQE splits skewed keys; a small change set
-    * broadcasts. (Delta
-    * additionally file-skips so only touched files rewrite — with a
-    * partitioned store root the same effect comes from partition-pruning
-    * the target before the merge.) The result commits through the atomic
-    * marker protocol: readers see the pre- or post-merge snapshot, never an
-    * intermediate, and the pre-merge version stays time-travel readable. */
+    * Plan shape: a left-anti join of the target against the source keys
+    * (not deduped: an anti join only tests existence, and duplicate keys
+    * are rejected first) plus a union — no window, no global sort. The
+    * duplicate-key pass also counts the change set (an `observe` on the
+    * same job); when that count times the key row's width is within
+    * `spark.sql.autoBroadcastJoinThreshold`, the key side is broadcast,
+    * so the target is scanned narrowly into a broadcast anti-join and
+    * never shuffled: the cost follows the patch, not the store. A larger
+    * change set (or a threshold ≤ 0) plans the same join unhinted, where
+    * at 100 TB both sides shuffle once on the key and AQE splits skewed
+    * keys. (Delta additionally file-skips so only touched files rewrite —
+    * with a partitioned store root the same effect comes from
+    * partition-pruning the target before the merge.) The result commits
+    * through the atomic marker protocol: readers see the pre- or
+    * post-merge snapshot, never an intermediate, and the pre-merge version
+    * stays time-travel readable. */
   def merge(s: SparkSession, root: String, source: DataFrame,
             keys: Seq[String], opCol: String = "op"): Long = {
-    import org.apache.spark.sql.functions.{col, count, lit}
+    import org.apache.spark.sql.functions.{broadcast, col, count, lit}
     // Delta-parity contract: two source rows with the same key make the
     // outcome order-dependent — fail loudly instead of silently writing a
     // duplicate-keyed version. One small agg over the change set (the small
-    // side of the merge), not over the target.
-    val dup = source.groupBy(keys.map(col): _*)
+    // side of the merge), not over the target; it also counts the change
+    // set's rows, which sizes the anti-join below without another job.
+    val sourceRows = org.apache.spark.sql.Observation()
+    val dup = source.observe(sourceRows, count(lit(1)).as("rows"))
+      .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n")).filter(col("n") > 1).limit(1)
       .collect()
-    require(dup.isEmpty,
-      s"MERGE source has multiple rows for key ${dup.headOption.orNull} — " +
-        "dedupe the change set (e.g. latest-wins) before merging")
-    val target = read(s, root)
-    val untouched = target.join(
-      source.select(keys.map(col): _*), keys, "left_anti")
+    require(dup.isEmpty, {
+      val key = keys.zipWithIndex.map { case (k, i) => s"$k=${dup.head.get(i)}" }
+      s"MERGE source has ${dup.head.getLong(keys.size)} rows for key " +
+        key.mkString("(", ", ", ")") +
+        " — dedupe the change set (e.g. latest-wins) before merging"
+    })
+    val keySide = source.select(keys.map(col): _*)
+    // the planner's own size estimate: rows × the key row's default width
+    val threshold = s.sessionState.conf.autoBroadcastJoinThreshold
+    // no metric at all: the optimizer pruned a provably empty source
+    val rows = sourceRows.get.getOrElse("rows", 0L).asInstanceOf[Long]
+    val small = threshold > 0 && rows * keySide.schema.defaultSize <= threshold
+    val untouched = read(s, root).join(
+      if (small) broadcast(keySide) else keySide, keys, "left_anti")
     val upserts = source.filter(col(opCol) =!= "delete").drop(opCol)
     commit(untouched.unionByName(upserts), root)
   }

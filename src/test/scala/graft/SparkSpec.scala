@@ -25,23 +25,68 @@ trait SparkSpec extends AnyFunSuite {
       v.fold(conf.unset(k))(conf.set(k, _)) }
   }
 
-  /** Spark jobs `body` starts on this thread. Job starts reach the status
-    * tracker asynchronously and in order, so a marker job runs after
-    * `body`: once the marker is visible, every job of `body` is too. */
-  def jobsRun(body: => Any): Int = {
+  /** Runs `body` in job group `group`, then a one-task marker job in
+    * `<group>-marker`. Job events reach the status tracker and the
+    * listeners asynchronously but in order, so once the marker is seen,
+    * every job and task of `body` has been too. */
+  private def thenMarker(group: String)(body: => Any): Unit = {
     val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
     def inGroup(g: String)(f: => Any): Unit = {
       sc.setJobGroup(g, g)
       try f finally sc.clearJobGroup()
     }
     inGroup(group)(body)
     inGroup(s"$group-marker")(sc.parallelize(Seq(1), 1).count())
+  }
+
+  private def awaitMarker(seen: => Boolean): Unit = {
     val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (sc.statusTracker.getJobIdsForGroup(s"$group-marker").isEmpty) {
+    while (!seen) {
       assert(System.nanoTime() < deadline, "marker job never reported")
       Thread.sleep(5)
     }
+  }
+
+  /** Spark jobs `body` starts on this thread. */
+  def jobsRun(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    thenMarker(group)(body)
+    awaitMarker(sc.statusTracker.getJobIdsForGroup(s"$group-marker").nonEmpty)
     sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  /** Shuffle bytes written by the tasks of the Spark jobs `body` starts on
+    * this thread — the measured cost, with no plan string parsed. */
+  def shuffleBytesOf(body: => Any): Long = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val group = s"shuffle-${java.util.UUID.randomUUID()}"
+    val listener = new SparkListener {
+      val stages = scala.collection.mutable.Set.empty[Int]
+      val bytesByStage = scala.collection.mutable.Map.empty[Int, Long]
+      @volatile var markerSeen = false
+      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => stages ++= e.stageIds
+          case Some(g) if g == s"$group-marker" => markerSeen = true
+          case _ =>
+        }
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+        if (e.taskMetrics != null) bytesByStage(e.stageId) =
+          bytesByStage.getOrElse(e.stageId, 0L) +
+            e.taskMetrics.shuffleWriteMetrics.bytesWritten
+      }
+      def total: Long =
+        synchronized(stages.toSeq.map(bytesByStage.getOrElse(_, 0L)).sum)
+    }
+    sc.addSparkListener(listener)
+    try {
+      thenMarker(group)(body)
+      awaitMarker(listener.markerSeen)
+      listener.total
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -1,7 +1,14 @@
 package graft
 
 import graft.operators.VersionedStore
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Commit-protocol guarantees of the versioned snapshot store (SINK-9):
   * snapshot isolation across overwrites, invisibility of uncommitted data,
@@ -118,6 +125,114 @@ class VersionedStoreSpec extends SparkSpec {
       .collect().map(_.getInt(0)).toSeq === Seq(1, 2, 3))
   }
 
+  // ---- merge sizes its change set: a small one broadcasts its keys ----
+
+  private val MergeChanges = Seq(
+    (2, "b2", 21, "upsert"), (3, "c", 30, "delete"), (40000, "new", 1, "upsert"))
+
+  private case class Merged(root: String, before: Long, after: Long,
+                            shuffleBytes: Long, writePlan: SparkPlan)
+
+  /** Commits `n` rows (k, v, x), merges [[MergeChanges]] into them and
+    * captures the merge's shuffle bytes and its write's executed plan. */
+  private def mergeInto(n: Int): Merged = {
+    val s = spark
+    import s.implicits._
+    val root = freshRoot()
+    val before = VersionedStore.commit(spark.range(n).select(
+      col("id").cast("int").as("k"), concat(lit("v"), col("id")).as("v"),
+      (col("id") * 10).cast("int").as("x")), root)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan): Unit
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // RDD-backed, so the planner has no size for it — like the migrate
+    // patch step's change set, read by the `ace` source (a local relation's
+    // known size would let the planner broadcast it unaided)
+    val changes = spark.sparkContext.parallelize(MergeChanges)
+      .toDF("k", "v", "x", "op")
+    var after = 0L
+    spark.listenerManager.register(listener)
+    // query-execution callbacks share the listener queue that
+    // shuffleBytesOf awaits, so the merge's have arrived when it returns
+    val bytes = try shuffleBytesOf {
+      after = VersionedStore.merge(s, root, changes, Seq("k"))
+    } finally spark.listenerManager.unregister(listener)
+    // the queue may still hold the setup commit's callback: pick the
+    // write into the merged version's data dir
+    val dataDir = markerLines(root, after).head
+    val writes = plans.toArray(Array.empty[SparkPlan]).filter(p =>
+      nodes(p).exists {
+        case w: DataWritingCommandExec => w.cmd match {
+          case i: InsertIntoHadoopFsRelationCommand =>
+            i.outputPath.getName == dataDir
+          case _ => false
+        }
+        case _ => false
+      })
+    assert(writes.length === 1)
+    Merged(root, before, after, bytes, writes.head)
+  }
+
+  /** Every node of an executed plan, through AQE's stages. */
+  private def nodes(plan: SparkPlan): Seq[SparkPlan] = plan match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case p => p +: p.children.flatMap(nodes)
+  }
+
+  private def rows(root: String, v: Long) =
+    VersionedStore.read(spark, root, v).orderBy("k").collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getInt(2))).toSeq
+
+  test("merge: broadcast and shuffled anti-joins write the same version") {
+    val b = mergeInto(1000)
+    val sm = withSQLConf(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(mergeInto(1000))
+    assert(nodes(sm.writePlan).exists(_.isInstanceOf[ShuffleExchangeExec]),
+      "-1 must plan the shuffle join")
+    val base = (0 until 1000).map(i => (i, s"v$i", i * 10))
+    assert(rows(b.root, b.after) === (base.filterNot(r => Set(2, 3)(r._1)) ++
+      Seq((2, "b2", 21), (40000, "new", 1))).sortBy(_._1))
+    assert(rows(sm.root, sm.after) === rows(b.root, b.after))
+    // the pre-merge version is intact on both paths
+    for (m <- Seq(b, sm)) assert(rows(m.root, m.before) === base)
+  }
+
+  test("merge: a small change set never shuffles the target") {
+    val big = mergeInto(50000)
+    val ns = nodes(big.writePlan)
+    assert(ns.exists(_.isInstanceOf[BroadcastHashJoinExec]), big.writePlan)
+    assert(!ns.exists(_.isInstanceOf[ShuffleExchangeExec]), big.writePlan)
+    assert(graft.plans.PlanMetrics.shuffleBytesWritten(big.writePlan) === 0L)
+    // the only shuffle left is the change set's duplicate-key pass, so
+    // 5,000x the target rows cost not one shuffle byte more
+    assert(big.shuffleBytes === mergeInto(10).shuffleBytes)
+    val shuffled = withSQLConf(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(mergeInto(50000))
+    assert(shuffled.shuffleBytes > big.shuffleBytes * 10,
+      s"the shuffle join moves the target: ${shuffled.shuffleBytes} vs " +
+        s"${big.shuffleBytes}")
+  }
+
+  test("merge: an empty change set commits a version equal to the target") {
+    val s = spark
+    import s.implicits._
+    val none = Seq.empty[(Int, String, Int, String)]
+    // a local empty relation is pruned by the optimizer, so the count
+    // carries no metric at all; an RDD-backed one is empty only once it runs
+    for (empty <- Seq(none.toDF("k", "v", "x", "op"),
+        spark.sparkContext.parallelize(none).toDF("k", "v", "x", "op"))) {
+      val root = freshRoot()
+      val v1 = VersionedStore.commit(
+        Seq((1, "a", 10), (2, "b", 20)).toDF("k", "v", "x"), root)
+      assert(VersionedStore.merge(s, root, empty, Seq("k")) === v1 + 1)
+      assert(rows(root, v1 + 1) === rows(root, v1))
+    }
+  }
+
   test("rollback: restore is zero-copy and survives a refcounted vacuum") {
     val s = spark
     import s.implicits._
@@ -178,9 +293,10 @@ class VersionedStoreSpec extends SparkSpec {
     val v1 = VersionedStore.commit(Seq((1, "a")).toDF("k", "v"), root)
     val dupSource = Seq((1, "x", "upsert"), (1, "y", "upsert"))
       .toDF("k", "v", "op")
-    intercept[IllegalArgumentException] {
+    val e = intercept[IllegalArgumentException] {
       VersionedStore.merge(s, root, dupSource, Seq("k"))
     }
+    assert(e.getMessage.contains("2 rows for key (k=1)"), e.getMessage)
     // the failed merge must not have committed anything
     assert(VersionedStore.versions(root) === Seq(v1))
   }
