@@ -195,8 +195,17 @@ case class MinHashSig(child: Expression, k: Int)
 
   override def dataType: DataType = ArrayType(org.apache.spark.sql.types.LongType)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      MinHashSig.lanes(input.asInstanceOf[ArrayData], k))
+
+  override protected def withNewChildInternal(c: Expression): MinHashSig =
+    copy(child = c)
+}
+
+object MinHashSig {
+  /** The k signature lanes of a shingle array. */
+  def lanes(arr: ArrayData, k: Int): Array[Long] = {
     val n = arr.numElements()
     val mins = Array.fill(k)(Long.MaxValue)
     var i = 0
@@ -216,10 +225,46 @@ case class MinHashSig(child: Expression, k: Int)
       }
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(mins)
+    mins
+  }
+}
+
+/** `minhash_bands(array<string>, k, bands) -> array<bigint>`: the LSH band
+  * hashes of the k-lane [[MinHashSig]] signature, one per band of
+  * r = k / bands consecutive lanes. Band b is bit-identical to
+  * `xxhash64(slice(minhash_sig(x, k), b*r + 1, r))`: Spark's xxhash64 of
+  * an array chains `XXH64.hashLong` over its elements from seed 42.
+  * Emitting the bands from the kernel keeps the signature a loop-local
+  * array: a `minhash_sig` alias read once inside a `transform` lambda is
+  * inlined there by CollapseProject and recomputed for every band. */
+case class MinHashBands(child: Expression, k: Int, bands: Int)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+  require(bands > 0 && k >= bands,
+    s"minhash_bands needs 0 < bands <= k, got k=$k bands=$bands")
+
+  override def dataType: DataType =
+    ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
+
+  override def nullSafeEval(input: Any): Any = {
+    val sig = MinHashSig.lanes(input.asInstanceOf[ArrayData], k)
+    val r = k / bands
+    val out = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var h = 42L
+      var j = b * r
+      while (j < (b + 1) * r) {
+        h = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(sig(j), h)
+        j += 1
+      }
+      out(b) = h
+      b += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  override protected def withNewChildInternal(c: Expression): MinHashSig =
+  override protected def withNewChildInternal(c: Expression): MinHashBands =
     copy(child = c)
 }
 
@@ -622,15 +667,9 @@ object VectorExtensions {
     ext.injectFunction((
       new FunctionIdentifier("lsh_buckets"),
       new ExpressionInfo(classOf[LshBuckets].getName, "lsh_buckets"),
-      (children: Seq[Expression]) => {
-        def intLit(e: Expression): Int = e match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
-            v.toString.toInt
-          case other => throw new IllegalArgumentException(
-            s"lsh_buckets tables/k must be literals, got $other")
-        }
-        LshBuckets(children(0), intLit(children(1)), intLit(children(2)))
-      }))
+      (children: Seq[Expression]) => LshBuckets(children(0),
+        intLit("lsh_buckets", "tables", children(1)),
+        intLit("lsh_buckets", "k", children(2)))))
     ext.injectFunction((
       new FunctionIdentifier("word_ngrams"),
       new ExpressionInfo(classOf[WordNGrams].getName, "word_ngrams"),
@@ -664,12 +703,14 @@ object VectorExtensions {
     ext.injectFunction((
       new FunctionIdentifier("minhash_sig"),
       new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (children: Seq[Expression]) => MinHashSig(children(0), children(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
-          v.toString.toInt
-        case other => throw new IllegalArgumentException(
-          s"minhash_sig k must be a literal, got $other")
-      })))
+      (children: Seq[Expression]) =>
+        MinHashSig(children(0), intLit("minhash_sig", "k", children(1)))))
+    ext.injectFunction((
+      new FunctionIdentifier("minhash_bands"),
+      new ExpressionInfo(classOf[MinHashBands].getName, "minhash_bands"),
+      (children: Seq[Expression]) => MinHashBands(children(0),
+        intLit("minhash_bands", "k", children(1)),
+        intLit("minhash_bands", "bands", children(2)))))
     // PLAN-1: the custom top-k-per-group physical operator (heap-based,
     // map-side pruned) — see graft.plans.TopKPerGroup
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
@@ -678,5 +719,12 @@ object VectorExtensions {
     ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
     // RULE-2: a sort over a driver-held local relation sorts at plan time
     ext.injectOptimizerRule(_ => graft.plans.LocalSortFold)
+  }
+
+  private def intLit(fn: String, arg: String, e: Expression): Int = e match {
+    case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
+      v.toString.toInt
+    case other => throw new IllegalArgumentException(
+      s"$fn $arg must be a literal, got $other")
   }
 }

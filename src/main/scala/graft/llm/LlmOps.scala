@@ -881,47 +881,62 @@ object LlmOps extends QueryModule {
     docs.select(col("doc_id"), shingles3(col("text")).as("sh"))
       .filter(size(col("sh")) > 0)
 
-  /** Banded MinHash signature rows (doc_id, band_idx, band_hash) from a
-    * [[shingled]] table: k lanes in `bands` bands of r=k/bands rows; the
-    * band hash is xxhash64 over the band's consecutive signature lanes. */
-  def bandedOf(sh: DataFrame, k: Int = 128, bands: Int = 32): DataFrame = {
-    val r = k / bands
-    sh.select(col("doc_id"), minhashSig(col("sh"), k).as("sig"))
-      .select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          bi => xxhash64(slice(col("sig"), bi * r + 1, lit(r))))))
-      .withColumnRenamed("pos", "band_idx")
-      .withColumnRenamed("col", "band_hash")
-  }
+  /** MinHash signature table: one row (doc_id, bands) per [[shingled]]
+    * document, `bands` holding the LSH band hashes of its k-lane signature
+    * (`bands` bands of r = k/bands lanes, via the native minhash_bands
+    * kernel). */
+  def signatures(docs: DataFrame, k: Int = 128, bands: Int = 32): DataFrame =
+    shingled(docs).select(col("doc_id"),
+      call_function("minhash_bands", col("sh"), lit(k), lit(bands)).as("bands"))
 
-  /** MinHash-LSH near-duplicate pairs with exact-Jaccard verification.
-    * k lanes, b bands of r rows; emits pairs with exact J >= threshold. */
-  def minhashNearDupPairs(docs: DataFrame, threshold: Double,
-                          k: Int = 128, bands: Int = 32): DataFrame = {
-    // materialize shingles + banded signatures ONCE: both feed a self-join,
-    // and Spark would otherwise recompute the whole shingle→sig pipeline on
-    // each side. localCheckpoint here == "persist the signature table"
-    // (Delta/parquet stage output) in the 100 TB deployment.
-    // r22: the r20 band-table self-join restored — r21's per-bucket
-    // collect_list + local expansion removed NO exchange (10 → 10 in its
-    // own dumps) and dropping the banded checkpoint re-derived the whole
-    // signature pipeline: llm2 0.83x / llm12 0.80x (VERDICT r21 #4).
-    val sh = shingled(docs).localCheckpoint()
-    val banded = bandedOf(sh, k, bands).localCheckpoint()
-    val l = banded.select(col("doc_id").as("a_id"), col("band_idx"), col("band_hash"))
-    val rt = banded.select(col("doc_id").as("b_id"), col("band_idx"), col("band_hash"))
-    val candidates = l.join(rt, Seq("band_idx", "band_hash"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
-    // exact verification: join shingle sets back by id (arrays shipped once)
-    val sa = sh.select(col("doc_id").as("a_id"), col("sh").as("a_sh"))
-    val sb = sh.select(col("doc_id").as("b_id"), col("sh").as("b_sh"))
-    candidates.join(sa, "a_id").join(sb, "b_id")
+  /** Banded rows (doc_id, band_idx, band_hash) of a [[signatures]] table —
+    * the rows every band join and the streaming near-dup index key on. */
+  def bandedOf(sig: DataFrame): DataFrame =
+    sig.select(col("doc_id"),
+      posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
+
+  /** Exact-Jaccard verification of candidate pairs (`aId`, `bId`), whose
+    * ids are `doc_id`s of `aDocs` and `bDocs`. shingles3 is recomputed per
+    * candidate pair from the two documents' text, so no shingle set is
+    * kept for the documents that collide with nothing. */
+  private def verifiedPairs(candidates: DataFrame, aId: String,
+                            aDocs: DataFrame, bId: String, bDocs: DataFrame,
+                            threshold: Double): DataFrame = {
+    def text(docs: DataFrame, id: String) =
+      docs.select(col("doc_id").as(id), col("text").as(s"${id}_text"))
+    candidates.join(text(aDocs, aId), aId).join(text(bDocs, bId), bId)
+      .select(col(aId), col(bId), shingles3(col(s"${aId}_text")).as("a_sh"),
+        shingles3(col(s"${bId}_text")).as("b_sh"))
       .withColumn("jaccard",
         size(array_intersect(col("a_sh"), col("b_sh"))).cast("double") /
           size(array_union(col("a_sh"), col("b_sh"))))
       .filter(col("jaccard") >= threshold)
-      .select("a_id", "b_id", "jaccard")
+      .select(aId, bId, "jaccard")
+  }
+
+  /** MinHash-LSH near-duplicate pairs with exact-Jaccard verification.
+    * k lanes, b bands of r rows; emits pairs with exact J >= threshold.
+    *
+    * The one materialized table is the [[signatures]] table: one
+    * (doc_id, bands) row per shingled document, `bands` longs against a
+    * shingle set about three times the size of the text. localCheckpoint
+    * here == "persist the signature table" (Delta/parquet stage output) in
+    * the 100 TB deployment. Both sides of the band self-join posexplode
+    * that table, so the shingle → signature pipeline runs once per
+    * document and no per-band row is stored. Candidate pairs are few
+    * against the corpus, so verification re-shingles the text of candidate
+    * documents only ([[verifiedPairs]]) instead of keeping every
+    * document's shingle set for the handful that collide. */
+  def minhashNearDupPairs(docs: DataFrame, threshold: Double,
+                          k: Int = 128, bands: Int = 32): DataFrame = {
+    val banded = bandedOf(signatures(docs, k, bands).localCheckpoint())
+    val candidates = banded
+      .select(col("doc_id").as("a_id"), col("band_idx"), col("band_hash"))
+      .join(banded.select(col("doc_id").as("b_id"), col("band_idx"),
+        col("band_hash")), Seq("band_idx", "band_hash"))
+      .filter(col("a_id") < col("b_id"))
+      .select("a_id", "b_id").distinct()
+    verifiedPairs(candidates, "a_id", docs, "b_id", docs, threshold)
   }
 
   /** Cross-set MinHash-LSH near-dup pairs: arriving docs vs an already-
@@ -929,29 +944,20 @@ object LlmOps extends QueryModule {
     * (STRM-12). Band collisions between the two band tables produce
     * candidates (the join is history-bands ⋈ new-bands on (band_idx,
     * band_hash): shuffle scales with colliding bands, never |hist|×|new|),
-    * then candidates are exact-Jaccard verified via the shingle tables.
+    * then candidates are exact-Jaccard verified from their text.
     * In the streaming deployment the history band table is the persisted
     * index (read once per micro-batch, already bucketed by band_hash) and
-    * only the arriving micro-batch is shingled fresh. */
+    * only the arriving micro-batch is signed fresh. */
   def minhashCrossPairs(hist: DataFrame, arriving: DataFrame,
                         threshold: Double,
                         k: Int = 128, bands: Int = 32): DataFrame = {
-    val shH = shingled(hist).localCheckpoint()
-    val shN = shingled(arriving).localCheckpoint()
-    val candidates = bandedOf(shH, k, bands)
+    val candidates = bandedOf(signatures(hist, k, bands))
         .select(col("doc_id").as("hist_id"), col("band_idx"), col("band_hash"))
-      .join(bandedOf(shN, k, bands)
+      .join(bandedOf(signatures(arriving, k, bands))
         .select(col("doc_id").as("new_id"), col("band_idx"), col("band_hash")),
         Seq("band_idx", "band_hash"))
       .select("hist_id", "new_id").distinct()
-    candidates
-      .join(shH.select(col("doc_id").as("hist_id"), col("sh").as("h_sh")), "hist_id")
-      .join(shN.select(col("doc_id").as("new_id"), col("sh").as("n_sh")), "new_id")
-      .withColumn("jaccard",
-        size(array_intersect(col("h_sh"), col("n_sh"))).cast("double") /
-          size(array_union(col("h_sh"), col("n_sh"))))
-      .filter(col("jaccard") >= threshold)
-      .select("hist_id", "new_id", "jaccard")
+    verifiedPairs(candidates, "hist_id", hist, "new_id", arriving, threshold)
   }
 
   /** EXACT n-gram Jaccard near-dup via posting lists — the scale-correct
@@ -3420,6 +3426,8 @@ object LlmOps extends QueryModule {
         }
       }
     }
+    // the merge table is driver-held: the last round's corpus is dead
+    RoundCheckpointer.release(corpus)
     merges.result().toDF("round", "merge", "n", "x", "y").orderBy("round")
   }
 
@@ -3441,7 +3449,9 @@ object LlmOps extends QueryModule {
   /** Token array back out of the [[bpeWrap]] representation (pair
     * counting wants positional pairs). */
   private def bpeToks(sCol: Column): Column =
-    filter(split(trim(sCol, PairSep), PairSep + PairSep), t => t =!= "")
+    // btrim == trim(str, chars) without Spark 4's deprecated 2-arg TRIM
+    filter(split(call_function("btrim", sCol, lit(PairSep)), PairSep + PairSep),
+      t => t =!= "")
 
   /** Greedy left-to-right application of ONE merge rule (x, y) on the
     * [[bpeWrap]] string: `replace()` — left-to-right, non-overlapping —

@@ -226,7 +226,7 @@ object StreamOps extends QueryModule {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val newBands = LlmOps.bandedOf(LlmOps.shingled(batch))
+        val newBands = LlmOps.bandedOf(LlmOps.signatures(batch))
           .localCheckpoint()
         if (VersionedStore.latestVersion(indexDir).isDefined) {
           val idx = VersionedStore.read(batch.sparkSession, indexDir)

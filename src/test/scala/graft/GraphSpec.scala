@@ -329,11 +329,11 @@ class GraphSpec extends SparkSpec {
     // the cascade graph: two peeling rounds, then a converged round
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L))
       .toDF("x", "y")
-    val sc = spark.sparkContext
-    val before = sc.getRDDStorageInfo.map(_.id).toSet
-    val core = GraphOps.kcore(edges, k = 2, broadcastCap = 0)
-    core.collect()
-    val added = sc.getRDDStorageInfo.filterNot(i => before(i.id))
+    val (core, added) = storageAddedBy {
+      val c = GraphOps.kcore(edges, k = 2, broadcastCap = 0)
+      c.collect()
+      c
+    }
     try assert(added.length == 1,
       s"every round's drop set must be released: ${added.mkString("; ")}")
     finally RoundCheckpointer.release(core)

@@ -56,6 +56,15 @@ trait SparkSpec extends AnyFunSuite {
     sc.statusTracker.getJobIdsForGroup(group).length
   }
 
+  /** Runs `body`; returns its value and the RDDs it left in block storage
+    * (memos, checkpoints, caches not released by the time it returns). */
+  def storageAddedBy[A](body: => A): (A, Seq[org.apache.spark.storage.RDDInfo]) = {
+    val sc = spark.sparkContext
+    val before = sc.getRDDStorageInfo.map(_.id).toSet
+    val v = body
+    (v, sc.getRDDStorageInfo.filterNot(i => before(i.id)).toSeq)
+  }
+
   /** Shuffle bytes written by the tasks of the Spark jobs `body` starts on
     * this thread — the measured cost, with no plan string parsed. */
   def shuffleBytesOf(body: => Any): Long = {
