@@ -876,10 +876,15 @@ object LlmOps extends QueryModule {
   }
 
   /** Per-doc distinct-shingle table — the shared first stage of every
-    * MinHash path (self-join dedup, cross-set ingest, streaming index). */
+    * MinHash path (self-join dedup, cross-set ingest, streaming index).
+    * shingles3 is empty exactly when `split(text, " ")` has fewer than 3
+    * tokens, i.e. when the text holds fewer than two spaces, so the row
+    * filter is the codegen'd `LIKE '% % %'` (NULL text drops either way):
+    * a filter on `size(sh)` is pushed below the projection and tokenizes
+    * every document twice. */
   def shingled(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), shingles3(col("text")).as("sh"))
-      .filter(size(col("sh")) > 0)
+    docs.filter(col("text").like("% % %"))
+      .select(col("doc_id"), shingles3(col("text")).as("sh"))
 
   /** MinHash signature table: one row (doc_id, bands) per [[shingled]]
     * document, `bands` holding the LSH band hashes of its k-lane signature

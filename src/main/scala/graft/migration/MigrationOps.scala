@@ -97,14 +97,23 @@ object MigrationOps extends QueryModule {
 
   /** Read gzipped EDN log files into the changelog frame (gz codec is
     * transparent to the text source; one task per file, the reference's
-    * per-class dump parallelism). */
-  def ednTextDatoms(s: SparkSession, path: String): DataFrame =
-    s.read.text(path)
+    * per-class dump parallelism). A glob `path` is expanded here and its
+    * matched files are read: handed one glob, the file source stats it as
+    * a literal path while it looks for a streaming `_spark_metadata` dir,
+    * and logs a WARN with a FileNotFoundException stack trace per read.
+    * A glob that matches nothing is read as given, so it fails with the
+    * source's PATH_NOT_FOUND analysis error. */
+  def ednTextDatoms(s: SparkSession, path: String): DataFrame = {
+    val glob = new org.apache.hadoop.fs.Path(path)
+    val files = Option(glob.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .globStatus(glob)).toSeq.flatten.map(_.getPath.toString)
+    s.read.text((if (files.isEmpty) Seq(path) else files): _*)
       .select(parseEdn(col("value")).as("d"))
       .filter(col("d").isNotNull)
       .select(col("d.ts").as("ts"), col("d.e").as("e"),
         col("d.path").as("path"), col("d.value").as("value"),
         col("d.op").as("op"))
+  }
 
   /** Read an `.ace` dump file into a datom DataFrame (one row per datom).
     * Blank-line paragraph split via lineSep; explode = the UDTF surface

@@ -68,26 +68,41 @@ object Archive {
     n
   }
 
-  /** `src` → `out` as one xz stream (preset 6) per core-sized byte range,
-    * compressed concurrently into temp files beside `out` (at most as many
-    * at once as the heap fits ~94 MiB preset-6 encoders), then appended in
-    * order. */
+  /** Preset 6 with its dictionary cut to the next power of two ≥
+    * `rangeLen` (floor `DICT_SIZE_MIN`, ceiling preset 6's 8 MiB). A
+    * dictionary no shorter than its range can still reach every earlier
+    * byte of it, so the output size holds (migrate's backup archive reads
+    * 81.64–81.68 KB either way), while the encoder's match finder, sized
+    * by the dictionary, asks ~1 MiB for a 200 KiB range instead of
+    * ~94 MiB. */
+  private[graft] def rangeOptions(rangeLen: Long): LZMA2Options = {
+    val opts = new LZMA2Options(6)
+    val want = math.min(math.max(rangeLen, 1L), opts.getDictSize.toLong)
+    opts.setDictSize(math.max(LZMA2Options.DICT_SIZE_MIN,
+      (java.lang.Long.highestOneBit(want - 1) << 1).toInt))
+    opts
+  }
+
+  /** `src` → `out` as one xz stream per core-sized byte range
+    * ([[rangeOptions]]), compressed concurrently into temp files beside
+    * `out` (at most as many at once as the heap fits their encoders), then
+    * appended in order. */
   private def xzRanges(src: Path, out: Path): Unit = {
     val cores = Runtime.getRuntime.availableProcessors
-    val fit = Runtime.getRuntime.maxMemory /
-      (new LZMA2Options(6).getEncoderMemoryUsage * 1024L)
-    val pool =
-      Executors.newFixedThreadPool(math.max(1L, math.min(cores, fit)).toInt)
     val len = Files.size(src)
     val step = math.max(1L, (len + cores - 1) / cores)
+    val opts = rangeOptions(step)
+    val fit = Runtime.getRuntime.maxMemory /
+      (opts.getEncoderMemoryUsage * 1024L)
+    val pool =
+      Executors.newFixedThreadPool(math.max(1L, math.min(cores, fit)).toInt)
     val parts = (0L until math.max(len, 1L) by step).map(off => off ->
       Files.createTempFile(out.getParent, s"${out.getFileName}.", ".part"))
     try {
       val done = parts.map { case (off, part) => pool.submit(new Runnable {
         def run(): Unit = {
           val in = Channels.newInputStream(FileChannel.open(src).position(off))
-          val xz = new XZOutputStream(Files.newOutputStream(part),
-            new LZMA2Options(6))
+          val xz = new XZOutputStream(Files.newOutputStream(part), opts)
           try IOUtils.copyLarge(in, xz, 0L, math.min(step, len - off)): Unit
           finally { in.close(); xz.close() }
         }

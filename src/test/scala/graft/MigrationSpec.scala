@@ -42,6 +42,33 @@ class MigrationSpec extends SparkSpec {
       Seq(AceDatom("CDS:c1", "A.B.C", "", "assert")))
   }
 
+  test("edn logs: a glob reads the rows of its expanded file list; a glob " +
+      "with no match still fails at analysis") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-edn")
+    def gz(name: String, lines: String*): String = {
+      val f = dir.resolve(name)
+      val out = new java.util.zip.GZIPOutputStream(
+        java.nio.file.Files.newOutputStream(f))
+      try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+      finally out.close()
+      f.toString
+    }
+    val a = gz("a.edn.gz", """[:db/add "Gene:G1" :name "alpha" 100]""",
+      "not a datom", """[:db/retract "Gene:G1" :name "alpha" 200]""")
+    val b = gz("b.edn.gz", """[:db/add "Gene:G2" :name "beta" 150]""")
+    gz("c.edn.txt.gz", """[:db/add "Gene:G3" :name "other" 300]""")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val globbed = MigrationOps.ednTextDatoms(spark, s"$dir/*.edn.gz")
+    assert(rows(globbed) === rows(MigrationOps.ednTextDatoms(spark, a)
+      .union(MigrationOps.ednTextDatoms(spark, b))))
+    assert(rows(globbed) === Seq("[100,Gene:G1,name,alpha,assert]",
+      "[150,Gene:G2,name,beta,assert]", "[200,Gene:G1,name,alpha,retract]"))
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      MigrationOps.ednTextDatoms(spark, s"$dir/*.nomatch.gz"))
+    assert(e.getCondition === "PATH_NOT_FOUND", e.getMessage)
+  }
+
   // ---- latest-wins resume invariant (the reference's checkpoint/restart
   // correctness condition: replaying a prefix then the rest == replaying
   // the whole log). Holds because the Aggregator's merge is associative +

@@ -58,9 +58,13 @@ class MinHashSpec extends SparkSpec {
     val exprs = plan.flatMap(_.expressions)
     val kernels = exprs.flatMap(_.collect {
       case e: graft.functions.MinHashBands => e })
+    // the document filter must not tokenize: one shingles3 per document
+    val tokenizers = exprs.flatMap(_.collect {
+      case e: graft.functions.Shingles3 => e })
     val lambdas = exprs.flatMap(_.collect {
       case l: org.apache.spark.sql.catalyst.expressions.LambdaFunction => l })
-    assert(kernels.length === 1 && lambdas.isEmpty, plan.toString)
+    assert(kernels.length === 1 && tokenizers.length === 1 && lambdas.isEmpty,
+      plan.toString)
   }
 
   test("llm2: the near-dup self-join stores one signature row per shingled " +

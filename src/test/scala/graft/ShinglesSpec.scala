@@ -31,4 +31,20 @@ class ShinglesSpec extends SparkSpec {
     // repeated shingles deduped, first-occurrence order
     assert(rows(4).getSeq[String](0).count(_ == "a b c") === 1)
   }
+
+  test("shingled keeps exactly the documents whose shingle set is non-empty") {
+    val s = spark
+    import s.implicits._
+    val texts = Seq(null, "", " ", "  ", "a b", "a  b", " a ", "a\nb c",
+      "a\nb\nc d e", "a b c d", "x  y z", "%_ \\ x")
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val ref = docs.select(col("doc_id"), LlmOps.shingles3(col("text")).as("sh"))
+      .filter(size(col("sh")) > 0)
+    val got = LlmOps.shingled(docs)
+    assert(got.schema === ref.schema)
+    assert(got.orderBy("doc_id").collect().toSeq ===
+      ref.orderBy("doc_id").collect().toSeq)
+    assert(got.count() === 7L)
+  }
 }

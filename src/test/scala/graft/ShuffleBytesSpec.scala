@@ -12,6 +12,16 @@ class ShuffleBytesSpec extends SparkSpec {
 
   private val Sf001 = "/root/testdata/sf0.01"
 
+  test("Graft.session compresses shuffle blocks and parquet files with zstd") {
+    // zstd is the session DEFAULT (Graft.session) for every shuffle,
+    // broadcast and spill block and every parquet file; the byte pins
+    // below are measured under it, so assert nothing overrode it
+    assert(spark.sparkContext.getConf.get("spark.io.compression.codec") ===
+      "zstd", "Graft.session must compress shuffle blocks with zstd")
+    assert(spark.conf.get("spark.sql.parquet.compression.codec") === "zstd",
+      "Graft.session must write parquet with zstd")
+  }
+
   test("join11 core: bucketed co-located join + agg writes ZERO shuffle " +
       "bytes (the orderBy tail is the query's only exchange)") {
     // run the registered query once so the bucketed tables exist

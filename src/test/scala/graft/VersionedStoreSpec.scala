@@ -443,6 +443,28 @@ class VersionedStoreSpec extends SparkSpec {
       .collect().map(_.getString(2)).toSeq === Seq("txn=app=0"))
   }
 
+  test("commit: the version's parquet footers report zstd column chunks") {
+    val s = spark
+    import s.implicits._
+    import scala.jdk.CollectionConverters._
+    val root = freshRoot()
+    val v = VersionedStore.commit(
+      Seq((1, "a", 1.5), (2, "b", 2.5)).toDF("k", "v", "x").repartition(2), root)
+    val dir = new org.apache.hadoop.fs.Path(s"$root/${markerLines(root, v).head}")
+    val conf = s.sparkContext.hadoopConfiguration
+    val parts = dir.getFileSystem(conf).listStatus(dir).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet"))
+    val codecs = parts.toSeq.flatMap { p =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+      try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        .map(_.getCodec.name).toSeq
+      finally r.close()
+    }
+    assert(codecs.nonEmpty, parts.mkString(", "))
+    assert(codecs.toSet === Set("ZSTD"), codecs.mkString(", "))
+  }
+
   test("schema line: building the frame from read runs no job") {
     val s = spark
     import s.implicits._
