@@ -60,7 +60,7 @@ object AnnSweep {
       .getOrElse(Seq(4, 6, 8, 12))
     val skipCells = args.lift(3).contains("nocells")
     val s: SparkSession = Graft.session("graft-ann-sweep")
-    val e = Tables.embeddings(s, d).localCheckpoint()
+    val e = RoundCheckpointer.checkpoint(Tables.embeddings(s, d))
     val exact = (0L until NQ.toLong).map(q => q -> exactTop20(e, q)).toMap
     val stores = Seq(
       ("raw", graft.llm.LlmOps.memoIvfpqStore(s, d), false),
@@ -109,8 +109,8 @@ object AnnSweep {
         // checkpoint: ivfpqBuild consumes cents twice (store write + the
         // assignment crossJoin) — uncheckpointed, the k-means would run
         // twice per k
-        cents0 = Some(graft.llm.LlmOps.ivfCentroids(e, k = k)
-          .localCheckpoint()),
+        cents0 = Some(RoundCheckpointer.checkpoint(
+          graft.llm.LlmOps.ivfCentroids(e, k = k))),
         codebook0 = Some(graft.llm.LlmOps.memoCodebook(s, d, 8)))
       for (nprobe <- Seq(8, k / 2).distinct; shortlist <- Seq(200)) {
         val t0 = System.nanoTime()

@@ -59,7 +59,7 @@ object SparkEntry {
     * projections and so hides faults in them. The frame build is timed
     * with the action: memo stages build eagerly inside it. Every
     * unpinned cached block is dropped afterwards, failed or not, so each
-    * query runs free of its predecessors' dead `localCheckpoint` blocks
+    * query runs free of its predecessors' dead checkpoint blocks
     * (the pinned [[StageMemo]] stages survive). Returns (seconds, the
     * action's result), or `name: RootCauseClass: first message line`. */
   def run[T](spark: SparkSession, name: String, sfDir: String)(

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Per-session memo for deliberately-shared pipeline stages.
   *
@@ -15,12 +15,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * recompute.
   *
   * [[frame]] materializes a DataFrame stage once per (session, key) via
-  * `localCheckpoint` and pins it ([[BlockHygiene]]) so [[SparkEntry.run]]'s
-  * between-query block drop doesn't evict it. [[value]] memoizes an
-  * arbitrary build artifact (e.g. the path of a written index store).
-  * Entries and their build-ledger lines evict ([[evict]]) when the owning
-  * SparkContext ends, so short-lived sessions stay unreachable once
-  * stopped.
+  * [[RoundCheckpointer.checkpoint]] (serialized, zstd blocks) and pins it
+  * ([[BlockHygiene]]) so [[SparkEntry.run]]'s between-query block drop
+  * doesn't evict it. [[value]] memoizes an arbitrary build artifact (e.g.
+  * the path of a written index store).
+  * Entries, their pins and their build-ledger lines evict ([[evict]]) when
+  * the owning SparkContext ends, so short-lived sessions stay unreachable
+  * once stopped.
   *
   * Builds run OUTSIDE the map update: stages nest (importedState builds on
   * patchedLog; the llm28d store build reads the memoized codebook), so a
@@ -65,19 +66,20 @@ object StageMemo {
       })
     }
 
-  /** Forget every memo entry and build-ledger line of `s`. */
+  /** Forget every memo entry, frame pin and build-ledger line of `s`. */
   private[graft] def evict(s: SparkSession): Unit = {
-    cache.keys.filter(_._1 eq s).foreach(cache.remove)
+    cache.keys.filter(_._1 eq s).flatMap(cache.remove).foreach {
+      case ds: Dataset[_] => BlockHygiene.unpin(ds.toDF()); case _ => () }
     buildLog.keys.filter(_._1 eq s).foreach(buildLog.remove)
   }
 
-  /** The stage frame for (session, key): built, localCheckpointed, and
+  /** The stage frame for (session, key): built, checkpointed, and
     * pinned on first use; returned from the memo afterwards.
     *
     * Pin AFTER winning the putIfAbsent (ADVICE r21): the loser of a build
     * race is released through its RDD ([[RoundCheckpointer.release]] —
     * `Dataset.unpersist` only uncaches via the CacheManager, which never
-    * held a localCheckpoint's blocks), and because the loser was never
+    * held a checkpoint's blocks), and because the loser was never
     * pinned its blocks stay eligible for [[BlockHygiene.dropUnpinned]]
     * either way. */
   def frame(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
@@ -85,7 +87,7 @@ object StageMemo {
       case Some(df) => df.asInstanceOf[DataFrame]
       case None =>
         hookEviction(s)
-        val cp = logged(s, key)(build.localCheckpoint())
+        val cp = logged(s, key)(RoundCheckpointer.checkpoint(build))
         cache.putIfAbsent((s, key), cp) match {
           case Some(winner) =>
             RoundCheckpointer.release(cp) // lost the race: free the blocks
@@ -93,12 +95,6 @@ object StageMemo {
           case None => BlockHygiene.pin(cp)
         }
     }
-
-  // r21's partitionedFrame / PartitionedCheckpoint (fixed-N stored-layout
-  // claims over localCheckpoint scans) were removed in r22: the layout
-  // pinned every consumer stage at N=shuffle.partitions tasks, forfeiting
-  // AQE coalescing and skew handling — driver-measured severe regressions
-  // on graph1/graph4/graph5 (VERDICT r21 #1-3).
 
   /** Memoized non-frame artifact (a written store's path, a collected
     * scalar). `build` runs at most once per (session, key) absent a race;

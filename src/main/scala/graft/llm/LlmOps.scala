@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{QueryModule, RoundCheckpointer, Tables}
+import graft.RoundCheckpointer.Checkpointed
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -129,7 +130,7 @@ object LlmOps extends QueryModule {
     * trains on a hash-sample of the corpus, not all of it — the per-query
     * assignment pass is the only full-corpus pass. Each round is one
     * assign-and-average sweep over the training set with the previous
-    * round's centroids localCheckpoint'd (plan depth stays O(1), the
+    * round's centroids checkpointed (plan depth stays O(1), the
     * RoundCheckpointer discipline); rounds is a TRAINING-time knob — the
     * probe path never pays for it, it just serves tighter cells (AnnSweep
     * r15: 4 rounds lifted probe recall@20 at nprobe=8 from 0.68 to 0.79
@@ -187,7 +188,7 @@ object LlmOps extends QueryModule {
       val next = cents.join(means, Seq("cent_id"), "left")
         .select(col("cent_id"),
           coalesce(col("cent_new"), col("cent")).as("cent"))
-      if (r == rounds) next else next.localCheckpoint()
+      if (r == rounds) next else next.checkpointed()
     }
   }
 
@@ -341,7 +342,7 @@ object LlmOps extends QueryModule {
       .select(col("doc_id"),
         explode(split(lower(col("text")), "[^a-z0-9]+")).as("tk"))
       .filter(col("tk") =!= "")
-      .localCheckpoint() // dl and tf both consume the tokenize chain
+      .checkpointed() // dl and tf both consume the tokenize chain
     val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dlen"))
     val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
       (sum("dlen").cast("double") / count(lit(1))).as("avgdl"))
@@ -380,7 +381,7 @@ object LlmOps extends QueryModule {
         explode(split(lower(col("text")), "[^a-z0-9]+")).as("tok"))
       .filter(col("tok") =!= "")
       .select(col("doc_id"), col("lang"), xxhash64(col("tok")).as("th"))
-      .localCheckpoint() // uni and the scoring join both consume the chain
+      .checkpointed() // uni and the scoring join both consume the chain
     val uni = toks.groupBy("th").agg(count(lit(1)).as("n"))
     val total = uni.agg(sum("n").cast("double").as("total"))
     toks.join(uni, "th").crossJoin(total)
@@ -423,7 +424,7 @@ object LlmOps extends QueryModule {
 
   /** llm44's top-m cosine cell posting — the pre-checkpoint fragment of
     * [[semdedupKept]], exposed so PlanSpec can pin its plan BEFORE the
-    * localCheckpoint truncates visibility (the r19 llm3eb lesson: an
+    * checkpoint truncates visibility (the r19 llm3eb lesson: an
     * rn-keeping window hid an n·k embedding-carrying sort behind the
     * checkpoint). Same drop-rn heap shape as [[ivfAssignCellsCos]] but
     * `rn <= m`: RULE-1 plans the TopKPerGroup operator, no per-vector
@@ -462,7 +463,7 @@ object LlmOps extends QueryModule {
   private[graft] def semdedupKept(e: DataFrame, cents: DataFrame,
                                   tau: Double = 0.45): DataFrame = {
     val cells = semdedupCells(e, cents)
-      .localCheckpoint() // both sides of the within-cell self-join
+      .checkpointed() // both sides of the within-cell self-join
     val pa = cells.select(col("cell"), col("vec_id").as("a_id"),
       col("embedding").as("a_emb"))
     val pb = cells.select(col("cell"), col("vec_id").as("b_id"),
@@ -651,7 +652,7 @@ object LlmOps extends QueryModule {
     // cents0/codebook0: already-materialized training artifacts (the
     // StageMemo share) — skip retraining; ignored where they can't apply
     // (a residual codebook is trained on residuals, never pre-supplied)
-    val cents = cents0.getOrElse(ivfCentroids(train).localCheckpoint())
+    val cents = cents0.getOrElse(ivfCentroids(train).checkpointed())
     cents.write.mode("overwrite").parquet(s"$store/centroids")
     // rn dropped right after the cut → RULE-1 heap rewrite applies
     val wCell = Window.partitionBy("vec_id")
@@ -671,9 +672,9 @@ object LlmOps extends QueryModule {
     val cb =
       if (residual)
         pqTrain(encodeInput.select("vec_id", "embedding"), m = m, dim = dim)
-          .localCheckpoint()
+          .checkpointed()
       else codebook0.getOrElse(
-        pqTrain(train, m = m, dim = dim).localCheckpoint())
+        pqTrain(train, m = m, dim = dim).checkpointed())
     cb.write.mode("overwrite").parquet(s"$store/codebook")
     pqEncodeLong(encodeInput.select("vec_id", "embedding"), cb,
         m = m, dim = dim)
@@ -924,17 +925,17 @@ object LlmOps extends QueryModule {
     *
     * The one materialized table is the [[signatures]] table: one
     * (doc_id, bands) row per shingled document, `bands` longs against a
-    * shingle set about three times the size of the text. localCheckpoint
-    * here == "persist the signature table" (Delta/parquet stage output) in
-    * the 100 TB deployment. Both sides of the band self-join posexplode
-    * that table, so the shingle → signature pipeline runs once per
-    * document and no per-band row is stored. Candidate pairs are few
-    * against the corpus, so verification re-shingles the text of candidate
-    * documents only ([[verifiedPairs]]) instead of keeping every
-    * document's shingle set for the handful that collide. */
+    * shingle set about three times the size of the text. Its checkpoint
+    * (serialized, zstd) == "persist the signature table" (Delta/parquet
+    * stage output) in the 100 TB deployment. Both sides of the band
+    * self-join posexplode that table, so the shingle → signature pipeline
+    * runs once per document and no per-band row is stored. Candidate
+    * pairs are few against the corpus, so verification re-shingles the
+    * text of candidate documents only ([[verifiedPairs]]) instead of
+    * keeping every document's shingle set for the handful that collide. */
   def minhashNearDupPairs(docs: DataFrame, threshold: Double,
                           k: Int = 128, bands: Int = 32): DataFrame = {
-    val banded = bandedOf(signatures(docs, k, bands).localCheckpoint())
+    val banded = bandedOf(signatures(docs, k, bands).checkpointed())
     val candidates = banded
       .select(col("doc_id").as("a_id"), col("band_idx"), col("band_hash"))
       .join(banded.select(col("doc_id").as("b_id"), col("band_idx"),
@@ -985,7 +986,7 @@ object LlmOps extends QueryModule {
   def ngramJaccardPairs(docs: DataFrame, threshold: Double,
                         dfCap: Int = 1000): DataFrame = {
     val sh = docs.select(col("doc_id"), explode(shingles3(col("text"))).as("shingle"))
-      .localCheckpoint()  // feeds sizes + the posting-list grouping
+      .checkpointed()  // feeds sizes + the posting-list grouping
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     postingPairCounts(sh, dfCap, ordered = true)
       .join(sizes.select(col("doc_id").as("a_id"), col("n_sh").as("n_a")), "a_id")
@@ -1231,7 +1232,7 @@ object LlmOps extends QueryModule {
       .withColumn("h", xxhash64(col("seg")))
       // feeds BOTH the df aggregate and the reassembly join — without
       // this the tokenize+explode chain runs twice (self-join recompute)
-      .localCheckpoint()
+      .checkpointed()
     val df = segs.groupBy("h").agg(countDistinct("doc_id").as("df"))
     segs.join(df, "h")
       .groupBy("doc_id")
@@ -1248,14 +1249,14 @@ object LlmOps extends QueryModule {
   /** Laplace-smoothed bigram LM per doc (llm29, llm29u). */
   private def bigramLm(src: DataFrame): DataFrame = {
     val arr = filter(split(lower(col("text")), "[^a-z0-9]+"), t => t =!= "")
-    val docs = src.select(col("doc_id"), arr.as("arr")).localCheckpoint()
+    val docs = src.select(col("doc_id"), arr.as("arr")).checkpointed()
     val bi = docs.filter(size(col("arr")) >= 2)
       .select(col("doc_id"), explode(zip_with(
         slice(col("arr"), lit(1), size(col("arr")) - 1),
         slice(col("arr"), lit(2), size(col("arr")) - 1),
         (x, y) => struct(x.as("w1"), y.as("w2")))).as("p"))
       .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .localCheckpoint()
+      .checkpointed()
     val uni = bi.groupBy("w1").agg(count(lit(1)).as("cu"))
     val bc = bi.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
     val vocab = docs.select(explode(col("arr")).as("tok"))
@@ -1391,7 +1392,7 @@ object LlmOps extends QueryModule {
         .select(col("doc_id"),
           explode(split(lower(col("text")), "[^a-z0-9]+")).as("tok"))
         .filter(col("tok") =!= "")
-        .localCheckpoint() // uni and the scoring join both consume the chain
+        .checkpointed() // uni and the scoring join both consume the chain
       val uni = toks.groupBy("tok").agg(count(lit(1)).as("n"))
       val total = uni.agg(sum("n").cast("double").as("total"))
       toks.join(uni, "tok").crossJoin(total)
@@ -1495,7 +1496,7 @@ object LlmOps extends QueryModule {
     "llm2e_containment" -> ((s, d) => {
       val sh = Tables.documents(s, d)
         .select(col("doc_id"), explode(shingles3(col("text"))).as("shingle"))
-        .localCheckpoint() // feeds sizes + the posting-list grouping
+        .checkpointed() // feeds sizes + the posting-list grouping
       val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
       // directed pairs via the shared posting-list expansion (see
       // [[postingPairCounts]]) — one exchange instead of the former
@@ -1556,7 +1557,7 @@ object LlmOps extends QueryModule {
       val sh = Tables.documents(s, d)
         .select(col("doc_id"),
           call_function("simhash64", col("text")).as("simhash"))
-        .localCheckpoint()
+        .checkpointed()
       val bands = sh.select(col("doc_id"), col("simhash"),
         explode(array((0 until 4).map(i =>
           struct(lit(i).as("band_idx"),
@@ -1880,7 +1881,7 @@ object LlmOps extends QueryModule {
       val pairs = minhashNearDupPairs(docs, threshold = 0.8)
       val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
         .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-        .localCheckpoint()
+        .checkpointed()
       val labels = connectedComponents(edges)
       docs.select(col("doc_id"))
         .join(labels.select(col("node").as("doc_id"), col("comp")),
@@ -1905,7 +1906,7 @@ object LlmOps extends QueryModule {
       import s.implicits._
       val k = 8
       val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-        .localCheckpoint() // scanned once per round
+        .checkpointed() // scanned once per round
       // empty/short corpora terminate the traversal, never throw
       var chosen =
         if (emb.isEmpty) Vector.empty[(Int, Long, Option[Double])]
@@ -1983,7 +1984,7 @@ object LlmOps extends QueryModule {
       val pairs = minhashNearDupPairs(docs, threshold = 0.8)
       val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
         .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-        .localCheckpoint()
+        .checkpointed()
       val labels = connectedComponents(edges)
       docs.select(col("doc_id"), length(col("text")).as("n_chars"))
         .join(labels.select(col("node").as("doc_id"), col("comp")),
@@ -2223,7 +2224,7 @@ object LlmOps extends QueryModule {
         .repartitionByRange(32, col("source"), col("quality").desc,
           col("doc_id"))
         .withColumn("pid", spark_partition_id())
-        .localCheckpoint() // offsets AND the local scan read one layout
+        .checkpointed() // offsets AND the local scan read one layout
       val offs = parted.groupBy("source", "pid")
         .agg(sum("n_tokens").as("ptoks"))
         .withColumn("off", coalesce(sum("ptoks").over(
@@ -2761,7 +2762,7 @@ object LlmOps extends QueryModule {
         .repartitionByRange(32, col("lang"), col("logprob").desc,
           col("doc_id"))
         .withColumn("pid", spark_partition_id())
-        .localCheckpoint() // offsets AND ranking read the same layout
+        .checkpointed() // offsets AND ranking read the same layout
       val offs = parted.groupBy("lang", "pid").agg(count(lit(1)).as("cnt"))
         .withColumn("off", coalesce(sum("cnt").over(
           Window.partitionBy("lang").orderBy("pid")
@@ -3037,7 +3038,7 @@ object LlmOps extends QueryModule {
       val base = Tables.documents(s, d)
         .select(col("doc_id"), col("text"), col("n_chars"),
           size(split(col("text"), " ")).cast("long").as("n_tokens"))
-        .localCheckpoint() // all four stages + the gram stream scan it
+        .checkpointed() // all four stages + the gram stream scan it
       val gated = base.filter(col("n_chars") >= 100 && col("n_tokens") >= 20)
       val keepIds = gated
         .groupBy(lower(trim(col("text"))).as("k"))
@@ -3094,7 +3095,7 @@ object LlmOps extends QueryModule {
         .select(col("doc_id"), col("source"),
           pmod(conv(substring(md5(col("tok").cast("binary")), 1, 8),
             16, 10).cast("long"), lit(B)).as("b"))
-        .localCheckpoint()
+        .checkpointed()
       val rc = toks.groupBy("b").agg(count(lit(1)).as("cr"))
       val tc = toks.filter(col("source") === "src0")
         .groupBy("b").agg(count(lit(1)).as("ct"))
@@ -3169,7 +3170,7 @@ object LlmOps extends QueryModule {
       val parted = docs
         .repartitionByRange(32, col("qppm"), col("doc_id"))
         .withColumn("pid", spark_partition_id())
-        .localCheckpoint() // offsets AND numbering read the same layout
+        .checkpointed() // offsets AND numbering read the same layout
       val offs = parted.groupBy("pid").agg(count(lit(1)).as("cnt"))
         .withColumn("off", coalesce(sum("cnt").over(
           Window.orderBy("pid")

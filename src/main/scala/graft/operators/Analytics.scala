@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryModule, Tables}
+import graft.RoundCheckpointer.Checkpointed
 
 /** Behavioral / time-series analytics operators (SURVEY.md §2.18).
   *
@@ -511,7 +512,7 @@ object Analytics extends QueryModule {
         .agg(expr("percentile(value, 0.5)").as("med"))
       val dev = e.join(broadcast(med), "event_type")
         .withColumn("adev", abs(col("value") - col("med")))
-        .localCheckpoint()
+        .checkpointed()
       val mad = dev.groupBy("event_type")
         .agg(expr("percentile(adev, 0.5)").as("mad"))
       dev.join(broadcast(mad), "event_type")
@@ -588,11 +589,11 @@ object Analytics extends QueryModule {
             count(lit(1)).over(wh).cast("double"))
         .select(col("hour_idx"),
           (col("detr") - col("seasonal")).as("resid"))
-        .localCheckpoint() // feeds med, mad, and the flag pass
+        .checkpointed() // feeds med, mad, and the flag pass
       val med = base.agg(expr("percentile(resid, 0.5)").as("med"))
       val dev = base.crossJoin(broadcast(med))
         .withColumn("adev", abs(col("resid") - col("med")))
-        .localCheckpoint()
+        .checkpointed()
       val mad = dev.agg(expr("percentile(adev, 0.5)").as("mad"))
       dev.crossJoin(broadcast(mad))
         .withColumn("rz", (col("resid") - col("med")) /
@@ -693,7 +694,7 @@ object Analytics extends QueryModule {
     // facts — the er1 discipline); the pair graph is smaller still.
     "er2_entity_clusters" -> ((s, d) => {
       val names = blockedNames(s, d)
-        .localCheckpoint() // pair join + final rollup both read it
+        .checkpointed() // pair join + final rollup both read it
       val a = names.select(col("blk"), col("name").as("name_a"))
       val b = names.select(col("blk"), col("name").as("name_b"))
       val pairs = a.join(b, Seq("blk"))
@@ -704,7 +705,7 @@ object Analytics extends QueryModule {
       val nb = pairs.select(col("name_a").as("v"), col("name_b").as("u"))
         .unionByName(
           pairs.select(col("name_b").as("v"), col("name_a").as("u")))
-        .localCheckpoint() // scanned every round
+        .checkpointed() // scanned every round
       val rc = new graft.RoundCheckpointer
       var lbl = nb.select("v").distinct().withColumn("lbl", col("v"))
       for (_ <- 1 to 6) {
@@ -749,7 +750,7 @@ object Analytics extends QueryModule {
         .select(col("h"),
           ((col("n") * col("y") - col("t")) * lit(1000000))
             .cast("decimal(19,0)").as("c"))
-        .localCheckpoint() // both sides of the lag join + the denominator
+        .checkpointed() // both sides of the lag join + the denominator
       val den = c.agg(sum(col("c") * col("c")).as("den"))
       val lagged = c.select(col("h"), col("c").as("ca"),
           explode(sequence(lit(1), lit(12))).as("lag"))
@@ -883,7 +884,7 @@ object Analytics extends QueryModule {
       val hourly = Tables.events(s, d)
         .groupBy(expr("ts div 3600000000000").as("h"))
         .agg(sum(col("value").cast("decimal(28,12)")).as("y"))
-        .localCheckpoint() // both join sides + the count scalar
+        .checkpointed() // both join sides + the count scalar
       val n = hourly.count() // O(hours) scalar, metadata-sized
       val m = n * (n - 1) / 2
       val k = ((m + 1) / 2).toInt // lower median, 1-indexed k-th smallest

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryModule, RoundCheckpointer, Tables}
+import graft.RoundCheckpointer.Checkpointed
 
 /** GRAPH-1 — weighted PageRank, expressed relationally (SURVEY.md §2.19).
   *
@@ -74,7 +75,7 @@ object GraphOps extends QueryModule {
     // prebuilt = (norm, vstat) already materialized (the graph1 memo) —
     // the normalized edge table and vertex inventory are derived datasets
     // of the edge list, identical for every (damping, iters) run.
-    // r22: plain localCheckpoint again — the r21 fixed-N partitioned
+    // r22: plain checkpoint again — the r21 fixed-N partitioned
     // layout (PartitionedCheckpoint by dst) removed one Exchange per
     // round but pinned every round at N=shuffle.partitions tasks, which
     // forbids AQE coalescing/skew-splitting: driver-measured 0.27x at 32
@@ -84,7 +85,7 @@ object GraphOps extends QueryModule {
       .join(edges.groupBy("src").agg(sum("w").as("outw")), "src")
       .select(col("src"), col("dst"),
         (col("w").cast("double") / col("outw")).as("p"))
-      .localCheckpoint())
+      .checkpointed())
     // ONE shuffle inventories the vertex space AND flags out-edge presence
     // (src rows carry out=1, dst rows out=0; max() ORs them) — replacing
     // the former distinct + left_anti pair of checkpoints. verts/dangling
@@ -93,7 +94,7 @@ object GraphOps extends QueryModule {
       edges.select(col("src").as("v"), lit(1).as("out"))
         .unionByName(edges.select(col("dst").as("v"), lit(0).as("out")))
         .groupBy("v").agg(max("out").as("out"))
-        .localCheckpoint())
+        .checkpointed())
     val verts = vstat.select("v")
     val n = vstat.count()
     val dangling = vstat.filter(col("out") === 0).select("v")
@@ -202,11 +203,11 @@ object GraphOps extends QueryModule {
       .join(edges.groupBy("src").agg(sum("w").as("outw")), "src")
       .select(col("src"), col("dst"), col("w").cast("long").as("w"),
         col("outw").cast("long").as("outw"))
-      .localCheckpoint())
+      .checkpointed())
     val verts = prebuilt.map(_._2).getOrElse(
       edges.select(col("src").as("v"))
         .unionByName(edges.select(col("dst").as("v")))
-        .distinct().localCheckpoint())
+        .distinct().checkpointed())
     val n = verts.count()
     // empty graph → empty rank vector (empty inputs are routine at scale;
     // EmptyAudit pins that no query throws on a zero-row lake)
@@ -250,7 +251,7 @@ object GraphOps extends QueryModule {
     */
   def sssp(edges: DataFrame, source: Long, maxHops: Int = 4): DataFrame = {
     val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .localCheckpoint()
+      .checkpointed()
     // dist rows ≤ reachable vertices ≤ distinct dst count: one setup agg
     // decides the broadcast gate, same cap and rationale as pagerank
     val bcast =
@@ -324,7 +325,7 @@ object GraphOps extends QueryModule {
     * order's distinct part set (collect_set dedups in the aggregate), then
     * its v ≠ u pairs, expanded locally (fan-out bounded by basket size²),
     * grouped per vertex (collect_set dedups across orders). */
-  private def partNbrs(s: SparkSession, d: String): DataFrame =
+  private[graft] def partNbrs(s: SparkSession, d: String): DataFrame =
     graft.StageMemo.frame(s, s"graph.part_nbrs.$d") {
       Tables.lineitem(s, d)
         .groupBy(col("l_orderkey"))
@@ -407,7 +408,7 @@ object GraphOps extends QueryModule {
       .select(
         when(col("dx") <= col("dy"), col("x")).otherwise(col("y")).as("u"),
         when(col("dx") <= col("dy"), col("y")).otherwise(col("x")).as("v"))
-      .localCheckpoint() // scanned 3× by the self-joins below
+      .checkpointed() // scanned 3× by the self-joins below
     // The wedge STREAM (Σ outdeg² rows — 72M at sf0.1 from 1.2M edges) is
     // the big intermediate; the edge TABLE is 16 B/row. While the edges
     // fit the broadcast budget, hash them into both probes so the wedge
@@ -468,7 +469,7 @@ object GraphOps extends QueryModule {
             broadcastCap: Long = PagerankBroadcastVertexCap): DataFrame = {
     val adj = nbrLists(edges0)
     if (rowCount(adj) <= broadcastCap)
-      edgesOf(peelNbrs(adj.localCheckpoint(), k, maxRounds))
+      edgesOf(peelNbrs(adj.checkpointed(), k, maxRounds))
     else peelEdges(edges0, k, maxRounds)
   }
 
@@ -522,7 +523,7 @@ object GraphOps extends QueryModule {
       // materialize the (small) drop set once per round — the degree agg
       // would otherwise recompute for the isEmpty probe AND each anti-join
       val drop = degrees(edges).filter(col("deg") < k).select("v")
-        .localCheckpoint()
+        .checkpointed()
       if (drop.isEmpty) converged = true
       else edges = rc.step(edges
         .join(drop.withColumnRenamed("v", "x"), Seq("x"), "left_anti")
@@ -556,7 +557,7 @@ object GraphOps extends QueryModule {
     val nb = prebuiltAdj.getOrElse(
       edges.select(col("x").as("v"), col("y").as("u"))
         .unionByName(edges.select(col("y").as("v"), col("x").as("u")))
-        .localCheckpoint()) // scanned every round
+        .checkpointed()) // scanned every round
     var labels = nb.select(col("v")).distinct().withColumn("lbl", col("v"))
     val small = labels.count() <= broadcastCap
     def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df

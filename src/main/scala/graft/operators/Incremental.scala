@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryModule, Tables}
+import graft.RoundCheckpointer.Checkpointed
 
 /** IVM-1 — incremental view maintenance (SURVEY.md §2.17).
   *
@@ -98,8 +99,8 @@ object Incremental extends QueryModule {
     // each feed feeds 2-3 terms below; materialize ONCE (churn-sized) so a
     // lazily-derived feed (changeFeed's full-outer diff, or a CDC log
     // scan) isn't recomputed per referencing term
-    val ordersFeed = ordersFeed0.localCheckpoint()
-    val custFeed = custFeed0.localCheckpoint()
+    val ordersFeed = ordersFeed0.checkpointed()
+    val custFeed = custFeed0.checkpointed()
     val post = col("_change_type").isin("insert", "update_postimage")
     val oKeys = ordersFeed.select("o_orderkey").distinct()
     val cKeys = custFeed.select("c_custkey").distinct()
@@ -142,8 +143,8 @@ object Incremental extends QueryModule {
   def joinViewDelta(vOld: DataFrame, oOld: DataFrame,
                     ordersFeed0: DataFrame, custFeed0: DataFrame,
                     custOld: DataFrame): DataFrame = {
-    val ordersFeed = ordersFeed0.localCheckpoint()
-    val custFeed = custFeed0.localCheckpoint()
+    val ordersFeed = ordersFeed0.checkpointed()
+    val custFeed = custFeed0.checkpointed()
     val post = col("_change_type").isin("insert", "update_postimage")
     val oKeys = ordersFeed.select("o_orderkey").distinct()
     val cKeys = custFeed.select("c_custkey").distinct()
@@ -219,14 +220,14 @@ object Incremental extends QueryModule {
       lit(1L)).otherwise(lit(-1L))
     val delta = feed.groupBy(col(groupCol), col(valueCol))
       .agg(sum(sign).as("dn")).filter(col("dn") =!= 0)
-      .localCheckpoint() // churn-sized; feeds both merges below
+      .checkpointed() // churn-sized; feeds both merges below
     val merged = oldSupport
       .join(delta, Seq(groupCol, valueCol), "full_outer")
       .select(col(groupCol), col(valueCol),
         coalesce(col("n"), lit(0L)).as("n_old"),
         (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L)))
           .as("n_new"))
-      .localCheckpoint() // support + crossings both read it
+      .checkpointed() // support + crossings both read it
     val newSupport = merged.filter(col("n_new") > 0)
       .select(col(groupCol), col(valueCol), col("n_new").as("n"))
     val crossings = merged
@@ -282,7 +283,7 @@ object Incremental extends QueryModule {
         sum(col(valueCol).cast("decimal(18,2)") * sign).as("dsum"))
       .filter(col("dn") =!= 0 ||
         col("dsum") =!= lit(0).cast("decimal(18,2)"))
-      .localCheckpoint() // churn-sized; feeds the merge AND changedGroups
+      .checkpointed() // churn-sized; feeds the merge AND changedGroups
     val newSupport = oldSupport
       .join(delta, Seq(groupCol, memberCol), "full_outer")
       .select(col(groupCol), col(memberCol),
@@ -578,7 +579,7 @@ object Incremental extends QueryModule {
         r
       }
       val feed = VersionedStore.changeFeed(s, root, 1L, 2L,
-        Seq("o_orderkey")).localCheckpoint()
+        Seq("o_orderkey")).checkpointed()
       def kind(ct: String, label: String) =
         feed.filter(col("_change_type") === ct)
           .agg(count(lit(1)).as("n"))

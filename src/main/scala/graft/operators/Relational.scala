@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Det, QueryModule, Tables}
+import graft.RoundCheckpointer.Checkpointed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -475,7 +476,7 @@ object Relational extends QueryModule {
         .withColumn("skew_key",
           when(pmod(col("l_orderkey"), lit(10)) < 9, lit(0L))
             .otherwise(pmod(col("l_orderkey"), lit(97))))
-      // localCheckpoint materializes the 97-row dim: without it the dim's
+      // the checkpoint materializes the 97-row dim: without it the dim's
       // OWN aggregate partitioning (already on skew_key) is reused by the
       // join, the shuffle sits below the agg instead of under the join's
       // sort, and OptimizeSkewedJoin's pattern (sort-over-shuffle-stage on
@@ -483,7 +484,7 @@ object Relational extends QueryModule {
       val dim = Tables.part(s, d)
         .groupBy(pmod(col("p_partkey"), lit(97)).as("skew_key"))
         .agg(count(lit(1)).as("dim_n"))
-        .localCheckpoint()
+        .checkpointed()
       // the rollup key is UNRELATED to the join key: a groupBy on
       // skew_key would be satisfied by the join's output partitioning,
       // and splitting the skewed partition would then ADD an exchange —
@@ -635,7 +636,7 @@ object Relational extends QueryModule {
       val cum = counts
         .withColumn("cum_end", sum("cnt").over(w) - 1)
         .withColumn("cum_start", col("cum_end") - col("cnt") + 1)
-        .localCheckpoint()  // tiny (distinct values); reused per percentile
+        .checkpointed()  // tiny (distinct values); reused per percentile
       val n = cum.groupBy("l_returnflag").agg(sum("cnt").as("n"))
       val targets = n.crossJoin(Seq(0.25, 0.5, 0.75).toDF("p"))
         .withColumn("r", col("p") * (col("n") - 1))
@@ -801,7 +802,7 @@ object Relational extends QueryModule {
         .withColumn("h", md5(col("event_id").cast("string").cast("binary")))
         .repartitionByRange(32, col("h"), col("event_id"))
         .withColumn("pid", spark_partition_id())
-        .localCheckpoint() // offsets AND numbering read the same layout
+        .checkpointed() // offsets AND numbering read the same layout
       val offsets = parted.groupBy("pid").agg(count(lit(1)).as("n"))
         .withColumn("off", coalesce(sum("n").over(
           Window.orderBy("pid")
@@ -1199,11 +1200,9 @@ object Relational extends QueryModule {
         .select("day", "users_7d").orderBy("day")
     }),
 
-    // PROF-1: single-pass column profiler (ANALYZE TABLE analogue). All
-    // per-column stats come out of ONE aggregate over ONE scan — the
-    // multi-distinct compiles to an Expand (k projections of the same
-    // scan), not k separate jobs; at 100 TB that is one pass over the lake
-    // instead of four. stack() pivots the 1-row aggregate into the
+    // PROF-1: column profiler (ANALYZE TABLE analogue). Every per-column
+    // stat comes out of two pipelined passes over the lineitem scan (below),
+    // not one job per column. stack() pivots the 1-row aggregate into the
     // catalog-friendly long form; min/max surface as strings so one schema
     // covers heterogeneous column types.
     "prof1_table_stats" -> ((s, d) => {

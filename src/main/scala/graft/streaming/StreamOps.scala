@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{Det, QueryModule, Tables}
+import graft.RoundCheckpointer.Checkpointed
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -227,7 +228,7 @@ object StreamOps extends QueryModule {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val newBands = LlmOps.bandedOf(LlmOps.signatures(batch))
-          .localCheckpoint()
+          .checkpointed()
         if (VersionedStore.latestVersion(indexDir).isDefined) {
           val idx = VersionedStore.read(batch.sparkSession, indexDir)
           newBands
@@ -426,7 +427,7 @@ object StreamOps extends QueryModule {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         val spark = batch0.sparkSession
-        val batch = batch0.localCheckpoint() // both splits scan it
+        val batch = batch0.checkpointed() // both splits scan it
         val oFeed = batch.filter(col("tbl") === "orders")
           .select("_change_type", "o_orderkey", "o_custkey", "o_totalprice")
         val cFeed = batch.filter(col("tbl") === "customer")
@@ -732,7 +733,7 @@ object StreamOps extends QueryModule {
     if (pendingSwap.isDefined) {
       val c = pendingSwap.get
       val gdirC = s"$store/gen-$c/centroids" // committed before the codes
-      val cents = VersionedStore.read(s, gdirC).localCheckpoint()
+      val cents = VersionedStore.read(s, gdirC).checkpointed()
       // RECONCILE before the flip: any batch ingested between the crash
       // and this resume was binned by the then-served (old) generation;
       // the original (retrainApp, c) codes tag would replay-skip a
@@ -750,7 +751,7 @@ object StreamOps extends QueryModule {
         .join(snap.select("vec_id").distinct(), "vec_id")
       // one assignment scan feeds both the stale probe and the fix write
       val want = graft.llm.LlmOps.ivfAssignCells(vecsAll, cents)
-        .withColumnRenamed("cell", "want").localCheckpoint()
+        .withColumnRenamed("cell", "want").checkpointed()
       val stale = snap.join(want, "vec_id")
         .filter(col("cell") =!= col("want")).limit(1).count() > 0
       if (stale) {
@@ -827,12 +828,12 @@ object StreamOps extends QueryModule {
       // step-2 reassignment scans it again — uncheckpointed, each of
       // those would re-execute the corpus⋈ids join
       val vecs = corpus.select(col("vec_id"), col("embedding"))
-        .join(ids, "vec_id").localCheckpoint()
+        .join(ids, "vec_id").checkpointed()
       if (VersionedStore.lastTxn(gdir, retrainApp).forall(_ < txnId))
         VersionedStore.commitTxn(
           graft.llm.LlmOps.ivfCentroids(vecs), gdir, retrainApp, txnId)
       // Step 2 — reassignment computed against the stored generation
-      val cents = VersionedStore.read(s, gdir).localCheckpoint()
+      val cents = VersionedStore.read(s, gdir).checkpointed()
       val reassigned = codes.drop("cell")
         .join(graft.llm.LlmOps.ivfAssignCells(vecs, cents), "vec_id")
         .select(col("vec_id").cast("long"), col("sub").cast("int"),
@@ -1184,18 +1185,18 @@ object StreamOps extends QueryModule {
     // the oracle (plain per-user COUNT(*)); the txn tag makes it a no-op.
     "strm15_idempotent_ingest" -> ((s, d) => {
       import graft.operators.VersionedStore
-      val tmp = graft.TmpStores.scratch("strm15")
       // r22: the 4-file SOURCE fixture is setup, not the ingest under
-      // test — written once per (session, sf-dir) like every other
-      // fixture memo (cost in the memo ledger). The store + checkpoint
-      // stay per-call scratch dirs: each run's stream must ingest all 4
-      // batches into a FRESH store for the replay-idempotence proof.
+      // test — written once per (session, sf-dir) into its own scratch
+      // dir, like every other fixture memo (cost in the memo ledger). The
+      // store + checkpoint stay per-call scratch dirs: each run's stream
+      // must ingest all 4 batches into a FRESH store (replay proof).
       val src = graft.StageMemo.value(s, s"strm15.src.$d") {
-        val p = s"$tmp/src"
+        val p = graft.TmpStores.scratch("strm15src")
         Tables.events(s, d).select("user_id", "event_id")
           .repartition(4).write.parquet(p)
         p
       }
+      val tmp = graft.TmpStores.scratch("strm15")
       val schema = s.read.parquet(src).schema
       runIdempotentIngest(
         s.readStream.schema(schema).option("maxFilesPerTrigger", 1)

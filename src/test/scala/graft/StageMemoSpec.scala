@@ -22,4 +22,25 @@ class StageMemoSpec extends SparkSpec {
       assert(builds === 2, "the next frame call after evict must build again")
     } finally StageMemo.evict(s)
   }
+
+  test("a frame's pin does not survive evict: dropUnpinned then frees its " +
+      "blocks") {
+    val s = spark.newSession()
+    val sc = spark.sparkContext
+    val (memo, added) = storageAddedBy(
+      StageMemo.frame(s, "stagememo-pin-spec")(s.range(3).toDF()))
+    try {
+      assert(added.length === 1, added.mkString("; "))
+      val id = added.head.id
+      BlockHygiene.dropUnpinned(s)
+      assert(sc.getPersistentRDDs.contains(id), "a live memo stays pinned")
+      StageMemo.evict(s)
+      BlockHygiene.dropUnpinned(s)
+      assert(!sc.getPersistentRDDs.contains(id),
+        "an evicted session's pin must not exempt its RDD id")
+    } finally {
+      StageMemo.evict(s)
+      RoundCheckpointer.release(memo)
+    }
+  }
 }
