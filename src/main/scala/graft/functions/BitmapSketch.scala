@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
@@ -157,30 +157,4 @@ case class BitmapAndCardinality(left: Expression, right: Expression)
   }
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): BitmapAndCardinality = copy(l, r)
-}
-
-object BitmapExtensions {
-  def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("bitmap_agg"),
-      new ExpressionInfo(classOf[BitmapAgg].getName, "bitmap_agg"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c, Literal(m, _)) => BitmapAgg(c, m.toString.toInt)
-        case _ => throw new IllegalArgumentException(
-          "bitmap_agg(col, maxKeyLiteral)")
-      }))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier(
-        "bitmap_cardinality"),
-      new ExpressionInfo(classOf[BitmapCardinality].getName,
-        "bitmap_cardinality"),
-      (children: Seq[Expression]) => BitmapCardinality(children.head)))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier(
-        "bitmap_and_cardinality"),
-      new ExpressionInfo(classOf[BitmapAndCardinality].getName,
-        "bitmap_and_cardinality"),
-      (children: Seq[Expression]) =>
-        BitmapAndCardinality(children(0), children(1))))
-  }
 }

@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
@@ -24,7 +24,7 @@ import org.apache.spark.sql.types._
   * add non-negative cross terms), and est ≤ exact + (e/w)·N_A·N_B with
   * probability 1−e^−d — ApproxSpec pins both sides of that contract.
   *
-  * Execution mirrors [[ThetaSketchAgg]]: a TypedImperativeAggregate whose
+  * Execution is a TypedImperativeAggregate (like [[DdsAgg]]) whose
   * partial state (d×w longs, ~80 KB at the defaults) merges by element-
   * wise add, so map-side combine ships one sketch per task across the
   * shuffle, never rows. Layout: serialized as [depth, w0 counts…,
@@ -214,35 +214,4 @@ case class CmsEstimate(left: Expression, right: Expression)
       s"graft.functions.CmsProbe.estimate($b, (long)($k))")
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): CmsEstimate = copy(l, r)
-}
-
-/** Registration (same extension point as ThetaExtensions). */
-object CmsExtensions {
-  private def intLit(e: Expression, what: String): Int = e match {
-    case Literal(v, _) => v.toString.toInt
-    case other => throw new IllegalArgumentException(
-      s"$what must be a literal, got $other")
-  }
-  def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("cms_sketch_agg"),
-      new ExpressionInfo(classOf[CmsAgg].getName, "cms_sketch_agg"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => CmsAgg(c)
-        case Seq(c, d, w) => CmsAgg(c, intLit(d, "cms_sketch_agg depth"),
-          intLit(w, "cms_sketch_agg width"))
-        case _ => throw new IllegalArgumentException(
-          "cms_sketch_agg(col[, depth, width])")
-      }))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("cms_inner_product"),
-      new ExpressionInfo(classOf[CmsInnerProduct].getName, "cms_inner_product"),
-      (children: Seq[Expression]) =>
-        CmsInnerProduct(children(0), children(1))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("cms_estimate"),
-      new ExpressionInfo(classOf[CmsEstimate].getName, "cms_estimate"),
-      (children: Seq[Expression]) =>
-        CmsEstimate(children(0), children(1))))
-  }
 }

@@ -6,7 +6,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
 
 /** AGG-23 — DDSketch-style quantile sketch (Masson/Rim/Lee, VLDB 2019) as
   * first-class mergeable aggregate state: the QUANTILE complement to the
-  * engine's cardinality sketches (HLL agg16, theta agg22, CMS prof2b).
+  * engine's cardinality sketches (HLL agg16, Spark's theta agg22, CMS prof2b).
   *
   * Why this sketch and not t-digest / built-in approx_percentile: the
   * log-bucket mapping `i = ⌈ln(x)/ln(γ)⌉`, γ = (1+α)/(1−α) is
@@ -369,40 +369,4 @@ case class DdsCdf(left: Expression, right: Expression)
     DdSketch.cdf(b.asInstanceOf[Array[Byte]], x.asInstanceOf[Double])
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): DdsCdf = copy(l, r)
-}
-
-/** Registration (same extension point as Vector/Theta/Cms extensions). */
-object DdsExtensions {
-  private def doubleLit(e: Expression, what: String): Double = e match {
-    case Literal(v, _) => v.toString.toDouble
-    case other => throw new IllegalArgumentException(
-      s"$what must be a literal, got $other")
-  }
-  def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("dds_sketch_agg"),
-      new ExpressionInfo(classOf[DdsAgg].getName, "dds_sketch_agg"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => DdsAgg(c)
-        case Seq(c, a) => DdsAgg(c, doubleLit(a, "dds_sketch_agg alpha"))
-        case _ => throw new IllegalArgumentException("dds_sketch_agg(col[, alpha])")
-      }))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("dds_merge_agg"),
-      new ExpressionInfo(classOf[DdsMergeAgg].getName, "dds_merge_agg"),
-      (children: Seq[Expression]) => DdsMergeAgg(children.head)))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("dds_quantile_bucket"),
-      new ExpressionInfo(classOf[DdsQuantileBucket].getName, "dds_quantile_bucket"),
-      (children: Seq[Expression]) =>
-        DdsQuantileBucket(children(0), children(1))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("dds_quantile"),
-      new ExpressionInfo(classOf[DdsQuantile].getName, "dds_quantile"),
-      (children: Seq[Expression]) => DdsQuantile(children(0), children(1))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("dds_cdf"),
-      new ExpressionInfo(classOf[DdsCdf].getName, "dds_cdf"),
-      (children: Seq[Expression]) => DdsCdf(children(0), children(1))))
-  }
 }

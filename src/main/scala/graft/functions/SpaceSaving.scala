@@ -6,7 +6,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -210,23 +210,4 @@ case class SpaceSavingAgg(
     copy(inputAggBufferOffset = o)
   override protected def withNewChildInternal(c: Expression): SpaceSavingAgg =
     copy(child = c)
-}
-
-object SpaceSavingExtensions {
-  private def intLit(e: Expression, what: String): Int = e match {
-    case Literal(v, _) => v.toString.toInt
-    case other => throw new IllegalArgumentException(
-      s"$what must be a literal, got $other")
-  }
-  def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("space_saving_agg"),
-      new ExpressionInfo(classOf[SpaceSavingAgg].getName, "space_saving_agg"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c, kk) =>
-          SpaceSavingAgg(c, intLit(kk, "space_saving_agg k"))
-        case _ =>
-          throw new IllegalArgumentException("space_saving_agg(key, k)")
-      }))
-  }
 }

@@ -1,13 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static Jaro–Winkler kernel — one JVM-static call site so the codegen'd
-  * expression stays inside whole-stage codegen (the CmsProbe/BloomNative
-  * pattern: generated code calls a static method, no virtual dispatch, no
+  * expression stays inside whole-stage codegen (the CmsProbe pattern:
+  * generated code calls a static method, no virtual dispatch, no
   * boxing).
   *
   * Semantics mirror DuckDB's `jaro_winkler_similarity` exactly (the
@@ -103,14 +103,4 @@ case class JaroWinkler(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): JaroWinkler = copy(l, r)
-}
-
-object StringSimilarityExtensions {
-  def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
-      (children: Seq[Expression]) =>
-        JaroWinkler(children(0), children(1))))
-  }
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -645,86 +643,5 @@ object Simhash64 {
     var b = 0
     while (b < 64) { if (counts(b) > 0) out |= (1L << b); b += 1 }
     out
-  }
-}
-
-/** Registration via the sanctioned extension point; Graft.session applies
-  * this so the functions resolve everywhere (SQL included). */
-object VectorExtensions {
-  def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (children: Seq[Expression]) => CosineSim(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("l2_sq"),
-      new ExpressionInfo(classOf[L2Sq].getName, "l2_sq"),
-      (children: Seq[Expression]) => L2Sq(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("shingles3"),
-      new ExpressionInfo(classOf[Shingles3].getName, "shingles3"),
-      (children: Seq[Expression]) => Shingles3(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("lsh_buckets"),
-      new ExpressionInfo(classOf[LshBuckets].getName, "lsh_buckets"),
-      (children: Seq[Expression]) => LshBuckets(children(0),
-        intLit("lsh_buckets", "tables", children(1)),
-        intLit("lsh_buckets", "k", children(2)))))
-    ext.injectFunction((
-      new FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNGrams].getName, "word_ngrams"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3, "word_ngrams takes 3 arguments " +
-          s"(text, n, drop_empty), got ${children.length}")
-        def lit(e: Expression, arg: String): String = e match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(null, _) =>
-            throw new IllegalArgumentException(
-              s"word_ngrams $arg must not be NULL")
-          case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
-            v.toString
-          case other => throw new IllegalArgumentException(
-            s"word_ngrams $arg must be a literal, got $other")
-        }
-        WordNGrams(children(0), lit(children(1), "n").toInt,
-          lit(children(2), "drop_empty").toBoolean)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("rolling_hash64"),
-      new ExpressionInfo(classOf[RollingHash64].getName, "rolling_hash64"),
-      (children: Seq[Expression]) => RollingHash64(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[Simhash64].getName, "simhash64"),
-      (children: Seq[Expression]) => Simhash64(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("stripe_sums"),
-      new ExpressionInfo(classOf[StripeSums].getName, "stripe_sums"),
-      (children: Seq[Expression]) => StripeSums(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (children: Seq[Expression]) =>
-        MinHashSig(children(0), intLit("minhash_sig", "k", children(1)))))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_bands"),
-      new ExpressionInfo(classOf[MinHashBands].getName, "minhash_bands"),
-      (children: Seq[Expression]) => MinHashBands(children(0),
-        intLit("minhash_bands", "k", children(1)),
-        intLit("minhash_bands", "bands", children(2)))))
-    // PLAN-1: the custom top-k-per-group physical operator (heap-based,
-    // map-side pruned) — see graft.plans.TopKPerGroup
-    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
-    // RULE-1: auto-rewrite of the row_number()<=k window pattern into
-    // PLAN-1, so the idiomatic formulation gets the heap plan for free
-    ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
-    // RULE-2: a sort over a driver-held local relation sorts at plan time
-    ext.injectOptimizerRule(_ => graft.plans.LocalSortFold)
-  }
-
-  private def intLit(fn: String, arg: String, e: Expression): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
-      v.toString.toInt
-    case other => throw new IllegalArgumentException(
-      s"$fn $arg must be a literal, got $other")
   }
 }

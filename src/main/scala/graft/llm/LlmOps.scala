@@ -214,6 +214,11 @@ object LlmOps extends QueryModule {
   private[graft] def l2sq(a: Column, b: Column): Column =
     call_function("l2_sq", a, b)
 
+  /** A vector's residual to its cell centroid, lane by lane in float32:
+    * what residual IVF-PQ encodes at build and scores at probe. */
+  private def centroidResidual(v: Column, cent: Column): Column =
+    zip_with(v, cent, (x, y) => (x - y).cast("float"))
+
   /** PQ codebook training: per subspace, k centroids = deterministic
     * hash-sampled seed subvectors refined by `rounds` Lloyd rounds (the
     * llm3e IVF recipe, per subspace; rounds = 0 returns the raw seeds). Assignment argmin is `min(struct(dist, cent_id,
@@ -666,8 +671,7 @@ object LlmOps extends QueryModule {
     val encodeInput =
       if (residual)
         cells.select(col("vec_id"), col("cell"),
-          zip_with(col("embedding"), col("cent"),
-            (x, y) => (x - y).cast("float")).as("embedding"))
+          centroidResidual(col("embedding"), col("cent")).as("embedding"))
       else cells.select(col("vec_id"), col("cell"), col("embedding"))
     val cb =
       if (residual)
@@ -770,8 +774,7 @@ object LlmOps extends QueryModule {
         val qres = q.crossJoin(broadcast(cents))
           .filter(col("cent_id").isin(probeCells.map(Long.box): _*))
           .select(col("cent_id").as("vec_id"),
-            zip_with(col("embedding"), col("cent"),
-              (x, y) => (x - y).cast("float")).as("embedding"))
+            centroidResidual(col("embedding"), col("cent")).as("embedding"))
         pqSubvectors(qres, m, sd)
           .select(col("vec_id").as("cell"), col("sub"),
             col("subvec").as("qsub"))
@@ -842,8 +845,8 @@ object LlmOps extends QueryModule {
           .join(broadcast(cents.select(col("cent_id").as("cell"),
             col("cent").as("ccent"))), "cell")
           .select(col("q_id"), col("cell"),
-            zip_with(col("embedding"), col("ccent"),
-              (x, y) => (x - y).cast("float")).as("embedding"))
+            centroidResidual(col("embedding"), col("ccent"))
+              .as("embedding"))
       else qs.join(broadcast(probeDf), "q_id")
     val lut = qByCell
       .select(col("q_id"), col("cell"), explode(array(

@@ -343,9 +343,9 @@ object Relational extends QueryModule {
     }),
 
     // JOIN-12b: the same prune with SPARK'S OWN bloom expressions
-    // (functions/BloomNative.scala): bloom_filter_agg builds the sketch
-    // as distributed aggregate state (bit-array OR merge, map-side
-    // combined), the scalar subquery lands it in bloom_might_contain as
+    // (registered in functions/Registry.scala): bloom_filter_agg builds
+    // the sketch as distributed aggregate state (bit-array OR merge,
+    // map-side combined), the scalar subquery lands it in bloom_might_contain as
     // a literal, and the probe runs inside whole-stage codegen — vs
     // join12's driver-side stat.bloomFilter + probe UDF. Both sides hash
     // through xxhash64 (the aggregate takes LongType); false positives
@@ -1059,27 +1059,26 @@ object Relational extends QueryModule {
     // sketches' retained entries (DataSketches Intersection). agg19's
     // |A|+|B|−|A∪B| compounds three estimates' error against the UNION's
     // scale (15% documented bound); here the error tracks the overlap
-    // itself — ApproxSpec holds this to ≤5% on the same data. Same plan
-    // shape: two filtered scans building map-side-merged sketch state
-    // (TypedImperativeAggregate ThetaSketchAgg — the shuffle carries
-    // compact sketches, never custkeys), one 1-row cross join for the
-    // set algebra. Sketches persist like agg16's: any later
-    // union/intersect/difference is footprint-sized, zero rescans.
+    // itself — ApproxSpec holds this to ≤5% on the same data. The
+    // sketches are Spark's own theta functions (lgK 12, datasketches-java
+    // 6.2.0): two filtered scans build map-side-merged sketch state (the
+    // shuffle carries compact sketches, never custkeys), one 1-row cross
+    // join does the set algebra, and the estimates are rounded bigints.
+    // Sketches persist like agg16's: any later union/intersect/difference
+    // is footprint-sized, zero rescans.
     "agg22_theta_intersection" -> ((s, d) => {
       val o = Tables.orders(s, d)
       val cut = to_timestamp(lit("1998-01-01"))
       val ska = o.filter(col("o_orderdate") < cut)
-        .agg(call_function("theta_sketch_agg", col("o_custkey")).as("ska"))
+        .agg(theta_sketch_agg(col("o_custkey")).as("ska"))
       val skb = o.filter(col("o_orderdate") >= cut)
-        .agg(call_function("theta_sketch_agg", col("o_custkey")).as("skb"))
+        .agg(theta_sketch_agg(col("o_custkey")).as("skb"))
       ska.crossJoin(skb)
         .select(
-          round(call_function("theta_estimate", col("ska")))
-            .cast("long").as("est_early"),
-          round(call_function("theta_estimate", col("skb")))
-            .cast("long").as("est_late"),
-          round(call_function("theta_intersect_estimate",
-            col("ska"), col("skb"))).cast("long").as("est_overlap"))
+          theta_sketch_estimate(col("ska")).as("est_early"),
+          theta_sketch_estimate(col("skb")).as("est_late"),
+          theta_sketch_estimate(theta_intersection(col("ska"), col("skb")))
+            .as("est_overlap"))
     }),
 
     // AGG-23: DDSketch quantile sketch — mergeable QUANTILE state next to
