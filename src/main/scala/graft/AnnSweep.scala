@@ -101,7 +101,7 @@ object AnnSweep {
     println(f"%n${"nCells"}%6s ${"nprobe"}%6s ${"short"}%5s " +
       f"${"recall@20(q0)"}%14s ${"mean recall@20"}%15s ${"ms/probe"}%9s")
     for (k <- Seq(16, 32, 64)) {
-      val st = graft.TmpStores.scratch(s"annsweep-k$k")
+      val st = Paths.scratch(s, s"annsweep-k$k")
       // the PQ codebook is cell-count-independent: reuse the memoized
       // training artifact instead of re-running k-means per k
       graft.llm.LlmOps.ivfpqBuild(train = e,

@@ -9,8 +9,8 @@ import graft.plans.PlanMetrics
   * inputs are routine at scale (a filter or a partition prune can empty
   * any stage); the engine must degrade to empty results, not exceptions.
   * EmptyInputSpec asserts the failure list stays empty (through this
-  * object, with its shared-path exclusions passed as `exclude`); the
-  * `main` is the standalone full-set diagnostic form of the same audit.
+  * object); the `main` is the standalone diagnostic form of the same
+  * audit.
   */
 object EmptyAudit {
 
@@ -23,14 +23,11 @@ object EmptyAudit {
     }
 
   /** Execute every `SparkEntry.queries` entry's OWN plan against the
-    * empty lake (minus any `exclude` matches — EmptyInputSpec passes its
-    * shared-path writers, which other suites read concurrently in the
-    * parallel test JVM); returns (ok count, failures as
+    * empty lake; returns (ok count, failures as
     * "name: RootCauseClass: message" lines). A `count()` sweep would pass
     * a query whose final projection throws: Catalyst prunes it away. */
-  def audit(s: SparkSession, emptyLakeDir: String,
-            exclude: String => Boolean = _ => false): (Int, Seq[String]) = {
-    val names = SparkEntry.queries.keys.toSeq.sorted.filterNot(exclude)
+  def audit(s: SparkSession, emptyLakeDir: String): (Int, Seq[String]) = {
+    val names = SparkEntry.queries.keys.toSeq.sorted
     val failures = names.flatMap(name => SparkEntry.run(s, name, emptyLakeDir)(
       PlanMetrics.measureShuffleBytes).left.toOption)
     (names.size - failures.size, failures)
@@ -38,7 +35,7 @@ object EmptyAudit {
 
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = "/root/repo/target/empty-lake"
+    val out = Paths.sink("empty-lake")
     val s = Graft.session("graft-empty-audit")
     buildEmptyLake(s, src, out)
     val (ok, failures) = audit(s, out)

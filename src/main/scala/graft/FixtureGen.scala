@@ -5,8 +5,8 @@ import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPOutputStream
 
 /** Deterministic generator for the committed text fixtures under
-  * /root/repo/fixtures (referenced by Scans + MigrationOps and their DuckDB
-  * oracles). Run once via `sbt "runMain graft.FixtureGen"`; output is
+  * the checkout's `fixtures/` ([[Paths.fixture]]; read by Scans,
+  * MigrationOps and their DuckDB oracles). Run once via `sbt "runMain graft.FixtureGen"`; output is
   * byte-stable so the files can live in git.
   *
   * Formats modeled on the reference:
@@ -18,8 +18,6 @@ import java.util.zip.GZIPOutputStream
   *    (reference pseudoace.py:87-102 sort-then-import contract).
   */
 object FixtureGen {
-
-  val Dir = "/root/repo/fixtures"
 
   // ---- shared fixture model (single source of truth for .ace + goldens) ---
 
@@ -171,13 +169,13 @@ object FixtureGen {
 
   def main(args: Array[String]): Unit = {
     // scan2: gzipped plain-text lines
-    writeGz(s"$Dir/lines.txt.gz",
+    writeGz(Paths.fixture("lines.txt.gz"),
       Seq("alpha", "bravo", "charlie", "delta", "echo", "foxtrot",
         "golf", "hotel").mkString("", "\n", "\n"))
 
     // scan3/mig1: .ace dumps
-    write(s"$Dir/sample.ace", aceDump(baseObjs))
-    write(s"$Dir/patches.ace", aceDump(patchObjs))
+    write(Paths.fixture("sample.ace"), aceDump(baseObjs))
+    write(Paths.fixture("patches.ace"), aceDump(patchObjs))
 
     // golden datoms for both dumps (parser ground truth):
     // e = "Class:Ident", path = tokens joined with '.', op, src
@@ -188,7 +186,7 @@ object FixtureGen {
             Seq(s"$cls:$ident", pathToks.mkString("."), v, op, src)
           }
         }
-    write(s"$Dir/ace_datoms_golden.csv",
+    write(Paths.fixture("ace_datoms_golden.csv"),
       csvQuoteAll(Seq("e", "path", "value", "op", "src"), goldenRows))
 
     // mig7/mig7b: golden renders of the fixture QA report, hand-modeled
@@ -204,7 +202,7 @@ object FixtureGen {
         "| ---------- | ----- | ---- | ------ |") ++
         qaRows.map { case (c, r, db) =>
           f"| ${c}%10s | ${r}%5d | ${db}%4d | ${db - r}%6d |" }
-    write(s"$Dir/mig7_markdown_golden.csv",
+    write(Paths.fixture("mig7_markdown_golden.csv"),
       csvQuoteAll(Seq("line_no", "line"),
         mdLines.zipWithIndex.map { case (l, i) => Seq((i + 1).toString, l) }))
     val htmlLines =
@@ -216,7 +214,7 @@ object FixtureGen {
         qaRows.map { case (c, r, db) =>
           s"<tr><td>$c</td><td>$r</td><td>$db</td><td>${db - r}</td></tr>" } ++
         Seq("</tbody></table></body></html>")
-    write(s"$Dir/mig7b_html_golden.csv",
+    write(Paths.fixture("mig7b_html_golden.csv"),
       csvQuoteAll(Seq("line_no", "line"),
         htmlLines.zipWithIndex.map { case (l, i) => Seq((i + 1).toString, l) }))
 
@@ -225,7 +223,7 @@ object FixtureGen {
     // step, re-run skips marked steps) — NOT by running PipelineRunner,
     // so the DuckDB oracle is an independent pin: fresh dir → both steps
     // "ran"; immediate second pass → both markers present → "skipped".
-    write(s"$Dir/mig8_ledger_golden.csv",
+    write(Paths.fixture("mig8_ledger_golden.csv"),
       csvQuoteAll(Seq("pass", "step", "name", "status"), Seq(
         Seq("0", "0", "import", "ran"),
         Seq("0", "1", "qa", "ran"),
@@ -238,7 +236,7 @@ object FixtureGen {
     // every SF (TESTDATA generator contract), so one committed golden
     // serves all gate scales; a table whose name deviated from that
     // pattern hash-mismatches the oracle join — exactly the dual's job.
-    write(s"$Dir/xxhash64_customer_golden.csv",
+    write(Paths.fixture("xxhash64_customer_golden.csv"),
       csvQuoteAll(Seq("c_custkey", "name_xx64"),
         (0 until 15000).map { k =>
           val name = f"Customer#$k%09d"
@@ -247,7 +245,7 @@ object FixtureGen {
         }))
 
     // scan4: QUOTE_ALL QA-report-shaped csv
-    write(s"$Dir/qa_report.csv",
+    write(Paths.fixture("qa_report.csv"),
       csvQuoteAll(Seq("class_name", "ident", "n_ref", "n_db"), Seq(
         Seq("CDS", "cds/id", "2", "2"),
         Seq("Gene", "gene/id", "3", "2"),
@@ -255,7 +253,7 @@ object FixtureGen {
         Seq("Variation", "variation/id", "5", "0"))))
 
     // mig4/mig5: the ACeDB id-catalog (expected per-class object counts)
-    write(s"$Dir/id_catalog.csv",
+    write(Paths.fixture("id_catalog.csv"),
       csvQuoteAll(Seq("class_name", "n_ref"), Seq(
         Seq("CDS", "2"),
         Seq("Gene", "3"),
@@ -267,7 +265,7 @@ object FixtureGen {
     // read counts raw lines on both engines; no arity errors because
     // Spark (pad/flag) and DuckDB (reject) disagree on those rows'
     // visibility, while type errors converge under a field-null filter.
-    write(s"$Dir/messy.csv",
+    write(Paths.fixture("messy.csv"),
       Seq("id,qty,price,name",
         "1,10,9.99,alpha",
         "2,5,1.50,bravo",
@@ -281,10 +279,10 @@ object FixtureGen {
         "10,4,7.77,juliet").mkString("", "\n", "\n"))
 
     // scan5: multi-file dir + a file the glob must skip
-    write(s"$Dir/multi/part-0.txt", "m0-a\nm0-b\nm0-c\n")
-    write(s"$Dir/multi/part-1.txt", "m1-a\nm1-b\n")
-    write(s"$Dir/multi/part-2.txt", "m2-a\nm2-b\nm2-c\nm2-d\n")
-    write(s"$Dir/multi/ignore.dat", "must-not-be-read\n")
+    write(Paths.fixture("multi/part-0.txt"), "m0-a\nm0-b\nm0-c\n")
+    write(Paths.fixture("multi/part-1.txt"), "m1-a\nm1-b\n")
+    write(Paths.fixture("multi/part-2.txt"), "m2-a\nm2-b\nm2-c\nm2-d\n")
+    write(Paths.fixture("multi/ignore.dat"), "must-not-be-read\n")
 
     // mig2c: the same changelog as real EDN log lines
     // [op e path value ts] — one datom per line, gzip like the
@@ -300,7 +298,7 @@ object FixtureGen {
       ("500", "Gene:G3", "status", "dead", "assert"),
       ("120", "Gene:G4", "name", "eps", "assert"),
       ("600", "Gene:G4", "name", "eps", "retract"))
-    writeGz(s"$Dir/edn/edn_log.edn.gz",
+    writeGz(Paths.fixture("edn/edn_log.edn.gz"),
       ednRows.map { case (ts, e, path, v, op) =>
         val kw = if (op == "assert") ":db/add" else ":db/retract"
         s"""[$kw "$e" :$path "$v" $ts]"""
@@ -308,14 +306,14 @@ object FixtureGen {
 
     // mig2: per-file import logs; global order is BY TS ACROSS FILES
     // (the reference sorts each EDN log then imports in timestamp order).
-    write(s"$Dir/edn/edn_log_a.csv",
+    write(Paths.fixture("edn/edn_log_a.csv"),
       csvQuoteAll(Seq("ts", "e", "path", "value", "op"), Seq(
         Seq("100", "Gene:G1", "name", "alpha", "assert"),
         Seq("200", "Gene:G1", "name", "beta", "assert"),
         Seq("150", "Gene:G2", "name", "gamma", "assert"),
         Seq("300", "Gene:G2", "name", "gamma", "retract"),
         Seq("250", "Gene:G3", "status", "live", "assert"))))
-    write(s"$Dir/edn/edn_log_b.csv",
+    write(Paths.fixture("edn/edn_log_b.csv"),
       csvQuoteAll(Seq("ts", "e", "path", "value", "op"), Seq(
         Seq("400", "Gene:G2", "name", "delta", "assert"),
         Seq("175", "Gene:G1", "desc", "first", "assert"),
@@ -328,7 +326,7 @@ object FixtureGen {
     // via a lossless VARCHAR cast (DuckDB 1.0 has no md5(BLOB), and its
     // blob→varchar cast escapes backslashes); the Spark side hashes the
     // raw bytes — identical input either way.
-    new File(s"$Dir/blobs").mkdirs()
+    new File(Paths.fixture("blobs")).mkdirs()
     def blobBytes(i: Int): Array[Byte] = {
       val alphabet =
         "0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
@@ -341,11 +339,11 @@ object FixtureGen {
       sb.toString.getBytes(StandardCharsets.US_ASCII)
     }
     for (i <- 0 until 3) {
-      val fos = new FileOutputStream(s"$Dir/blobs/blob_$i.bin")
+      val fos = new FileOutputStream(Paths.fixture(s"blobs/blob_$i.bin"))
       fos.write(blobBytes(i)); fos.close()
     }
     // the pathGlobFilter must skip this one
-    write(s"$Dir/blobs/ignore.txt", "must-not-be-read\n")
+    write(Paths.fixture("blobs/ignore.txt"), "must-not-be-read\n")
 
     // scan14: REAL PNG files (r12) — six genuine ImageIO-encoded images
     // whose dimensions follow a pinned formula (w = 8+5i, h = 8+3i,
@@ -353,21 +351,21 @@ object FixtureGen {
     // ground truth from the file NAME without needing a PNG decoder.
     // Compressed bytes are encoder-version-dependent, so nothing pins the
     // byte size — only the parsed header fields, which the PNG spec fixes.
-    new File(s"$Dir/pngs").mkdirs()
+    new File(Paths.fixture("pngs")).mkdirs()
     for (i <- 0 until 6) {
-      val fos = new FileOutputStream(s"$Dir/pngs/img_$i.png")
+      val fos = new FileOutputStream(Paths.fixture(s"pngs/img_$i.png"))
       fos.write(graft.multimodal.MultimodalOps
         .encodePngBytes(i.toLong, 8 + 5 * i, 8 + 3 * i))
       fos.close()
     }
-    write(s"$Dir/pngs/ignore.txt", "must-not-be-read\n")
+    write(Paths.fixture("pngs/ignore.txt"), "must-not-be-read\n")
 
     // scan11: XML catalog for Spark 4's built-in XML source. Exercises
     // attributes (id/kind), nested element arrays (tags/tag), an XML
     // entity escape (&amp;), an EMPTY child element (<tags/>) and an
     // ABSENT one — the golden CSV mirror carries the parsed truth the
     // DuckDB oracle reads (the scan3 golden-dual pattern).
-    write(s"$Dir/media_catalog.xml",
+    write(Paths.fixture("media_catalog.xml"),
       """<catalog>
         |  <media id="1" kind="image">
         |    <title>sunrise</title>
@@ -395,7 +393,7 @@ object FixtureGen {
         |  </media>
         |</catalog>
         |""".stripMargin)
-    write(s"$Dir/xml_golden.csv",
+    write(Paths.fixture("xml_golden.csv"),
       csvQuoteAll(Seq("id", "kind", "title", "bytes", "n_tags"), Seq(
         Seq("1", "image", "sunrise", "2048", "2"),
         Seq("2", "audio", "rainfall", "96000", "1"),
@@ -411,10 +409,10 @@ object FixtureGen {
     // URLs carrying unicode hosts/paths. Deterministic and committed; the
     // DuckDB oracles read this same file, so every value is an
     // engine-parity pin (Java regex vs RE2, UTF8String vs utf8proc).
-    write(s"$Dir/unicode_docs.csv",
+    write(Paths.fixture("unicode_docs.csv"),
       csvQuoteAll(Seq("doc_id", "text", "url"), unicodeDocs))
 
-    println(s"fixtures written under $Dir")
+    println(s"fixtures written under ${Paths.fixture("")}")
   }
 
   /** (doc_id, text, url) rows for unicode_docs.csv. \u escapes are used

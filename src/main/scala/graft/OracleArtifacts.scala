@@ -31,23 +31,11 @@ object OracleArtifacts {
     new java.util.concurrent.ConcurrentHashMap[String,
       java.util.Set[String]]()
 
-  /** sf-dir → filesystem-safe token: readable basename + a short hash of
-    * the FULL path ("/root/testdata/sf0.01" → "sf0_01_xxxxxxxx"). The
-    * hash matters: keying on the basename alone would collide two lakes
-    * with the same leaf name (/root/testdata/sf0.01 vs /mnt/regen/sf0.01)
-    * — the dump memos key on the full dir so BOTH would run, the second
-    * silently overwriting the first's replay bytes. Same discrimination
-    * rule as [[graft.operators.Scans.dirTag]], kept readable. */
-  def sfTok(d: String): String = {
-    val dir = d.stripSuffix("/")
-    dir.split('/').last.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + graft.operators.Scans.dirTag(dir)
-  }
-
-  /** The tokened dump path for artifact `name` trained on sf-dir `d`;
-    * records it for [[path]] and returns it. */
+  /** The tokened dump path for artifact `name` trained on sf-dir `d`
+    * ([[Paths.lakeTag]]: two lakes never share one); records it for
+    * [[path]] and returns it. */
   def record(name: String, d: String): String = {
-    val p = s"${graft.operators.Scans.SinkDir}/${name}_${sfTok(d)}"
+    val p = Paths.sink(s"${name}_${Paths.lakeTag(d)}")
     all.computeIfAbsent(name,
       _ => java.util.concurrent.ConcurrentHashMap.newKeySet[String]())
       .add(p)
@@ -58,7 +46,7 @@ object OracleArtifacts {
   /** The path this session's dump wrote for `name`, or the legacy
     * un-tokened path when nothing was recorded. */
   def path(name: String): String =
-    reg.getOrDefault(name, s"${graft.operators.Scans.SinkDir}/$name")
+    reg.getOrDefault(name, Paths.sink(name))
 
   /** Gate invariant, called by Verify immediately before it emits
     * oracle_sql.json: every artifact recorded in this process must be

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path}
 
 import graft.plans.PlanMetrics
 
@@ -11,7 +11,7 @@ import graft.plans.PlanMetrics
   * OBS-2 shuffle bytes (PlanMetrics), the unit Spark prices.
   *
   * Method: per query per SF, three [[SparkEntry.run]]s (per-run
-  * BlockHygiene), each one [[PlanMetrics.measureShuffleBytes]] call that
+  * block drop), each one [[PlanMetrics.measureShuffleBytes]] call that
   * executes the query's own plan — final sorts and projections included,
   * unlike `count()` — and reads its shuffleBytesWritten. The first
   * failing query stops the probe. Reported: the median run's wall time
@@ -47,7 +47,7 @@ object ScaleProbe {
     val names = args.lift(3)
       .map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Heavy)
     val spark = Graft.session("graft-scaleprobe")
-    TmpStores.sweep()
+    Paths.sweep()
     val ratio = spark.read.parquet(s"$sf1/lineitem.parquet").count().toDouble /
       spark.read.parquet(s"$sf01/lineitem.parquet").count()
 
@@ -71,7 +71,7 @@ object ScaleProbe {
     val head = "{\n" +
       f""""lo_dir": "$sf01", "hi_dir": "$sf1", "sf_ratio": $ratio%.2f,""" +
       "\n\"queries\": {\n"
-    Files.writeString(Paths.get(outJson),
+    Files.writeString(Path.of(outJson),
       rows.mkString(head, ",\n", "\n}}\n"))
     System.err.println(s"[probe] wrote $outJson")
     spark.stop()

@@ -57,10 +57,10 @@ object SparkEntry {
     * write, a noop sink, [[plans.PlanMetrics.measureShuffleBytes]]) —
     * never `count()`, which lets Catalyst prune final sorts and
     * projections and so hides faults in them. The frame build is timed
-    * with the action: memo stages build eagerly inside it. Every
-    * unpinned cached block is dropped afterwards, failed or not, so each
-    * query runs free of its predecessors' dead checkpoint blocks
-    * (the pinned [[StageMemo]] stages survive). Returns (seconds, the
+    * with the action: memo stages build eagerly inside it. Every cached
+    * block is dropped afterwards, failed or not, so each query runs free
+    * of its predecessors' dead checkpoint blocks (live [[StageMemo]]
+    * frames survive: [[StageMemo.dropUnpinned]]). Returns (seconds, the
     * action's result), or `name: RootCauseClass: first message line`. */
   def run[T](spark: SparkSession, name: String, sfDir: String)(
       action: DataFrame => T): Either[String, (Double, T)] = {
@@ -77,6 +77,6 @@ object SparkEntry {
           root = root.getCause
         Left(s"$name: ${root.getClass.getSimpleName}: " +
           Option(root.getMessage).getOrElse("").linesIterator.take(1).mkString)
-    } finally BlockHygiene.dropUnpinned(spark)
+    } finally StageMemo.dropUnpinned(spark)
   }
 }

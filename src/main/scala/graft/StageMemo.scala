@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Per-session memo for deliberately-shared pipeline stages.
   *
@@ -15,13 +16,13 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * recompute.
   *
   * [[frame]] materializes a DataFrame stage once per (session, key) via
-  * [[RoundCheckpointer.checkpoint]] (serialized, zstd blocks) and pins it
-  * ([[BlockHygiene]]) so [[SparkEntry.run]]'s between-query block drop
-  * doesn't evict it. [[value]] memoizes an arbitrary build artifact (e.g.
-  * the path of a written index store).
-  * Entries, their pins and their build-ledger lines evict ([[evict]]) when
-  * the owning SparkContext ends, so short-lived sessions stay unreachable
-  * once stopped.
+  * [[RoundCheckpointer.checkpoint]] (serialized, zstd blocks); the blocks
+  * behind live frames are the only ones [[dropUnpinned]] spares.
+  * [[value]] memoizes an arbitrary build artifact (e.g. the path of a
+  * written index store), and [[own]] ties a scratch dir to the session.
+  * Entries, their scratch dirs and their build-ledger lines evict
+  * ([[evict]]) when the owning SparkContext ends, so short-lived sessions
+  * stay unreachable once stopped and leave no files behind.
   *
   * Builds run OUTSIDE the map update: stages nest (importedState builds on
   * patchedLog; the llm28d store build reads the memoized codebook), so a
@@ -66,22 +67,53 @@ object StageMemo {
       })
     }
 
-  /** Forget every memo entry, frame pin and build-ledger line of `s`. */
+  /** A scratch dir owned by a session, deleted by [[evict]]. */
+  private final case class ScratchDir(path: String)
+
+  /** Register scratch dir `dir` ([[Paths.scratch]]) to session `s`. */
+  private[graft] def own(s: SparkSession, dir: String): Unit = {
+    hookEviction(s)
+    cache.put((s, s"scratch:$dir"), ScratchDir(dir)): Unit
+  }
+
+  /** Forget every memo entry and build-ledger line of `s`, and delete its
+    * scratch dirs. Its frames' blocks become droppable. */
   private[graft] def evict(s: SparkSession): Unit = {
     cache.keys.filter(_._1 eq s).flatMap(cache.remove).foreach {
-      case ds: Dataset[_] => BlockHygiene.unpin(ds.toDF()); case _ => () }
+      case ScratchDir(dir) => Paths.delete(dir); case _ => () }
     buildLog.keys.filter(_._1 eq s).foreach(buildLog.remove)
   }
 
-  /** The stage frame for (session, key): built, checkpointed, and
-    * pinned on first use; returned from the memo afterwards.
+  /** Drop every cached dataset and persisted RDD of `s`'s context except
+    * the blocks behind that context's live memo frames.
     *
-    * Pin AFTER winning the putIfAbsent (ADVICE r21): the loser of a build
-    * race is released through its RDD ([[RoundCheckpointer.release]] —
-    * `Dataset.unpersist` only uncaches via the CacheManager, which never
-    * held a checkpoint's blocks), and because the loser was never
-    * pinned its blocks stay eligible for [[BlockHygiene.dropUnpinned]]
-    * either way. */
+    * Operators use [[RoundCheckpointer.checkpoint]] to cut recompute
+    * inside one query, but those blocks live until the context ends, so a
+    * long batch session fills its storage pool with dead blocks and late
+    * queries run under eviction and GC pressure. [[SparkEntry.run]] calls
+    * this between queries. Memo frames are the one legitimate cross-query
+    * cache; matching on the context keeps another context's frames (RDD
+    * ids restart in every context) from sparing an unrelated RDD. */
+  def dropUnpinned(s: SparkSession): Unit = {
+    val sc = s.sparkContext
+    val live = cache.iterator.collect {
+      case ((ss, _), ds: Dataset[_]) if ss.sparkContext eq sc =>
+        ds.queryExecution.analyzed.collectLeaves().collect {
+          case lr: LogicalRDD => lr.rdd.id
+        }
+    }.flatten.toSet
+    s.sharedState.cacheManager.clearCache()
+    sc.getPersistentRDDs.filterNot { case (id, _) => live(id) }
+      .values.foreach(_.unpersist(blocking = false))
+  }
+
+  /** The stage frame for (session, key): built and checkpointed on first
+    * use; returned from the memo afterwards.
+    *
+    * The loser of a build race is released through its RDD
+    * ([[RoundCheckpointer.release]] — `Dataset.unpersist` only uncaches via
+    * the CacheManager, which never held a checkpoint's blocks); it never
+    * entered the memo, so [[dropUnpinned]] would drop its blocks anyway. */
   def frame(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
     cache.get((s, key)) match {
       case Some(df) => df.asInstanceOf[DataFrame]
@@ -92,7 +124,7 @@ object StageMemo {
           case Some(winner) =>
             RoundCheckpointer.release(cp) // lost the race: free the blocks
             winner.asInstanceOf[DataFrame]
-          case None => BlockHygiene.pin(cp)
+          case None => cp
         }
     }
 

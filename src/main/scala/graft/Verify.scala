@@ -1,5 +1,5 @@
 package graft
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the DuckDB compare (tools/compare.py). Each
   * query runs through [[SparkEntry.run]], so its `[verify]` line carries
@@ -35,7 +35,7 @@ object Verify {
     val only: Option[Set[String]] =
       args.lift(2).map(_.split(',').toSet)
     val spark = Graft.session("graft-verify")
-    TmpStores.sweep() // leftover scratch stores from crashed JVMs
+    Paths.sweep() // leftover scratch dirs from crashed JVMs
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
@@ -54,7 +54,7 @@ object Verify {
     // one-SF-per-Verify invariant: fail loudly before emitting replay SQL
     // that could name another SF's artifact bytes
     OracleArtifacts.assertSingleSf()
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+    Files.writeString(Path.of(s"$outDir/oracle_sql.json"),
       toJsonObject(SparkEntry.oracleSql.view
         .filterKeys(k => only.forall(_.contains(k))).toMap))
     // count over the FILTERED set — a 3-query dev run used to print the

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{QueryModule, RoundCheckpointer, Tables}
+import graft.{Paths, QueryModule, RoundCheckpointer, Tables}
 import graft.RoundCheckpointer.Checkpointed
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -494,8 +494,8 @@ object LlmOps extends QueryModule {
     * query 0) — ONE training+encode pass per (session, sf-dir), shared by
     * llm28d's single probe and llm28f's batch probe, whose DuckDB
     * oracles (r17) replay the store post-process. That
-    * cross-process replay is why the store lives at a STABLE SinkDir path
-    * rather than a swept TmpStores scratch dir: the bytes must survive
+    * cross-process replay is why the store lives at a STABLE named sink path
+    * rather than a session scratch dir: the bytes must survive
     * the JVM. The path embeds an sf token via [[graft.OracleArtifacts]]
     * (r18) and the oracle SQL interpolates the recorded path, so two
     * Verify processes on different SFs can no longer cross-poison each
@@ -551,7 +551,8 @@ object LlmOps extends QueryModule {
     * xxhash64-derived weight layout), so reading the dump back changes
     * nothing semantically; it pins the serve contract the way llm3eb's
     * persisted centroids pin IVF. Recall-vs-exact floors stay in
-    * ApproxSpec/LshSpec — approximation quality is a spec property, the
+    * ApproxSpec ("llm3d: bucketed pairwise LSH finds the dominant near-dup
+    * pairs") — approximation quality is a spec property, the
     * replay is a correctness property. */
   private[graft] def memoPersistedLshIndex(s: SparkSession,
                                            d: String): String =
@@ -622,7 +623,7 @@ object LlmOps extends QueryModule {
     * key: a second copy of this lambda elsewhere could silently diverge
     * and poison the memo for whichever caller runs second (and the
     * residual codebook trains INSIDE the build, so a duplicate costs a
-    * full second PQ training pass). Fixed SinkDir path for the llm28e
+    * full second PQ training pass). Fixed named sink path for the llm28e
     * oracle's cross-process replay, same convention as [[memoIvfpqStore]]. */
   private[graft] def memoIvfpqStoreResidual(s: SparkSession,
                                             d: String): String =
@@ -1074,6 +1075,27 @@ object LlmOps extends QueryModule {
     labels
   }
 
+  /** The documents of lake `d` as (doc_id, `cols`…, cluster_id): the
+    * Jaccard >= 0.8 near-dup pairs ([[minhashNearDupPairs]]) become a
+    * symmetric edge list, checkpointed once so the iterations never
+    * recompute the LSH join; [[connectedComponents]] labels each doc with
+    * the min doc_id of its cluster, and a doc without a pair is its own
+    * cluster. Shared by llm12 (the clusters) and llm39 (survivorship). */
+  private def dupClusters(s: SparkSession, d: String,
+                          cols: Column*): DataFrame = {
+    val docs = Tables.documents(s, d)
+    val pairs = minhashNearDupPairs(docs, threshold = 0.8)
+    val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
+      .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
+      .checkpointed()
+    val labels = connectedComponents(edges)
+    val kept = docs.select(col("doc_id") +: cols: _*)
+    kept.join(labels.select(col("node").as("doc_id"), col("comp")),
+        Seq("doc_id"), "left")
+      .select(kept.columns.toSeq.map(col) :+
+        coalesce(col("comp"), col("doc_id")).as("cluster_id"): _*)
+  }
+
   /** 64-bit SimHash over unigram tokens (sign of per-bit weighted sums),
     * on the engine's CROSS-ENGINE hash protocol: the per-token 64-bit hash
     * is the first 16 hex digits of md5(token) (high 8 → bits 63..32, next
@@ -1140,7 +1162,7 @@ object LlmOps extends QueryModule {
     * unicode behavior is actually pinned — each llm*u query below is an
     * engine-parity contract (Java regex/UTF8String vs DuckDB RE2/utf8proc)
     * over surfaces the ASCII lake never touches. */
-  private val UnicodeFixture = "/root/repo/fixtures/unicode_docs.csv"
+  private val UnicodeFixture = Paths.fixture("unicode_docs.csv")
 
   private def unicodeDocs(s: SparkSession): DataFrame =
     s.read.option("header", "true").option("quote", "\"")
@@ -1621,7 +1643,8 @@ object LlmOps extends QueryModule {
     // semantics. Each vector hashes to a sign-bucket (8 random hyperplanes);
     // candidate pairs form only within a bucket (equi-join on bucket, AQE
     // splits skew), then exact cosine re-ranks. Approximate vs the exact
-    // llm3c baseline (LshSpec recall floor), but deterministic: served
+    // llm3c baseline (ApproxSpec "llm3d: bucketed pairwise LSH…" recall
+    // floor), but deterministic: served
     // from the PERSISTED index dump, and the r18 DuckDB oracle replays
     // the bucket self-join + exact re-rank off those bytes.
     "llm3d_embed_pairs_lsh" -> ((s, d) => {
@@ -1869,31 +1892,17 @@ object LlmOps extends QueryModule {
     }),
 
     // LLM-12: near-dup CLUSTER formation — the step between pair emission
-    // (llm2/llm2b) and an actual dedup decision. Jaccard>=0.8 pairs come
-    // from the LSH+exact-verify path (the 100 TB pair source; equals the
-    // exact pair set — llm2's P(miss)~5e-8 argument, and DedupClusterSpec
-    // cross-checks cluster closure against the posting-list exact pairs),
-    // become a symmetric edge list (checkpointed once — iterations must
-    // not recompute the LSH join), connected components label every doc
-    // with the min doc_id of its cluster, and is_canonical marks the one
-    // doc per cluster a dedup pass would keep. Singleton docs are their
-    // own cluster via the left join. Oracle: recursive-CTE transitive
+    // (llm2/llm2b) and an actual dedup decision ([[dupClusters]]). The
+    // Jaccard>=0.8 pairs come from the LSH+exact-verify path (the 100 TB
+    // pair source; equals the exact pair set — llm2's P(miss)~5e-8
+    // argument, and DedupClusterSpec cross-checks cluster closure against
+    // the posting-list exact pairs); is_canonical marks the one doc per
+    // cluster a dedup pass would keep. Oracle: recursive-CTE transitive
     // closure over the same pair set.
-    "llm12_dup_clusters" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val pairs = minhashNearDupPairs(docs, threshold = 0.8)
-      val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-        .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-        .checkpointed()
-      val labels = connectedComponents(edges)
-      docs.select(col("doc_id"))
-        .join(labels.select(col("node").as("doc_id"), col("comp")),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("comp"), col("doc_id")).as("cluster_id"))
+    "llm12_dup_clusters" -> ((s, d) =>
+      dupClusters(s, d)
         .withColumn("is_canonical", col("cluster_id") === col("doc_id"))
-        .orderBy("doc_id")
-    }),
+        .orderBy("doc_id")),
 
     // LLM-41: greedy k-CENTER diversity selection (Gonzalez 1985 2-approx
     // farthest-point traversal — the coreset/diversity sampler behind
@@ -1983,17 +1992,7 @@ object LlmOps extends QueryModule {
     // pre-flight). One extra hash agg over llm12's labels; singleton
     // clusters are filtered (nothing to discard).
     "llm39_cluster_survivor" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val pairs = minhashNearDupPairs(docs, threshold = 0.8)
-      val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-        .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-        .checkpointed()
-      val labels = connectedComponents(edges)
-      docs.select(col("doc_id"), length(col("text")).as("n_chars"))
-        .join(labels.select(col("node").as("doc_id"), col("comp")),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_chars"),
-          coalesce(col("comp"), col("doc_id")).as("cluster_id"))
+      dupClusters(s, d, length(col("text")).as("n_chars"))
         .groupBy("cluster_id")
         .agg(max(struct(col("n_chars"), (-col("doc_id")).as("neg_id")))
             .as("best"),
@@ -3317,7 +3316,7 @@ object LlmOps extends QueryModule {
       // build once per (session, sf-dir) — the probe path is the query;
       // rebuilding a persisted index per invocation was pure bench waste
       // and leaked a scratch dir per run (ADVICE r9). The store lives at
-      // a fixed SinkDir path (overwritten, never accumulating) so this
+      // a fixed named sink path (overwritten, never accumulating) so this
       // query's oracle can replay it post-process.
       val store = memoIvfpqStore(s, d)
       ivfpqProbe(e.filter(col("vec_id") === 0),
@@ -3357,7 +3356,7 @@ object LlmOps extends QueryModule {
       val e = Tables.embeddings(s, d)
       // shares the memoized IVF centroids; the residual codebook is its
       // own (trained on residuals) but the whole store builds once per
-      // (session, sf-dir) at the fixed SinkDir path the oracle replays
+      // (session, sf-dir) at the fixed named sink path the oracle replays
       val store = memoIvfpqStoreResidual(s, d)
       ivfpqProbe(e.filter(col("vec_id") === 0),
         e.filter(col("vec_id") =!= 0), store, residual = true)

@@ -1,6 +1,6 @@
 package graft.migration
 
-import graft.QueryModule
+import graft.{Paths, QueryModule}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -34,12 +34,10 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object MigrationOps extends QueryModule {
 
-  val FixturesDir = "/root/repo/fixtures"
-
   /** Root of the homology second store (mig6b) — deliberately distinct from
     * the main datom store so the two lifecycles are independent, like the
     * reference's separate homology DB (runcommand.py:439-461). */
-  val HomolStoreDir = "/root/repo/target/tmp-sinks/mig6b_homol_store"
+  val HomolStoreDir = Paths.sink("mig6b_homol_store")
 
   // ---- datom parser (UDF-1) ----------------------------------------------
 
@@ -211,7 +209,7 @@ object MigrationOps extends QueryModule {
 
   /** The per-file import logs (reference: sorted EDN logs). Explicit schema —
     * no inferSchema pass over 100 TB of text. */
-  def ednLogs(s: SparkSession, dir: String = s"$FixturesDir/edn"): DataFrame =
+  def ednLogs(s: SparkSession, dir: String = Paths.fixture("edn")): DataFrame =
     s.read.option("header", "true").schema(ednSchema).csv(s"$dir/*.csv")
 
   /** Per-session stage memo ([[graft.StageMemo]]): mig3–mig11 all consume
@@ -227,9 +225,9 @@ object MigrationOps extends QueryModule {
     * patches strictly win (apply-patches MERGE, pseudoace.py:105-110).
     * Materialized once per session ([[stage]]). */
   def patchedLog(s: SparkSession): DataFrame = stage(s, "patchedLog") {
-    aceDatoms(s, s"$FixturesDir/sample.ace").withColumn("ts", lit(0L))
+    aceDatoms(s, Paths.fixture("sample.ace")).withColumn("ts", lit(0L))
       .unionByName(
-        aceDatoms(s, s"$FixturesDir/patches.ace").withColumn("ts", lit(1L)))
+        aceDatoms(s, Paths.fixture("patches.ace")).withColumn("ts", lit(1L)))
   }
 
   /** Imported DB state after patches. Materialized once per session. */
@@ -248,7 +246,7 @@ object MigrationOps extends QueryModule {
 
   def idCatalog(s: SparkSession): DataFrame =
     s.read.option("header", "true").schema(catalogSchema)
-      .csv(s"$FixturesDir/id_catalog.csv")
+      .csv(Paths.fixture("id_catalog.csv"))
 
   /** QA reconciliation (pseudoace.py:113-124): expected vs actual per-class
     * counts, full-outer so classes lost by the migration AND unexpected new
@@ -421,7 +419,7 @@ object MigrationOps extends QueryModule {
     // Sort includes (value, op): multi-valued tags repeat (e, path), so the
     // order must be total for the row-order-sensitive compare.
     "mig1_ace_datoms" -> ((s, _) =>
-      aceDatoms(s, s"$FixturesDir/sample.ace")
+      aceDatoms(s, Paths.fixture("sample.ace"))
         .select("e", "path", "value", "op")
         .orderBy("e", "path", "value", "op")),
 
@@ -442,7 +440,7 @@ object MigrationOps extends QueryModule {
     // line parser against the same oracle as the CSV-shaped logs (the
     // fixture encodes the identical changelog both ways).
     "mig2c_edn_import" -> ((s, _) =>
-      latestWins(ednTextDatoms(s, s"$FixturesDir/edn/edn_log.edn.gz"))
+      latestWins(ednTextDatoms(s, Paths.fixture("edn/edn_log.edn.gz")))
         .orderBy("e", "path")),
 
     // MIG-2d: cardinality-MANY import — datom-triple latest-wins, so
@@ -492,7 +490,7 @@ object MigrationOps extends QueryModule {
     // class-filtered read back proves partition pruning serves the
     // reference's per-class access pattern without touching other classes.
     "mig11_datom_store" -> ((s, _) => {
-      val out = "/root/repo/target/tmp-sinks/mig11_datoms"
+      val out = Paths.sink("mig11_datoms")
       importedState(s)
         .withColumn("cls", clsOf(col("e")))
         .write.mode("overwrite").partitionBy("cls").parquet(out)
@@ -514,7 +512,7 @@ object MigrationOps extends QueryModule {
     // runcommand.py:118-131 gzips every dumped .ace file); the codec is
     // transparent to the paragraph reader on the way back in.
     "mig12_ace_dump_roundtrip" -> ((s, _) => {
-      val out = "/root/repo/target/tmp-sinks/mig12_ace_dump"
+      val out = Paths.sink("mig12_ace_dump")
       importedState(s)
         .withColumn("cls", clsOf(col("e")))
         .withColumn("line",
@@ -549,7 +547,7 @@ object MigrationOps extends QueryModule {
     // MIG-5 (JOIN-5): objects lost by the migration — in the base dump but
     // absent from the final imported state (left anti).
     "mig5_lost_objects" -> ((s, _) => {
-      val base = aceDatoms(s, s"$FixturesDir/sample.ace")
+      val base = aceDatoms(s, Paths.fixture("sample.ace"))
         .select("e").distinct()
       val kept = importedState(s).select("e").distinct()
       base.join(kept, Seq("e"), "left_anti").orderBy("e")
@@ -601,7 +599,7 @@ object MigrationOps extends QueryModule {
     // happy-path ledger can't.
     "mig8_checkpoint_resume" -> ((s, _) => {
       import s.implicits._
-      val ck = "/root/repo/target/tmp-sinks/mig8-checkpoint"
+      val ck = Paths.sink("mig8-checkpoint")
       val runner = new PipelineRunner(ck)
       runner.reset()
       val steps = Seq(
@@ -619,29 +617,29 @@ object MigrationOps extends QueryModule {
   def oracle: Map[String, String] = Map(
     "mig1_ace_datoms" ->
       s"""SELECT e, path, value, op
-         |FROM read_csv('$FixturesDir/ace_datoms_golden.csv', header=true,
+         |FROM read_csv('${Paths.fixture("ace_datoms_golden.csv")}', header=true,
          |              all_varchar=true)
          |WHERE src = 'base'
          |ORDER BY e, path, value, op""".stripMargin,
 
     "mig2_latest_wins" -> (latestWinsSql(
       s"""SELECT CAST(ts AS BIGINT) ts, e, path, value, op
-         |FROM read_csv('$FixturesDir/edn/edn_log_*.csv', header=true,
+         |FROM read_csv('${Paths.fixture("edn/edn_log_*.csv")}', header=true,
          |              all_varchar=true)""".stripMargin) + "\nORDER BY e, path"),
 
     "mig2b_latest_wins_udaf" -> (latestWinsSql(
       s"""SELECT CAST(ts AS BIGINT) ts, e, path, value, op
-         |FROM read_csv('$FixturesDir/edn/edn_log_*.csv', header=true,
+         |FROM read_csv('${Paths.fixture("edn/edn_log_*.csv")}', header=true,
          |              all_varchar=true)""".stripMargin) + "\nORDER BY e, path"),
 
     "mig2c_edn_import" -> (latestWinsSql(
       s"""SELECT CAST(ts AS BIGINT) ts, e, path, value, op
-         |FROM read_csv('$FixturesDir/edn/edn_log_*.csv', header=true,
+         |FROM read_csv('${Paths.fixture("edn/edn_log_*.csv")}', header=true,
          |              all_varchar=true)""".stripMargin) + "\nORDER BY e, path"),
 
     "mig2d_latest_wins_multi" -> (latestWinsMultiSql(
       s"""SELECT CAST(ts AS BIGINT) ts, e, path, value, op
-         |FROM read_csv('$FixturesDir/edn/edn_log_*.csv', header=true,
+         |FROM read_csv('${Paths.fixture("edn/edn_log_*.csv")}', header=true,
          |              all_varchar=true)""".stripMargin) +
       "\nORDER BY e, path, value"),
 
@@ -650,20 +648,20 @@ object MigrationOps extends QueryModule {
     // an independent pin of the renderer, not a replay of it
     "mig7_markdown_report" ->
       s"""SELECT CAST(line_no AS BIGINT) AS line_no, line
-         |FROM read_csv('$FixturesDir/mig7_markdown_golden.csv', header=true,
+         |FROM read_csv('${Paths.fixture("mig7_markdown_golden.csv")}', header=true,
          |              all_varchar=true)
          |ORDER BY CAST(line_no AS BIGINT)""".stripMargin,
 
     "mig7b_html_report" ->
       s"""SELECT CAST(line_no AS BIGINT) AS line_no, line
-         |FROM read_csv('$FixturesDir/mig7b_html_golden.csv', header=true,
+         |FROM read_csv('${Paths.fixture("mig7b_html_golden.csv")}', header=true,
          |              all_varchar=true)
          |ORDER BY CAST(line_no AS BIGINT)""".stripMargin,
 
     "mig8_checkpoint_resume" ->
       s"""SELECT CAST(pass AS INT) AS pass, CAST(step AS INT) AS step,
          |       name, status
-         |FROM read_csv('$FixturesDir/mig8_ledger_golden.csv', header=true,
+         |FROM read_csv('${Paths.fixture("mig8_ledger_golden.csv")}', header=true,
          |              all_varchar=true)
          |ORDER BY pass, step""".stripMargin,
 
@@ -706,7 +704,7 @@ object MigrationOps extends QueryModule {
          |  FROM state GROUP BY 1),
          |cat AS (
          |  SELECT class_name, CAST(n_ref AS BIGINT) AS n_ref
-         |  FROM read_csv('$FixturesDir/id_catalog.csv', header=true,
+         |  FROM read_csv('${Paths.fixture("id_catalog.csv")}', header=true,
          |                all_varchar=true))
          |SELECT COALESCE(db.class_name, cat.class_name) AS class_name,
          |       COALESCE(cat.n_ref, 0) AS n_ref,
@@ -718,7 +716,7 @@ object MigrationOps extends QueryModule {
     "mig5_lost_objects" ->
       s"""WITH state AS (${latestWinsSql(patchedLogSql)})
          |SELECT DISTINCT g.e
-         |FROM read_csv('$FixturesDir/ace_datoms_golden.csv', header=true,
+         |FROM read_csv('${Paths.fixture("ace_datoms_golden.csv")}', header=true,
          |              all_varchar=true) g
          |WHERE g.src = 'base'
          |  AND g.e NOT IN (SELECT e FROM state)
@@ -772,6 +770,6 @@ object MigrationOps extends QueryModule {
   private def patchedLogSql: String =
     s"""SELECT CASE WHEN src = 'base' THEN 0 ELSE 1 END AS ts, e, path,
        |       value, op
-       |FROM read_csv('$FixturesDir/ace_datoms_golden.csv', header=true,
+       |FROM read_csv('${Paths.fixture("ace_datoms_golden.csv")}', header=true,
        |              all_varchar=true)""".stripMargin
 }

@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import graft.{QueryModule, Tables}
+import graft.{Paths, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -501,10 +501,11 @@ object MultimodalOps extends QueryModule {
     // stored binary column, like any production media store), then the
     // metadata-only catalog read must prune the payload column entirely:
     // the scan's ReadSchema has doc_id/modality/meta but NO payload
-    // (MultimodalPlanSpec asserts this). Filtering on meta.width never
+    // (PlanSpec "mm1: metadata-only catalog read prunes the binary payload
+    // column" asserts this). Filtering on meta.width never
     // touches a single payload byte.
     "mm1_media_catalog" -> ((s, d) => {
-      val out = "/root/repo/target/tmp-sinks/mm1_media_store"
+      val out = Paths.sink("mm1_media_store")
       mediaTable(s, d).write.mode("overwrite").parquet(out)
       s.read.parquet(out)
         .filter(col("meta.width") >= 512)
@@ -704,7 +705,7 @@ object MultimodalOps extends QueryModule {
     "mm6_header_parse" -> ((s, _) =>
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.bin")
-        .load("/root/repo/fixtures/blobs")
+        .load(Paths.fixture("blobs"))
         .select(
           element_at(split(col("path"), "/"), -1).as("file_name"),
           decode(substring(col("content"), 1, 4), "UTF-8").as("magic"),
@@ -1055,11 +1056,11 @@ object MultimodalOps extends QueryModule {
     // fixture bytes are alphanumeric ASCII → the VARCHAR cast is lossless
     // and substr offsets equal byte offsets
     "mm6_header_parse" ->
-      """SELECT parse_filename(filename) AS file_name,
+      s"""SELECT parse_filename(filename) AS file_name,
         |  substr(CAST(content AS VARCHAR), 1, 4) AS magic,
         |  CAST(substr(CAST(content AS VARCHAR), 5, 1) AS INT) AS blob_id,
         |  octet_length(content) AS n_bytes
-        |FROM read_blob('/root/repo/fixtures/blobs/*.bin')
+        |FROM read_blob('${Paths.fixture("blobs/*.bin")}')
         |ORDER BY file_name""".stripMargin
   )
 }

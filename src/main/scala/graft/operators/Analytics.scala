@@ -373,7 +373,8 @@ object Analytics extends QueryModule {
     // bit-identical trajectories; the oracle spells (1 − 0.3) as the same
     // double subtraction this code runs (a DECIMAL-folded 0.7 literal
     // would differ in the last ulp and compound through the recursion).
-    // EwmaSpec still pins the scalar-reference golden.
+    // GoldenValueSpec "ts7: EWMA matches the scalar reference fold
+    // bit-exactly" still pins the scalar-reference golden.
     // Execution is the idiomatic Spark shape for per-key sequential state:
     // groupByKey + flatMapSortedGroups = ONE exchange on user_id with a
     // SECONDARY SORT on (ts, event_id) inside it, then a streaming O(1)-

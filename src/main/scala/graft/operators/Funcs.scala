@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Det, QueryModule, Tables}
+import graft.{Det, Paths, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, MapType, StringType}
@@ -204,7 +204,7 @@ object Funcs extends QueryModule {
     "func_hash_xx64" ->
       s"""SELECT c.c_custkey, CAST(g.name_xx64 AS BIGINT) AS name_xx64
          |FROM customer c
-         |JOIN read_csv('${Scans.FixturesDir}/xxhash64_customer_golden.csv',
+         |JOIN read_csv('${Paths.fixture("xxhash64_customer_golden.csv")}',
          |              header=true, all_varchar=true) g
          |  ON CAST(g.c_custkey AS BIGINT) = c.c_custkey
          |ORDER BY c.c_custkey""".stripMargin,

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{QueryModule, Tables}
+import graft.{Paths, QueryModule, Tables}
 import graft.RoundCheckpointer.Checkpointed
 
 /** IVM-1 — incremental view maintenance (SURVEY.md §2.17).
@@ -386,6 +386,32 @@ object Incremental extends QueryModule {
     ()
   }
 
+  // The declared queries' stores: built once per (session, lake) at a
+  // lake-tagged path, so one JVM touching two lakes (the empty-lake audit
+  // and the sf0.001 specs) never rebuilds one path under a second memo key.
+  private def ivm1Store(s: SparkSession, d: String): String =
+    graft.StageMemo.value(s, s"ivm1.store.$d") {
+      val r = Paths.sink(s"ivm1_store_${Paths.lakeTag(d)}")
+      buildStore(s, d, r)
+      r
+    }
+
+  private def ivm2Stores(s: SparkSession, d: String): (String, String) =
+    graft.StageMemo.value(s, s"ivm2.stores.$d") {
+      val tag = Paths.lakeTag(d)
+      val o = Paths.sink(s"ivm2_orders_$tag")
+      val c = Paths.sink(s"ivm2_cust_$tag")
+      buildJoinStores(s, d, o, c)
+      (o, c)
+    }
+
+  private def ivm4Store(s: SparkSession, d: String): String =
+    graft.StageMemo.value(s, s"ivm4.store.$d") {
+      val r = Paths.sink(s"ivm4_store_${Paths.lakeTag(d)}")
+      buildTopkStore(s, d, r)
+      r
+    }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // IVM-1: the v2 aggregate produced WITHOUT reading v2's base table —
     // v1's aggregate plus the v1→v2 change feed. The oracle recomputes
@@ -395,13 +421,7 @@ object Incremental extends QueryModule {
       // the two-version store is deterministic setup, not the measured
       // operation — build it once per (session, sf-dir) (StageMemo); the
       // query itself is the change-feed read + algebraic maintenance
-      val root = graft.StageMemo.value(s, s"ivm1.store.$d") {
-        // dir-tagged like ivm2/ivm3 (ADVICE r10): one JVM touching two
-        // lakes must not rebuild the same store path under a second memo
-        val r = s"${Scans.SinkDir}/ivm1_store_${Scans.dirTag(d)}"
-        buildStore(s, d, r)
-        r
-      }
+      val root = ivm1Store(s, d)
       val feed = VersionedStore.changeFeed(s, root, 1L, 2L, Seq("o_orderkey"))
       maintainSumCount(aggOf(s, root, 1L), feed,
         Seq("o_orderpriority"), "o_totalprice")
@@ -415,18 +435,7 @@ object Incremental extends QueryModule {
     // must hash-match bit-for-bit (no aggregation, so row identity is the
     // whole test).
     "ivm2_incremental_join" -> ((s, d) => {
-      // path tagged by the data dir (join11 precedent): one JVM touching
-      // two lakes (e.g. the empty-lake sweep + sf0.001 specs) must not
-      // rebuild THE SAME store path under a different-dir memo key
-      val (oRoot, cRoot) =
-        graft.StageMemo.value(s, s"ivm2.stores.$d") {
-          val tag = Scans.dirTag(d) // md5-based: hashCode collisions would
-          // alias two lakes onto one store path (ADVICE r10)
-          val o = s"${Scans.SinkDir}/ivm2_orders_$tag"
-          val c = s"${Scans.SinkDir}/ivm2_cust_$tag"
-          buildJoinStores(s, d, o, c)
-          (o, c)
-        }
+      val (oRoot, cRoot) = ivm2Stores(s, d)
       val oOld = VersionedStore.read(s, oRoot, 1L)
       val cOld = VersionedStore.read(s, cRoot, 1L)
       val vOld = oOld.join(cOld,
@@ -445,7 +454,7 @@ object Incremental extends QueryModule {
     // zero-crossing algebra makes the maintained counts identical.
     "ivm3_incremental_distinct" -> ((s, d) => {
       val root = graft.StageMemo.value(s, s"ivm3.store.$d") {
-        val r = s"${Scans.SinkDir}/ivm3_store_${Scans.dirTag(d)}"
+        val r = Paths.sink(s"ivm3_store_${Paths.lakeTag(d)}")
         buildDistinctStore(s, d, r)
         r
       }
@@ -472,11 +481,7 @@ object Incremental extends QueryModule {
     // and the quantile estimates on the identical one-pow doubles.
     "ivm6_incremental_quantile" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val root = graft.StageMemo.value(s, s"ivm4.store.$d") {
-        val r = s"${Scans.SinkDir}/ivm4_store_${Scans.dirTag(d)}"
-        buildTopkStore(s, d, r)
-        r
-      }
+      val root = ivm4Store(s, d)
       val gamma = (1 + 0.01) / (1 - 0.01)
       def bucket(c: org.apache.spark.sql.Column) =
         ceil(log(c) / log(lit(gamma))).cast("long")
@@ -513,11 +518,7 @@ object Incremental extends QueryModule {
     // ranking from the source expression; exact-decimal scores make the
     // maintained view bit-identical.
     "ivm4_incremental_topk" -> ((s, d) => {
-      val root = graft.StageMemo.value(s, s"ivm4.store.$d") {
-        val r = s"${Scans.SinkDir}/ivm4_store_${Scans.dirTag(d)}"
-        buildTopkStore(s, d, r)
-        r
-      }
+      val root = ivm4Store(s, d)
       val feed = VersionedStore.changeFeed(s, root, 1L, 2L, Seq("o_orderkey"))
       val (sup1, v1) = topkStateOf(s, root, 1L, k = 3)
       maintainTopK(v1, sup1, feed,
@@ -545,14 +546,7 @@ object Incremental extends QueryModule {
     // v2 join+agg from the source expressions; exact-decimal maintenance
     // makes the two bit-identical.
     "ivm5_incremental_join_agg" -> ((s, d) => {
-      val (oRoot, cRoot) =
-        graft.StageMemo.value(s, s"ivm2.stores.$d") {
-          val tag = Scans.dirTag(d)
-          val o = s"${Scans.SinkDir}/ivm2_orders_$tag"
-          val c = s"${Scans.SinkDir}/ivm2_cust_$tag"
-          buildJoinStores(s, d, o, c)
-          (o, c)
-        }
+      val (oRoot, cRoot) = ivm2Stores(s, d)
       val oOld = VersionedStore.read(s, oRoot, 1L)
       val cOld = VersionedStore.read(s, cRoot, 1L)
       val vOld = oOld.join(cOld,
@@ -573,11 +567,7 @@ object Incremental extends QueryModule {
     }),
 
     "prof5_table_diff" -> ((s, d) => {
-      val root = graft.StageMemo.value(s, s"ivm1.store.$d") {
-        val r = s"${Scans.SinkDir}/ivm1_store_${Scans.dirTag(d)}"
-        buildStore(s, d, r)
-        r
-      }
+      val root = ivm1Store(s, d)
       val feed = VersionedStore.changeFeed(s, root, 1L, 2L,
         Seq("o_orderkey")).checkpointed()
       def kind(ct: String, label: String) =

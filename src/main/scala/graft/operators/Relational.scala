@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Det, QueryModule, Tables}
+import graft.{Det, Paths, QueryModule, Tables}
 import graft.RoundCheckpointer.Checkpointed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -253,13 +253,12 @@ object Relational extends QueryModule {
     // on either side (the bucketing IS the partitioning). This is the
     // pre-partitioning story for repeated big-table joins at 100 TB: pay
     // the shuffle once at write time, never again per query.
-    // (BucketJoinSpec asserts the no-exchange plan.)
+    // (PlanSpec "join11: bucketed join runs with NO shuffle exchange"
+    // asserts the no-exchange plan.)
     "join11_bucketed" -> ((s, d) => {
-      // table names encode the data dir (ADVICE r3 item 4): one JVM running
-      // against two different dirs must not silently reuse the first dir's
-      // bucketed files. md5-based (ADVICE r10): stable across JVMs AND
-      // collision-resistant, unlike String.hashCode.
-      val tag = Scans.dirTag(d)
+      // table names carry the lake's tag: one JVM running against two
+      // lakes must not silently reuse the first lake's bucketed files
+      val tag = Paths.lakeTag(d)
       val wh = s"graft_b_orders_$tag" -> s"graft_b_lineitem_$tag"
       if (!s.catalog.tableExists(wh._1)) {
         // the in-memory catalog forgets tables across JVMs but their files
@@ -388,18 +387,18 @@ object Relational extends QueryModule {
       // created at first build so a regenerated lake in a LATER session
       // can never be shadowed by stale parquet (the staleness the old
       // per-run rewrite guarded against was cross-session; the memo key
-      // is per-session by construction). TmpStores deletes the dirs on
-      // JVM exit; a build race double-writes two dirs and one path wins.
+      // is per-session by construction). The dirs go when the session
+      // ends; a build race double-writes two dirs and one path wins.
       val fact = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("value"),
           col("event_type"))
       val store = graft.StageMemo.value(s, s"join14.fact.$d") {
-        val p = graft.TmpStores.scratch("join14_events")
+        val p = Paths.scratch(s, "join14_events")
         fact.write.mode("overwrite").partitionBy("event_type").parquet(p)
         p
       }
       val dimPath = graft.StageMemo.value(s, s"join14.dim.$d") {
-        val p = graft.TmpStores.scratch("join14_dim")
+        val p = Paths.scratch(s, "join14_dim")
         Seq(("click", "engagement"), ("purchase", "conversion"),
           ("view", "engagement"), ("signup", "conversion"),
           ("error", "ops")).toDF("event_type", "category")

@@ -1,15 +1,15 @@
 package graft.operators
 
-import graft.{Det, QueryModule, Tables}
+import graft.{Det, Paths, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** SURVEY.md §2.1: scans / sources / sinks.
   *
-  * Text-format fixtures live in /root/repo/fixtures (committed; see
-  * FixtureGen). Sink queries write under target/tmp-sinks and read the
-  * result back, so the declared DataFrame both exercises the sink AND is
+  * Text-format fixtures live in the checkout's `fixtures/` (committed; see
+  * FixtureGen), read through [[graft.Paths.fixture]]. Sink queries write
+  * named sinks under [[graft.Paths.sink]] and read the result back, so the declared DataFrame both exercises the sink AND is
   * oracle-checkable against the logical query.
   *
   * Scale notes: gz text is non-splittable — at 100 TB ingest the per-file
@@ -18,19 +18,6 @@ import org.apache.spark.sql.types._
   * schedules one task per file; paragraph records use a custom lineSep.
   */
 object Scans extends QueryModule {
-
-  val FixturesDir = "/root/repo/fixtures"
-  val SinkDir = "/root/repo/target/tmp-sinks"
-
-  /** Collision-resistant short tag for a data-dir path, used to namespace
-    * on-disk artifacts (bucketed tables, versioned stores) per lake.
-    * String.hashCode collides too easily — two dirs with colliding codes
-    * would memoize separately but WRITE THE SAME PATH, cross-contaminating
-    * lakes (the failure ivm2/join11's tagging exists to prevent). */
-  def dirTag(d: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8"))
-      .take(4).map(b => f"${b & 0xff}%02x").mkString
 
   /** SINK-5's write target: s3a:// when the object-store env contract is
     * present (SPARK_GRAFT_S3A=1 + SPARK_GRAFT_S3_BUCKET; endpoint/creds
@@ -41,8 +28,8 @@ object Scans extends QueryModule {
     if (sys.env.get("SPARK_GRAFT_S3A").contains("1"))
       sys.env.get("SPARK_GRAFT_S3_BUCKET")
         .map(b => s"s3a://$b/graft/sink5_uri")
-        .getOrElse(s"file://$SinkDir/sink5_uri")
-    else s"file://$SinkDir/sink5_uri"
+        .getOrElse(s"file://${Paths.sink("sink5_uri")}")
+    else s"file://${Paths.sink("sink5_uri")}"
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -56,14 +43,14 @@ object Scans extends QueryModule {
 
     // SCAN-2: gzipped line text (codec transparent to spark.read.text)
     "scan2_gz_text" -> ((s, _) =>
-      s.read.text(s"$FixturesDir/lines.txt.gz")
+      s.read.text(Paths.fixture("lines.txt.gz"))
         .select(col("value").as("line"), length(col("value")).as("n"))
         .orderBy("line")),
 
     // SCAN-3: blank-line-delimited paragraph records (.ace dump shape,
     // runcommand.py:134-150): custom lineSep, then header split.
     "scan3_ace_paragraphs" -> ((s, _) =>
-      s.read.option("lineSep", "\n\n").text(s"$FixturesDir/sample.ace")
+      s.read.option("lineSep", "\n\n").text(Paths.fixture("sample.ace"))
         .filter(trim(col("value")) =!= "")
         .select(
           regexp_extract(col("value"), "^(\\S+) : ", 1).as("cls"),
@@ -80,13 +67,13 @@ object Scans extends QueryModule {
           StructField("ident", StringType),
           StructField("n_ref", IntegerType),
           StructField("n_db", IntegerType))))
-        .csv(s"$FixturesDir/qa_report.csv")
+        .csv(Paths.fixture("qa_report.csv"))
         .orderBy("class_name")),
 
     // SCAN-5: regex/glob-filtered directory ingest (util.py:222-241)
     "scan5_glob" -> ((s, _) =>
       s.read.option("pathGlobFilter", "part-*.txt")
-        .text(s"$FixturesDir/multi")
+        .text(Paths.fixture("multi"))
         .select(
           regexp_extract(input_file_name(), "([^/]+)$", 1).as("fname"),
           col("value").as("line"))
@@ -104,7 +91,7 @@ object Scans extends QueryModule {
     // entries), scan cost O(matched bytes).
     "scan10_regex_listing" -> ((s, _) => {
       val re = "^(part-[02]\\.txt|ignore\\.dat)$".r
-      val dir = new org.apache.hadoop.fs.Path(s"$FixturesDir/multi")
+      val dir = new org.apache.hadoop.fs.Path(Paths.fixture("multi"))
       val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
       // lookingAt = PREFIX match, mirroring the reference's re.match
       // semantics (util.py:230) — an unanchored alternation like
@@ -147,7 +134,7 @@ object Scans extends QueryModule {
         StructField("tags", StructType(Seq(
           StructField("tag", ArrayType(StringType)))))))
       s.read.option("rowTag", "media").schema(schema)
-        .xml(s"$FixturesDir/media_catalog.xml")
+        .xml(Paths.fixture("media_catalog.xml"))
         .select(col("_id").as("id"), col("_kind").as("kind"), col("title"),
           col("bytes"),
           coalesce(size(col("tags.tag")), lit(0)).as("n_tags"))
@@ -180,7 +167,7 @@ object Scans extends QueryModule {
       s.read.schema(schema)
         .option("header", "true").option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt")
-        .csv(s"$FixturesDir/messy.csv")
+        .csv(Paths.fixture("messy.csv"))
         .agg(
           count(when(clean, 1)).as("n_clean"),
           count(when(!clean, 1)).as("n_dirty"),
@@ -196,7 +183,7 @@ object Scans extends QueryModule {
     // passes it via .schema(...) — the null-fill semantics are the same,
     // which is what this query certifies.
     "scan7_schema_evolution" -> ((s, d) => {
-      val out = s"$SinkDir/scan7_evo"
+      val out = Paths.sink("scan7_evo")
       val o = Tables.orders(s, d)
       o.filter(col("o_orderkey") % 2 === 0)
         .select("o_orderkey", "o_totalprice")
@@ -220,7 +207,7 @@ object Scans extends QueryModule {
     "scan8_binary_files" -> ((s, _) =>
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.bin")
-        .load("/root/repo/fixtures/blobs")
+        .load(Paths.fixture("blobs"))
         .select(
           element_at(split(col("path"), "/"), -1).as("file_name"),
           col("length").as("n_bytes"),
@@ -243,7 +230,7 @@ object Scans extends QueryModule {
         conv(hex(substring(col("content"), off, len)), 16, 10)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.png")
-        .load("/root/repo/fixtures/pngs")
+        .load(Paths.fixture("pngs"))
         .select(
           element_at(split(col("path"), "/"), -1).as("file_name"),
           decode(substring(col("content"), 2, 3), "UTF-8").as("magic"),
@@ -262,7 +249,7 @@ object Scans extends QueryModule {
     // Same golden-CSV oracle family as mig1: the connector must produce
     // exactly the datoms the UDF parser path produces.
     "scan15_ace_dsv2" -> ((s, _) =>
-      s.read.format("ace").load(s"$FixturesDir/sample.ace")
+      s.read.format("ace").load(Paths.fixture("sample.ace"))
         .filter(col("cls") === "Gene")
         .orderBy("ident", "path", "value", "op")),
 
@@ -275,8 +262,8 @@ object Scans extends QueryModule {
     // the mig1 golden: the full write→read round trip must reproduce the
     // committed datom truth exactly.
     "sink16_ace_dsv2_write" -> ((s, _) => {
-      val tmp = graft.TmpStores.scratch("sink16")
-      s.read.format("ace").load(s"$FixturesDir/sample.ace")
+      val tmp = Paths.scratch(s, "sink16")
+      s.read.format("ace").load(Paths.fixture("sample.ace"))
         .write.format("ace").mode("overwrite").save(s"$tmp/dump")
       s.read.format("ace").load(s"$tmp/dump")
         .orderBy("cls", "ident", "path", "value", "op")
@@ -284,7 +271,7 @@ object Scans extends QueryModule {
 
     // SINK-1: CSV sink (QUOTE_ALL dialect) → read back
     "sink1_csv" -> ((s, d) => {
-      val out = s"$SinkDir/sink1_csv"
+      val out = Paths.sink("sink1_csv")
       Tables.lineitem(s, d)
         .groupBy("l_returnflag").agg(count(lit(1)).as("n"))
         .coalesce(1)
@@ -298,7 +285,7 @@ object Scans extends QueryModule {
 
     // SINK-2: parquet snapshot sink (backup-db analogue) → read back
     "sink2_parquet_snapshot" -> ((s, d) => {
-      val out = s"$SinkDir/sink2_parquet"
+      val out = Paths.sink("sink2_parquet")
       Tables.orders(s, d).filter(col("o_orderstatus") === "F")
         .write.mode("overwrite").parquet(out)
       s.read.parquet(out)
@@ -308,7 +295,7 @@ object Scans extends QueryModule {
 
     // SINK-3: partitioned sink (per-class split dump, runcommand.py:137)
     "sink3_partitioned" -> ((s, d) => {
-      val out = s"$SinkDir/sink3_part"
+      val out = Paths.sink("sink3_part")
       val src = Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
       src.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
@@ -330,7 +317,7 @@ object Scans extends QueryModule {
     "scan13_wholetext" -> ((s, _) =>
       s.read.option("wholetext", "true")
         .option("pathGlobFilter", "part-*.txt")
-        .text(s"$FixturesDir/multi")
+        .text(Paths.fixture("multi"))
         .select(
           regexp_extract(input_file_name(), "([^/]+)$", 1).as("fname"),
           length(col("value")).as("n_chars"),
@@ -345,7 +332,7 @@ object Scans extends QueryModule {
     // directory and all of them). Write reuses sink3's partitioned store;
     // PlanSpec pins PartitionFilters + the pushed-down quantity filter.
     "scan12_partition_pruned" -> ((s, d) => {
-      val out = s"$SinkDir/sink3_part"
+      val out = Paths.sink("sink3_part")
       val src = Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
       src.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
@@ -357,7 +344,7 @@ object Scans extends QueryModule {
 
     // SINK-4: compressed text sink (gzip of dumps, runcommand.py:114-131)
     "sink4_compressed" -> ((s, d) => {
-      val out = s"$SinkDir/sink4_gz"
+      val out = Paths.sink("sink4_gz")
       Tables.nation(s, d)
         .select(concat_ws("|", col("n_nationkey"), col("n_name")).as("value"))
         .coalesce(1)
@@ -405,7 +392,7 @@ object Scans extends QueryModule {
     // SINK-6/SCAN-7: ORC round-trip — the second columnar format; predicate
     // pushdown + pruning apply to the ORC read exactly as to parquet.
     "sink6_orc" -> ((s, d) => {
-      val out = s"$SinkDir/sink6_orc"
+      val out = Paths.sink("sink6_orc")
       Tables.orders(s, d)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
         .write.mode("overwrite").orc(out)
@@ -422,8 +409,8 @@ object Scans extends QueryModule {
     // CompactionSpec asserts the file-count drop. At cluster scale n comes
     // from target_size / avg_row_size, not a constant.
     "sink8_compacted" -> ((s, d) => {
-      val fragmented = s"$SinkDir/sink8_fragmented"
-      val compacted = s"$SinkDir/sink8_compacted"
+      val fragmented = Paths.sink("sink8_fragmented")
+      val compacted = Paths.sink("sink8_compacted")
       Tables.documents(s, d).repartition(32)
         .write.mode("overwrite").parquet(fragmented)
       s.read.parquet(fragmented).repartition(2)
@@ -442,7 +429,7 @@ object Scans extends QueryModule {
     // the per-file record cap via input_file_name(); the declared query
     // certifies the data survives the rolling intact.
     "sink14_sized_files" -> ((s, d) => {
-      val out = s"$SinkDir/sink14_sized"
+      val out = Paths.sink("sink14_sized")
       Tables.orders(s, d).repartition(4)
         .write.mode("overwrite")
         .option("maxRecordsPerFile", 2000)
@@ -461,7 +448,7 @@ object Scans extends QueryModule {
     // no second validation scan (at 100 TB the reference's write-then-
     // re-read validation costs a second pass over the lake).
     "sink15_checked_commit" -> ((s, d) => {
-      val root = s"$SinkDir/sink15_checked"
+      val root = Paths.sink("sink15_checked")
       VersionedStore.destroy(root)
       val orders = Tables.orders(s, d)
       val poisoned = orders.withColumn("o_totalprice",
@@ -483,7 +470,7 @@ object Scans extends QueryModule {
     // time-travel read v1: the answer must still be the F snapshot. The
     // flip to each version is one atomic marker create — no torn reads.
     "sink9_versioned" -> ((s, d) => {
-      val root = s"$SinkDir/sink9_versioned"
+      val root = Paths.sink("sink9_versioned")
       VersionedStore.destroy(root)
       val orders = Tables.orders(s, d)
       val v1 = VersionedStore.commit(
@@ -501,7 +488,7 @@ object Scans extends QueryModule {
     // read must again be the v1 snapshot, and the divergent v2 stays
     // auditable in history.
     "sink11_restore" -> ((s, d) => {
-      val root = s"$SinkDir/sink11_restore"
+      val root = Paths.sink("sink11_restore")
       VersionedStore.destroy(root)
       val orders = Tables.orders(s, d)
       val v1 = VersionedStore.commit(
@@ -521,7 +508,7 @@ object Scans extends QueryModule {
     // keys. The latest read must reflect all three clauses atomically
     // (v1 stays time-travel readable; sink9 proves that isolation).
     "sink10_merge" -> ((s, d) => {
-      val root = s"$SinkDir/sink10_merge"
+      val root = Paths.sink("sink10_merge")
       VersionedStore.destroy(root)
       val cust = Tables.customer(s, d)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
@@ -551,7 +538,7 @@ object Scans extends QueryModule {
     // inserts, %5-only as deletes, %7 survivors as updates, and emit
     // nothing for unchanged rows. One full-outer join on the key, no sort.
     "sink12_cdc" -> ((s, d) => {
-      val root = s"$SinkDir/sink12_cdc"
+      val root = Paths.sink("sink12_cdc")
       VersionedStore.destroy(root)
       val o = Tables.orders(s, d).select("o_orderkey", "o_totalprice")
       VersionedStore.commit(o.filter(col("o_orderkey") % 3 =!= 0), root)
@@ -573,7 +560,7 @@ object Scans extends QueryModule {
     // The oracle checks the round-trip; at 100 TB the layout is what makes
     // selective 2-d reads metadata-bounded instead of scan-bounded.
     "sink13_zorder" -> ((s, d) => {
-      val out = s"$SinkDir/sink13_zorder"
+      val out = Paths.sink("sink13_zorder")
       Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
           "l_quantity")
@@ -593,7 +580,7 @@ object Scans extends QueryModule {
     // SINK-7: JSON-lines round-trip with explicit read schema (schemaless
     // text interchange; no inferSchema pass).
     "sink7_jsonl" -> ((s, d) => {
-      val out = s"$SinkDir/sink7_jsonl"
+      val out = Paths.sink("sink7_jsonl")
       Tables.nation(s, d).select("n_nationkey", "n_name", "n_regionkey")
         .write.mode("overwrite").json(out)
       s.read
@@ -607,7 +594,7 @@ object Scans extends QueryModule {
     // independent parser, converging "clean" definition (see scan9 note)
     "scan9_corrupt_csv" ->
       s"""WITH good AS (
-         |  SELECT * FROM read_csv('$FixturesDir/messy.csv', header=true,
+         |  SELECT * FROM read_csv('${Paths.fixture("messy.csv")}', header=true,
          |    columns={'id':'INTEGER','qty':'INTEGER','price':'DOUBLE',
          |             'name':'VARCHAR'},
          |    ignore_errors=true)
@@ -615,7 +602,7 @@ object Scans extends QueryModule {
          |    AND price IS NOT NULL AND name IS NOT NULL),
          |tot AS (
          |  SELECT COUNT(*) AS n
-         |  FROM read_csv('$FixturesDir/messy.csv', header=true,
+         |  FROM read_csv('${Paths.fixture("messy.csv")}', header=true,
          |                delim='\\t', columns={'line':'VARCHAR'}))
          |SELECT (SELECT COUNT(*) FROM good) AS n_clean,
          |  (SELECT n FROM tot) - (SELECT COUNT(*) FROM good) AS n_dirty,
@@ -627,32 +614,32 @@ object Scans extends QueryModule {
 
     "scan2_gz_text" ->
       s"""SELECT line, length(line) AS n
-         |FROM read_csv('$FixturesDir/lines.txt.gz', header=false, delim='\\t',
+         |FROM read_csv('${Paths.fixture("lines.txt.gz")}', header=false, delim='\\t',
          |              columns={'line': 'VARCHAR'})
          |ORDER BY line""".stripMargin,
 
     "scan3_ace_paragraphs" ->
       s"""SELECT string_split(e, ':')[1] AS cls, count(DISTINCT e) AS n_objects
-         |FROM read_csv('$FixturesDir/ace_datoms_golden.csv', header=true, all_varchar=true)
+         |FROM read_csv('${Paths.fixture("ace_datoms_golden.csv")}', header=true, all_varchar=true)
          |WHERE src = 'base'
          |GROUP BY 1 ORDER BY 1""".stripMargin,
 
     "scan4_csv_quoted" ->
       s"""SELECT class_name, ident, CAST(n_ref AS INT) AS n_ref, CAST(n_db AS INT) AS n_db
-         |FROM read_csv('$FixturesDir/qa_report.csv', header=true, quote='"')
+         |FROM read_csv('${Paths.fixture("qa_report.csv")}', header=true, quote='"')
          |ORDER BY class_name""".stripMargin,
 
     "scan5_glob" ->
       s"""SELECT regexp_extract(filename, '([^/]+)$$', 1) AS fname, count(*) AS n_lines
-         |FROM read_csv('$FixturesDir/multi/part-*.txt', header=false, delim='\\t',
+         |FROM read_csv('${Paths.fixture("multi/part-*.txt")}', header=false, delim='\\t',
          |              columns={'line': 'VARCHAR'}, filename=true)
          |GROUP BY 1 ORDER BY 1""".stripMargin,
 
     "scan10_regex_listing" ->
       s"""SELECT regexp_extract(filename, '([^/]+)$$', 1) AS fname, count(*) AS n_lines
-         |FROM read_csv(['$FixturesDir/multi/part-0.txt',
-         |               '$FixturesDir/multi/part-2.txt',
-         |               '$FixturesDir/multi/ignore.dat'],
+         |FROM read_csv(['${Paths.fixture("multi/part-0.txt")}',
+         |               '${Paths.fixture("multi/part-2.txt")}',
+         |               '${Paths.fixture("multi/ignore.dat")}'],
          |              header=false, delim='\\t',
          |              columns={'line': 'VARCHAR'}, filename=true)
          |GROUP BY 1 ORDER BY 1""".stripMargin,
@@ -667,7 +654,7 @@ object Scans extends QueryModule {
     // empty-vs-absent tags contract
     "scan11_xml" ->
       s"""SELECT id, kind, title, bytes, n_tags
-         |FROM read_csv('$FixturesDir/xml_golden.csv', header=true,
+         |FROM read_csv('${Paths.fixture("xml_golden.csv")}', header=true,
          |  columns={'id':'INTEGER','kind':'VARCHAR','title':'VARCHAR',
          |           'bytes':'BIGINT','n_tags':'INTEGER'})
          |ORDER BY id""".stripMargin,
@@ -681,17 +668,17 @@ object Scans extends QueryModule {
     // printable ASCII, so the VARCHAR cast is lossless and md5 agrees with
     // Spark's digest of the raw bytes
     "scan8_binary_files" ->
-      """SELECT parse_filename(filename) AS file_name,
+      s"""SELECT parse_filename(filename) AS file_name,
         |  octet_length(content) AS n_bytes,
         |  md5(CAST(content AS VARCHAR)) AS content_md5
-        |FROM read_blob('/root/repo/fixtures/blobs/*.bin')
+        |FROM read_blob('${Paths.fixture("blobs/*.bin")}')
         |ORDER BY file_name""".stripMargin,
 
     // the full write→read round trip lands on the same datom truth
     "sink16_ace_dsv2_write" ->
-      """SELECT split_part(e, ':', 1) AS cls,
+      s"""SELECT split_part(e, ':', 1) AS cls,
         |  substr(e, strpos(e, ':') + 1) AS ident, path, value, op
-        |FROM read_csv('/root/repo/fixtures/ace_datoms_golden.csv',
+        |FROM read_csv('${Paths.fixture("ace_datoms_golden.csv")}',
         |              header=true, all_varchar=true)
         |WHERE src = 'base'
         |ORDER BY cls, ident, path, value, op""".stripMargin,
@@ -699,9 +686,9 @@ object Scans extends QueryModule {
     // golden-dual of the DSv2 connector: same committed datom truth as
     // mig1, with e split back into the connector's (cls, ident) columns
     "scan15_ace_dsv2" ->
-      """SELECT split_part(e, ':', 1) AS cls,
+      s"""SELECT split_part(e, ':', 1) AS cls,
         |  substr(e, strpos(e, ':') + 1) AS ident, path, value, op
-        |FROM read_csv('/root/repo/fixtures/ace_datoms_golden.csv',
+        |FROM read_csv('${Paths.fixture("ace_datoms_golden.csv")}',
         |              header=true, all_varchar=true)
         |WHERE src = 'base' AND split_part(e, ':', 1) = 'Gene'
         |ORDER BY ident, path, value, op""".stripMargin,
@@ -737,7 +724,7 @@ object Scans extends QueryModule {
       s"""SELECT regexp_extract(filename, '([^/]+)$$', 1) AS fname,
          |  CAST(length(content) AS INT) AS n_chars,
          |  md5(content) AS content_md5
-         |FROM read_text('$FixturesDir/multi/part-*.txt')
+         |FROM read_text('${Paths.fixture("multi/part-*.txt")}')
          |ORDER BY fname""".stripMargin,
 
     "scan12_partition_pruned" ->

@@ -881,7 +881,7 @@ object StreamOps extends QueryModule {
       s: org.apache.spark.sql.SparkSession, d: String): (String, String) =
     graft.StageMemo.value(s, s"strm22.maintained.$d") {
       import graft.operators.VersionedStore
-      val tmp = graft.TmpStores.scratch("strm22")
+      val tmp = graft.Paths.scratch(s, "strm22")
       val e = Tables.embeddings(s, d).select("vec_id", "embedding")
       val hist = e.filter(col("vec_id") % 4 === 0 && col("vec_id") =!= 0)
       val arrivals = e.filter(col("vec_id") % 4 =!= 0 && col("vec_id") =!= 0)
@@ -1166,7 +1166,7 @@ object StreamOps extends QueryModule {
     // oracle's direct read. Fresh temp dirs per call: the query is about
     // ingest correctness, not resume (the spec covers resume).
     "strm14_file_ingest" -> ((s, d) => {
-      val tmp = graft.TmpStores.scratch("strm14")
+      val tmp = graft.Paths.scratch(s, "strm14")
       val schema = s.read.parquet(s"$d/events.parquet").schema
       fileIngestAvailableNow(s, d, s"$tmp/ckpt", s"$tmp/out", schema,
         globFilter = Some("events.parquet"))
@@ -1191,12 +1191,12 @@ object StreamOps extends QueryModule {
       // store + checkpoint stay per-call scratch dirs: each run's stream
       // must ingest all 4 batches into a FRESH store (replay proof).
       val src = graft.StageMemo.value(s, s"strm15.src.$d") {
-        val p = graft.TmpStores.scratch("strm15src")
+        val p = graft.Paths.scratch(s, "strm15src")
         Tables.events(s, d).select("user_id", "event_id")
           .repartition(4).write.parquet(p)
         p
       }
-      val tmp = graft.TmpStores.scratch("strm15")
+      val tmp = graft.Paths.scratch(s, "strm15")
       val schema = s.read.parquet(src).schema
       runIdempotentIngest(
         s.readStream.schema(schema).option("maxFilesPerTrigger", 1)

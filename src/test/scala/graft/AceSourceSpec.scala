@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * reader, and directory/multi-file layout. */
 class AceSourceSpec extends SparkSpec {
 
-  private val Sample = "/root/repo/fixtures/sample.ace"
+  private val Sample = Paths.fixture("sample.ace")
 
   private def viaDsv2 = spark.read.format("ace").load(Sample)
 
@@ -118,7 +118,7 @@ class AceSourceSpec extends SparkSpec {
     val cmd = Seq("java", "-Xmx48m", "-cp", cp,
       "graft.sources.AceHeapProbe", f.getAbsolutePath, (16L * 1024 * 1024).toString)
     val sb = new StringBuilder
-    val rc = scala.sys.process.Process(cmd, new java.io.File("/root/repo"))
+    val rc = scala.sys.process.Process(cmd, new java.io.File(Paths.Root))
       .!(scala.sys.process.ProcessLogger(l => sb.append(l).append('\n')))
     assert(rc === 0, s"probe JVM failed (OOM = not streaming):\n$sb")
     assert(sb.toString.contains(s"ROWS=${2L * i}"),
@@ -128,7 +128,7 @@ class AceSourceSpec extends SparkSpec {
 
   test("a missing load path fails with a meaningful error, not an NPE") {
     val err = intercept[Exception] {
-      spark.read.format("ace").load("/root/repo/fixtures/does-not-exist")
+      spark.read.format("ace").load(Paths.fixture("does-not-exist"))
         .count()
     }
     assert(err.toString.contains("does not exist") ||

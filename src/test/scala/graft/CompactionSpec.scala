@@ -9,8 +9,8 @@ class CompactionSpec extends SparkSpec {
     def parquetFiles(dir: String): Int =
       Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
         .count(_.getName.endsWith(".parquet"))
-    val frag = parquetFiles("/root/repo/target/tmp-sinks/sink8_fragmented")
-    val comp = parquetFiles("/root/repo/target/tmp-sinks/sink8_compacted")
+    val frag = parquetFiles(Paths.sink("sink8_fragmented"))
+    val comp = parquetFiles(Paths.sink("sink8_compacted"))
     assert(frag === 32, s"expected 32 fragment files, got $frag")
     assert(comp === 2, s"expected 2 compacted files, got $comp")
   }
@@ -19,7 +19,7 @@ class CompactionSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     SparkEntry.queries("sink14_sized_files")(spark, Sf0001).count()
     val perFile = spark.read
-      .parquet("/root/repo/target/tmp-sinks/sink14_sized")
+      .parquet(Paths.sink("sink14_sized"))
       .groupBy(input_file_name().as("f")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1))
     assert(perFile.nonEmpty)

@@ -11,29 +11,22 @@ package graft
   * exactly-once txn bookkeeping asserting a batch id that never committed
   * (strm15).
   *
-  * Queries that write FIXED shared paths under target/tmp-sinks are
-  * excluded here — other suites read those dirs concurrently in the
-  * parallel test JVM, and an empty overwrite would race them. The
-  * `graft.EmptyAudit` dev utility sweeps the FULL set (run it after
-  * adding any query that writes a new store).
+  * The audit covers every declared query, the fixed-sink writers too: sbt
+  * runs the suites one after another in one forked JVM, and every spec that
+  * reads a fixed sink re-runs its writer on its own lake first.
   */
 class EmptyInputSpec extends SparkSpec {
 
-  private val sharedPathWriters: String => Boolean = name =>
-    name.startsWith("sink") || name.startsWith("mm") ||
-      Set("ivm1_incremental_agg", "mig6b_homol_store", "mig11_datom_store",
-        "mig12_ace_dump_roundtrip", "mig8_checkpoint_resume").contains(name)
-
   test("every query runs (does not throw) against an empty lake") {
-    val out = "/root/repo/target/empty-lake-spec"
-    // one sweep implementation: the spec IS EmptyAudit with the suite's
-    // exclusions passed in, so the two can't drift
+    val out = Paths.sink("empty-lake-spec")
+    // one sweep implementation: the spec IS EmptyAudit, so the two can't
+    // drift
     EmptyAudit.buildEmptyLake(spark, Sf0001, out)
-    val (ok, failures) = EmptyAudit.audit(spark, out,
-      exclude = sharedPathWriters)
+    val (ok, failures) = EmptyAudit.audit(spark, out)
     assert(failures.isEmpty,
       s"${failures.size} queries throw on an empty lake:\n" +
         failures.mkString("\n"))
-    assert(ok > 250, s"audit actually ran the query set (ok=$ok)")
+    assert(ok === SparkEntry.queries.size,
+      s"audit ran the whole query set (ok=$ok)")
   }
 }

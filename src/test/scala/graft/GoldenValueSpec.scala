@@ -268,7 +268,7 @@ class GoldenValueSpec extends SparkSpec {
     assert(parsed.length === 6)
     parsed.foreach { case (name, (w, h)) =>
       val img = javax.imageio.ImageIO.read(
-        new java.io.File(s"/root/repo/fixtures/pngs/$name"))
+        new java.io.File(Paths.fixture(s"pngs/$name")))
       assert((img.getWidth.toLong, img.getHeight.toLong) === ((w, h)),
         s"$name: header parse disagrees with the decoder")
     }

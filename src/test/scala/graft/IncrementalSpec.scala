@@ -7,7 +7,7 @@ import graft.operators.{Incremental, VersionedStore}
 /** IVM-1: maintained aggregate == full recompute, exactly (decimal path). */
 class IncrementalSpec extends SparkSpec {
 
-  private val root = "/root/repo/target/tmp-sinks/ivm1_spec_store"
+  private val root = Paths.sink("ivm1_spec_store")
 
   test("changeFeed emits pre+post images for updates, and only real changes") {
     Incremental.buildStore(spark, Sf0001, root)
@@ -63,8 +63,8 @@ class IncrementalSpec extends SparkSpec {
     assert(after.toSeq === before.toSeq)
   }
 
-  private val oRoot = "/root/repo/target/tmp-sinks/ivm2_spec_orders"
-  private val cRoot = "/root/repo/target/tmp-sinks/ivm2_spec_cust"
+  private val oRoot = Paths.sink("ivm2_spec_orders")
+  private val cRoot = Paths.sink("ivm2_spec_cust")
 
   private def joinOf(v: Long) = {
     val o = VersionedStore.read(spark, oRoot, v)
@@ -168,7 +168,7 @@ class IncrementalSpec extends SparkSpec {
     // end-to-end: the declared query equals a direct v2 recompute
     val maintained = SparkEntry.queries("ivm3_incremental_distinct")(s, Sf0001)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val root = s"${graft.operators.Scans.SinkDir}/ivm3_spec_store"
+    val root = Paths.sink("ivm3_spec_store")
     Incremental.buildDistinctStore(s, Sf0001, root)
     val recomputed = VersionedStore.read(s, root, 2L)
       .groupBy("o_orderpriority")
@@ -216,7 +216,7 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("ivm4: maintained top-k view == full recompute of v2") {
-    val root4 = "/root/repo/target/tmp-sinks/ivm4_spec_store"
+    val root4 = Paths.sink("ivm4_spec_store")
     Incremental.buildTopkStore(spark, Sf0001, root4)
     val feed = VersionedStore.changeFeed(spark, root4, 1L, 2L, Seq("o_orderkey"))
     val (sup1, v1) = Incremental.topkStateOf(spark, root4, 1L, k = 3)
@@ -286,7 +286,7 @@ class IncrementalSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(got === Set(("g1", 10L, 1L), ("g1", 30L, 2L), ("g2", 10L, 1L)))
     // maintained == recompute on the ivm4 store (the declared query path)
-    val root = "/root/repo/target/tmp-sinks/ivm6_spec_store"
+    val root = Paths.sink("ivm6_spec_store")
     Incremental.buildTopkStore(spark, Sf0001, root)
     val gamma = (1 + 0.01) / (1 - 0.01)
     def bucket(c: org.apache.spark.sql.Column) =

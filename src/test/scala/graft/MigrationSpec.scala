@@ -203,7 +203,7 @@ class MigrationSpec extends SparkSpec {
 
   test("ace dump writer: per-class dirs, each re-parses to only its class") {
     SparkEntry.queries("mig12_ace_dump_roundtrip")(spark, Sf0001).count()
-    val root = new java.io.File("/root/repo/target/tmp-sinks/mig12_ace_dump")
+    val root = new java.io.File(Paths.sink("mig12_ace_dump"))
     val parts = root.listFiles().map(_.getName).filter(_.startsWith("cls=")).sorted
     // the final state holds Gene + Protein + CDS objects (Variation was
     // never imported; WBGene00000003 is fully retracted but others remain)

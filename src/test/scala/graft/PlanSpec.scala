@@ -101,7 +101,7 @@ class PlanSpec extends SparkSpec {
 
   test("mm1: metadata-only catalog read prunes the binary payload column") {
     SparkEntry.queries("mm1_media_catalog")(spark, Sf0001).count()
-    val df = spark.read.parquet("/root/repo/target/tmp-sinks/mm1_media_store")
+    val df = spark.read.parquet(Paths.sink("mm1_media_store"))
       .filter(col("meta.width") >= 512)
       .select("doc_id", "modality", "meta.mime")
     val p = df.queryExecution.executedPlan.toString
@@ -114,7 +114,7 @@ class PlanSpec extends SparkSpec {
   test("scan8: metadata-only binaryFile read prunes the content column") {
     val df = spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.bin")
-      .load("/root/repo/fixtures/blobs")
+      .load(Paths.fixture("blobs"))
       .select(col("path"), col("length"))
     val p = df.queryExecution.executedPlan.toString
     val readSchema = p.linesIterator.find(_.contains("ReadSchema"))
@@ -127,7 +127,7 @@ class PlanSpec extends SparkSpec {
     // sink3 writes lineitem partitioned by l_returnflag; a filtered read
     // must show the partition filter at the scan (no full-table read)
     SparkEntry.queries("sink3_partitioned")(spark, Sf0001).count()
-    val df = spark.read.parquet("/root/repo/target/tmp-sinks/sink3_part")
+    val df = spark.read.parquet(Paths.sink("sink3_part"))
       .filter(col("l_returnflag") === "R")
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("PartitionFilters: [isnotnull(l_returnflag"),

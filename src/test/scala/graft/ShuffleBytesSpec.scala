@@ -26,7 +26,7 @@ class ShuffleBytesSpec extends SparkSpec {
       "bytes (the orderBy tail is the query's only exchange)") {
     // run the registered query once so the bucketed tables exist
     SparkEntry.queries("join11_bucketed")(spark, Sf0001).collect()
-    val tag = graft.operators.Scans.dirTag(Sf0001)
+    val tag = Paths.lakeTag(Sf0001)
     val core = spark.table(s"graft_b_orders_$tag")
       .join(spark.table(s"graft_b_lineitem_$tag"),
         col("o_orderkey") === col("l_orderkey"))

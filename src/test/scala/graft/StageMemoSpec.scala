@@ -32,10 +32,10 @@ class StageMemoSpec extends SparkSpec {
     try {
       assert(added.length === 1, added.mkString("; "))
       val id = added.head.id
-      BlockHygiene.dropUnpinned(s)
+      StageMemo.dropUnpinned(s)
       assert(sc.getPersistentRDDs.contains(id), "a live memo stays pinned")
       StageMemo.evict(s)
-      BlockHygiene.dropUnpinned(s)
+      StageMemo.dropUnpinned(s)
       assert(!sc.getPersistentRDDs.contains(id),
         "an evicted session's pin must not exempt its RDD id")
     } finally {
