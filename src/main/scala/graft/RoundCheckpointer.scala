@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.rdd.{GraftBlockBridge, RDD}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
@@ -70,7 +71,16 @@ object RoundCheckpointer {
     * mistakenly-passed derived frame can never evict a shared upstream
     * checkpoint. */
   def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
-    case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+    case lr: LogicalRDD => free(lr.rdd)
     case _              => ()
   }
+
+  /** Drop a persisted RDD's blocks without blocking. A local checkpoint
+    * (every [[checkpoint]]) is freed without `RDD.unpersist`, which warns
+    * for each one that its lineage is gone — true by design here, so one
+    * line per released round would flood the log; any other RDD keeps
+    * `unpersist` and its warning. */
+  private[graft] def free(rdd: RDD[_]): Unit =
+    if (!GraftBlockBridge.freeLocalCheckpoint(rdd))
+      rdd.unpersist(blocking = false): Unit
 }

@@ -104,7 +104,7 @@ object StageMemo {
     }.flatten.toSet
     s.sharedState.cacheManager.clearCache()
     sc.getPersistentRDDs.filterNot { case (id, _) => live(id) }
-      .values.foreach(_.unpersist(blocking = false))
+      .values.foreach(RoundCheckpointer.free)
   }
 
   /** The stage frame for (session, key): built and checkpointed on first

@@ -29,7 +29,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *    reader materializes only requested fields; a `count(*)` emits
   *    zero-width rows.
   *
-  * Layout: **splittable byte-range [[InputPartition]]s over the Hadoop
+  * Layout: a load path is one dump file or a directory of `.ace` and
+  * `.ace.gz` files (the reference gzips every per-class dump,
+  * runcommand.py:114-131). A `.ace.gz` file is one [[InputPartition]]
+  * that owns every paragraph, decoded through `GZIPInputStream`: a
+  * deflate stream cannot be entered mid-way. A plain `.ace` file is cut
+  * into **splittable byte-range [[InputPartition]]s over the Hadoop
   * FS API** — the reference dumps one file per class
   * (runcommand.py:134-150), so a large class is one giant file; a
   * one-partition-per-file connector would put a 100-GB class on a
@@ -81,6 +86,16 @@ object AceDataSource {
     StructField("cls", StringType), StructField("ident", StringType),
     StructField("path", StringType), StructField("value", StringType),
     StructField("op", StringType)))
+
+  /** The suffix of every part the writer publishes. */
+  private[sources] val GzSuffix = ".ace.gz"
+
+  /** A dump file a directory load reads and an overwrite deletes. */
+  private[sources] def isDump(name: String): Boolean =
+    name.endsWith(".ace") || name.endsWith(GzSuffix)
+
+  /** A file read whole through gzip rather than split by byte range. */
+  private[sources] def isGzip(file: String): Boolean = file.endsWith(".gz")
 }
 
 private[sources] class AceTable(path: String) extends Table
@@ -145,10 +160,10 @@ private[sources] class AceScan(path: String, pushed: Array[Filter],
       s"ReadSchema: ${required.catalogString}"
 
   /** Byte-range splits over the Hadoop FS API (works off local disk:
-    * hdfs://, s3a://, …). One split per `splitSize` bytes of each file;
-    * the reader resolves paragraph boundaries (see class doc), so a
+    * hdfs://, s3a://, …). One split per `splitSize` bytes of each plain
+    * file; the reader resolves paragraph boundaries (see class doc), so a
     * giant per-class dump file parallelizes across the cluster instead
-    * of loading one executor's heap. */
+    * of loading one executor's heap. A gzipped file is one split. */
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = org.apache.spark.sql.SparkSession.active
     val hconf = spark.sessionState.newHadoopConf()
@@ -160,12 +175,13 @@ private[sources] class AceScan(path: String, pushed: Array[Filter],
     val files =
       if (fs.getFileStatus(root).isDirectory)
         fs.listStatus(root)
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".ace"))
+          .filter(s => s.isFile && AceDataSource.isDump(s.getPath.getName))
           .sortBy(_.getPath.getName).toSeq
       else Seq(fs.getFileStatus(root))
     if (files.isEmpty)
       org.slf4j.LoggerFactory.getLogger(classOf[AceScan]).warn(
-        s"ace load matched zero .ace files under $path — empty scan")
+        s"ace load matched zero .ace or .ace.gz files under $path — " +
+          "empty scan")
     val splitSize = splitSizeOpt.getOrElse {
       try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes"))
@@ -173,17 +189,21 @@ private[sources] class AceScan(path: String, pushed: Array[Filter],
     }.max(1L)
     files.flatMap { st =>
       val len = st.getLen
-      val nLong = math.max(1L, (len + splitSize - 1) / splitSize)
-      // a pathological user-set splitSize on a huge file must fail, not
-      // wrap .toInt negative and silently plan ZERO partitions
-      require(nLong <= Int.MaxValue,
-        s"splitSize=$splitSize yields $nLong splits for ${st.getPath} " +
-          s"(len=$len) — raise splitSize")
-      val n = nLong.toInt
-      (0 until n).map { i =>
-        val start = i.toLong * splitSize
-        AceSplitPartition(st.getPath.toString, start,
-          math.min(splitSize, len - start)): InputPartition
+      if (AceDataSource.isGzip(st.getPath.getName))
+        Seq(AceSplitPartition(st.getPath.toString, 0L, len): InputPartition)
+      else {
+        val nLong = math.max(1L, (len + splitSize - 1) / splitSize)
+        // a pathological user-set splitSize on a huge file must fail, not
+        // wrap .toInt negative and silently plan ZERO partitions
+        require(nLong <= Int.MaxValue,
+          s"splitSize=$splitSize yields $nLong splits for ${st.getPath} " +
+            s"(len=$len) — raise splitSize")
+        val n = nLong.toInt
+        (0 until n).map { i =>
+          val start = i.toLong * splitSize
+          AceSplitPartition(st.getPath.toString, start,
+            math.min(splitSize, len - start)): InputPartition
+        }
       }
     }.toArray
   }
@@ -219,9 +239,13 @@ private[sources] case class AceReaderFactory(
   * Write DECLARES clustering by (cls, ident) and a full sort — Spark
   * plans the shuffle+sort; each DataWriter then streams paragraphs with a
   * one-key lookbehind and zero buffering. Writers stage under
-  * `_staging-<uuid>/part-<pid>-<tid>.ace` (unique per task attempt, so
+  * `_staging-<uuid>/part-<pid>-<tid>.ace.gz` (unique per task attempt, so
   * speculative retries cannot collide) and the driver-side commit
-  * publishes exactly the files named in the commit messages.
+  * publishes exactly the files named in the commit messages. Each part
+  * is one gzip stream at the deflater's default level (`gzip`'s own):
+  * the reference gzips every dumped `.ace` file before it is read back
+  * (runcommand.py:114-131), as mig12 does, and dump text is repetitive
+  * enough that the stored bytes fall several-fold.
   *
   * The ENTIRE write path (staging create, publish rename, truncate,
   * abort sweep) goes through `path.getFileSystem(conf)` — symmetric with
@@ -300,9 +324,11 @@ private[sources] class AceBatchWrite(path: String, schema: StructType,
   : Unit = {
     val (fs, dir) = fsOf(path)
     fs.mkdirs(dir)
+    // plain .ace files too: an overwrite must not leave an older plain
+    // dump readable beside the new gzipped parts
     if (truncate)
       fs.listStatus(dir)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".ace"))
+        .filter(s => s.isFile && AceDataSource.isDump(s.getPath.getName))
         .foreach(s => fs.delete(s.getPath, false))
     // "" = the task's partition was empty and staged nothing; any other
     // staged path MUST exist — a committed task whose output vanished is
@@ -311,14 +337,15 @@ private[sources] class AceBatchWrite(path: String, schema: StructType,
       val f = new org.apache.hadoop.fs.Path(staged)
       require(fs.exists(f), s"commit message names missing staged file $staged")
       // partitionId/taskId restart per job, so append-mode names carry the
-      // job uid: a prior job's part-0-0.ace is DATA under append semantics
-      // and must never be silently replaced. Under truncate the sweep
-      // above already cleared .ace files, so bare names stay stable and a
-      // leftover same-named target (crashed prior commit) is refuse-worthy
-      // too — publish never overwrites.
+      // job uid: a prior job's part-0-0.ace.gz is DATA under append
+      // semantics and must never be silently replaced. Under truncate the
+      // sweep above already cleared dump files, so bare names stay stable
+      // and a leftover same-named target (crashed prior commit) is
+      // refuse-worthy too — publish never overwrites.
       val name =
         if (truncate) f.getName
-        else f.getName.stripSuffix(".ace") + s"-${jobUid.take(8)}.ace"
+        else f.getName.stripSuffix(AceDataSource.GzSuffix) +
+          s"-${jobUid.take(8)}${AceDataSource.GzSuffix}"
       val target = new org.apache.hadoop.fs.Path(dir, name)
       require(!fs.exists(target),
         s"refusing to overwrite existing $target during append publish")
@@ -342,7 +369,8 @@ private[sources] case class AceWriterFactory(staging: String,
     extends org.apache.spark.sql.connector.write.DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
   : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new AceDataWriter(staging, s"part-$partitionId-$taskId.ace", fieldIdx,
+    new AceDataWriter(staging,
+      s"part-$partitionId-$taskId${AceDataSource.GzSuffix}", fieldIdx,
       conf.value)
 }
 
@@ -359,12 +387,14 @@ private[sources] class AceDataWriter(staging: String, name: String,
   // lazily opened: an empty partition publishes no file at all. On an
   // object store this create is a buffered PUT — nothing is visible
   // until commit() closes the stream, which is exactly the task-attempt
-  // isolation the staging protocol needs.
+  // isolation the staging protocol needs. Closing also writes the gzip
+  // trailer.
   private def writer(): java.io.BufferedWriter = {
     if (out == null) {
       val fs = file.getFileSystem(hconf)
       out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-        fs.create(file, true), java.nio.charset.StandardCharsets.UTF_8))
+        new java.util.zip.GZIPOutputStream(fs.create(file, true), 64 * 1024),
+        java.nio.charset.StandardCharsets.UTF_8))
     }
     out
   }
@@ -423,11 +453,13 @@ private[sources] class AceDataWriter(staging: String, name: String,
   override def close(): Unit = ()
 }
 
-/** Streams one byte-range split of an `.ace` file: bounded memory (one
-  * paragraph buffered at a time), exact split-boundary ownership (see
-  * [[AceDataSource]] class doc), header-level class gate BEFORE body
-  * parsing — a pushed `cls` filter skips non-matching paragraphs without
-  * parsing a single body line. */
+/** Streams one byte-range split of an `.ace` file, or all of a `.ace.gz`
+  * file: bounded memory (one paragraph buffered at a time), exact
+  * split-boundary ownership (see [[AceDataSource]] class doc),
+  * header-level class gate BEFORE body parsing — a pushed `cls` filter
+  * skips non-matching paragraphs without parsing a single body line. An
+  * I/O failure (a truncated or corrupt gzip part) fails the task and
+  * names the file; the rows before it are never returned as a result. */
 private[sources] class AcePartitionReader(part: AceSplitPartition,
                                           pushed: Array[Filter],
                                           fields: Array[String],
@@ -447,7 +479,10 @@ private[sources] class AcePartitionReader(part: AceSplitPartition,
 
   private val hpath = new org.apache.hadoop.fs.Path(part.file)
   private val fs = hpath.getFileSystem(hconf)
-  private val end = part.start + part.length // own paragraphs starting ≤ end
+  private val gzip = AceDataSource.isGzip(part.file)
+  // own paragraphs starting ≤ end; a gzip split owns them all (pos then
+  // counts decoded bytes, which no byte range of the file describes)
+  private val end = if (gzip) Long.MaxValue else part.start + part.length
   private val raw = fs.open(hpath)
 
   // byte-tracked line reader: pos = offset of the next unread byte;
@@ -475,12 +510,18 @@ private[sources] class AcePartitionReader(part: AceSplitPartition,
     var l = readLine()
     while (l != null && !isBlank(l)) l = readLine()
   }
+  private def named(e: java.io.IOException) =
+    new java.io.IOException(s"ace read of ${part.file} failed: $e", e)
 
   // position the stream at the first paragraph this split OWNS; any
   // failure mid-initialization must close the already-open stream —
   // close() is never called on a partially constructed reader
   try {
-    if (part.start == 0L) openAt(0L)
+    if (gzip) {
+      in = new java.io.BufferedInputStream(
+        new java.util.zip.GZIPInputStream(raw, 64 * 1024), 64 * 1024)
+      pos = 0L
+    } else if (part.start == 0L) openAt(0L)
     else {
       // seek back to the start of the line containing byte `start`
       val back = math.max(0L, part.start - Lookbehind)
@@ -504,8 +545,8 @@ private[sources] class AcePartitionReader(part: AceSplitPartition,
     }
   } catch {
     case t: Throwable =>
-      try raw.close() catch { case _: Exception => () }
-      throw t
+      try close() catch { case _: Exception => () }
+      throw (t match { case e: java.io.IOException => named(e); case _ => t })
   }
 
   /** next (paragraphText, headerLine) whose start offset this split
@@ -546,9 +587,12 @@ private[sources] class AcePartitionReader(part: AceSplitPartition,
 
   private var current: Array[String] = _
   override def next(): Boolean =
-    if (iter.hasNext) { current = iter.next(); true } else false
+    try if (iter.hasNext) { current = iter.next(); true } else false
+    catch { case e: java.io.IOException => throw named(e) }
   override def get(): InternalRow =
     new GenericInternalRow(
       current.map(UTF8String.fromString(_): Any))
-  override def close(): Unit = raw.close()
+  // the decoding stream closes raw too, and frees a gzip Inflater's
+  // native memory
+  override def close(): Unit = if (in != null) in.close() else raw.close()
 }

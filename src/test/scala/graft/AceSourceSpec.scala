@@ -13,17 +13,39 @@ class AceSourceSpec extends SparkSpec {
 
   private def viaDsv2 = spark.read.format("ace").load(Sample)
 
-  private def viaUdf = {
-    // the scan3/mig1 path: blank-line paragraphs → parseAce UDF
-    spark.read.option("lineSep", "\n\n").text(Sample)
-      .filter(trim(col("value")) =!= "")
-      .select(explode(graft.migration.MigrationOps.parseAce(col("value")))
-        .as("d"))
-      .select(
-        split(col("d.e"), ":").getItem(0).as("cls"),
-        expr("substring(d.e, instr(d.e, ':') + 1)").as("ident"),
-        col("d.path"), col("d.value"), col("d.op"))
+  /** The UDF-parser path (`MigrationOps.aceDatoms`: blank-line
+    * paragraphs → parseAce, the scan3/mig1/mig12 reader) over `path`, in
+    * the source's (cls, ident, path, value, op) schema. */
+  private def udfRows(path: String) =
+    graft.migration.MigrationOps.aceDatoms(spark, path).select(
+      split(col("e"), ":").getItem(0).as("cls"),
+      expr("substring(e, instr(e, ':') + 1)").as("ident"),
+      col("path"), col("value"), col("op"))
+
+  private def viaUdf = udfRows(Sample)
+
+  private def tmpDir(prefix: String) =
+    java.nio.file.Files.createTempDirectory(prefix).toFile
+
+  private def gzipped(bytes: Array[Byte]): Array[Byte] = {
+    val buf = new java.io.ByteArrayOutputStream
+    val gz = new java.util.zip.GZIPOutputStream(buf)
+    try gz.write(bytes) finally gz.close()
+    buf.toByteArray
   }
+
+  private def sampleBytes = java.nio.file.Files.readAllBytes(
+    new java.io.File(Sample).toPath)
+
+  private def decode(in: java.io.InputStream): String = {
+    val gz = new java.util.zip.GZIPInputStream(in)
+    try new String(gz.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    finally gz.close()
+  }
+
+  private def rowBag(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq).toSeq.groupBy(identity).view
+      .mapValues(_.size).toMap
 
   test("DSv2 rows == UDF-parser rows on the committed fixture") {
     val a = viaDsv2.collect().map(_.toSeq).toSet
@@ -173,11 +195,12 @@ class AceSourceSpec extends SparkSpec {
       "round trip must reproduce every datom incl. the -D retraction " +
         "and the dotted path")
     // no object's paragraph may split across files: each (cls, ident)
-    // appears in exactly one .ace part file
+    // appears in exactly one .ace.gz part file
     val files = new java.io.File(tmp).listFiles()
-      .filter(_.getName.endsWith(".ace"))
+      .filter(_.getName.endsWith(".ace.gz"))
+    assert(files.nonEmpty, "the write must publish .ace.gz parts")
     val perFile = files.map { f =>
-      val text = java.nio.file.Files.readString(f.toPath)
+      val text = decode(new java.io.FileInputStream(f))
       "(?m)^(\\S+) : \"([^\"]+)\"$".r.findAllMatchIn(text)
         .map(m => (m.group(1), m.group(2))).toSet
     }
@@ -227,7 +250,7 @@ class AceSourceSpec extends SparkSpec {
     assert(idents === Set("FIRST", "SECOND"),
       "second append silently replaced the first job's part file")
     val files = new java.io.File(tmp).listFiles()
-      .filter(_.getName.endsWith(".ace")).map(_.getName)
+      .filter(_.getName.endsWith(".ace.gz")).map(_.getName)
     assert(files.length === 2 && files.toSet.size === 2,
       s"expected two distinct published parts, got ${files.mkString(", ")}")
   }
@@ -259,13 +282,143 @@ class AceSourceSpec extends SparkSpec {
       .write.format("ace").mode("overwrite").save(out)
     assert(spark.read.format("ace").load(out)
       .select("ident").collect().map(_.getString(0)).toSeq === Seq("ONLY"))
-    // no staging residue: only .ace objects remain under the prefix
+    // no staging residue: only .ace.gz objects remain under the prefix
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val leftover = fs.listStatus(new org.apache.hadoop.fs.Path(out))
       .map(_.getPath.getName)
-    assert(leftover.forall(_.endsWith(".ace")),
+    assert(leftover.forall(_.endsWith(".ace.gz")),
       s"staging residue left behind: ${leftover.mkString(", ")}")
+  }
+
+  test("a gzipped .ace.gz dump: DSv2 rows == MigrationOps.aceDatoms rows " +
+      "over the same file") {
+    val dir = tmpDir("ace-gz")
+    val gz = new java.io.File(dir, "sample.ace.gz")
+    java.nio.file.Files.write(gz.toPath, gzipped(sampleBytes))
+    val a = spark.read.format("ace").load(dir.getPath)
+      .collect().map(_.toSeq)
+    val b = udfRows(gz.getPath).collect().map(_.toSeq)
+    assert(a.nonEmpty && a.toSet === b.toSet && a.length === b.length)
+  }
+
+  test("a truncated .ace.gz part fails the scan with an error naming the " +
+      "file, and returns none of the rows before the cut") {
+    val dir = tmpDir("ace-gz-cut")
+    java.nio.file.Files.write(new java.io.File(dir, "whole.ace").toPath,
+      sampleBytes)
+    val whole = gzipped(sampleBytes)
+    val cut = new java.io.File(dir, "cut.ace.gz")
+    val kept = whole.take(whole.length - 16) // 8 B of deflate data + trailer
+    java.nio.file.Files.write(cut.toPath, kept)
+    // the cut lies past at least one whole paragraph: a reader that ended
+    // at the EOF quietly would have rows to return
+    val prefix = new java.io.ByteArrayOutputStream
+    val in = new java.util.zip.GZIPInputStream(
+      new java.io.ByteArrayInputStream(kept))
+    intercept[java.io.EOFException] {
+      var b = in.read()
+      while (b != -1) { prefix.write(b); b = in.read() }
+    }
+    assert(prefix.toString("UTF-8").contains("\n\n"),
+      s"the cut must follow a paragraph: ${prefix.size()} bytes decoded")
+    val err = intercept[Exception] {
+      spark.read.format("ace").load(dir.getPath).collect()
+    }
+    val chain = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(_.toString).mkString("\n")
+    assert(chain.contains(cut.getAbsolutePath),
+      s"the error must name the truncated part:\n$chain")
+  }
+
+  test("a .ace.gz file plans exactly one partition whatever splitSize is, " +
+      "while a .ace file in the same dir still splits") {
+    val dir = tmpDir("ace-gz-split")
+    val plain = new java.io.File(dir, "a.ace")
+    java.nio.file.Files.write(plain.toPath, sampleBytes)
+    val gz = new java.io.File(dir, "b.ace.gz")
+    java.nio.file.Files.write(gz.toPath, gzipped(sampleBytes))
+    val want = rowBag(viaUdf).map { case (r, n) => r -> 2 * n }
+    for (sz <- Seq(16, 57, 150, 4096)) {
+      def load(p: String) =
+        spark.read.format("ace").option("splitSize", sz.toString).load(p)
+      assert(load(gz.getPath).rdd.getNumPartitions === 1,
+        s"a gzip file is one split at splitSize=$sz")
+      val plainSplits = (plain.length + sz - 1) / sz
+      assert(load(dir.getPath).rdd.getNumPartitions === 1 + plainSplits,
+        s"the plain file must still split at splitSize=$sz")
+      assert(rowBag(load(dir.getPath)) === want,
+        s"row multiset drift at splitSize=$sz")
+    }
+  }
+
+  test("a directory that mixes a .ace part and a .ace.gz part reads both") {
+    val dir = tmpDir("ace-mixed")
+    java.nio.file.Files.writeString(new java.io.File(dir, "p.ace").toPath,
+      "Gene : \"PLAIN\"\nCGC_name \"a\"\n")
+    java.nio.file.Files.write(new java.io.File(dir, "z.ace.gz").toPath,
+      gzipped("Gene : \"ZIPPED\"\nCGC_name \"b\"\n".getBytes("UTF-8")))
+    assert(spark.read.format("ace").load(dir.getPath).select("ident", "value")
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet ===
+      Set(("PLAIN", "a"), ("ZIPPED", "b")))
+  }
+
+  test("write path: parts are gzip streams on the local FS and on s3m://, " +
+      "and their decoded text re-parses to every written datom") {
+    val s = spark
+    import s.implicits._
+    graft.sources.S3MockFileSystem.install(
+      spark.sparkContext.hadoopConfiguration)
+    val datoms = Seq(
+      ("Gene", "G2", "CGC_name", "b", "assert"),
+      ("Gene", "G1", "CGC_name", "a", "assert"),
+      ("Gene", "G1", "RNASeq.FPKM", "3.5", "assert"),
+      ("Gene", "G1", "Other_name", "x", "retract"),
+      ("Protein", "P1", "Peptide", "MK", "assert"))
+      .toDF("cls", "ident", "path", "value", "op")
+    val want = datoms.collect().map(_.toSeq).toSet
+    for (out <- Seq(tmpDir("ace-gz-write").getPath,
+                    "s3m://graft-test/ace-gz-write/dump")) {
+      datoms.repartition(4).write.format("ace").mode("overwrite").save(out)
+      val dir = new org.apache.hadoop.fs.Path(out)
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val parts = fs.listStatus(dir).map(_.getPath)
+        .filter(_.getName.endsWith(".ace.gz"))
+      assert(parts.nonEmpty, s"no .ace.gz part published under $out")
+      // decoded independently of the source, parsed by the UDF path's
+      // paragraph parser
+      val decoded = parts.toSeq.flatMap { p =>
+        decode(fs.open(p)).split("\n\n").toSeq
+          .flatMap(graft.migration.MigrationOps.parseAceParagraph)
+          .map(d => Seq(d.e.takeWhile(_ != ':'), d.e.dropWhile(_ != ':').tail,
+            d.path, d.value, d.op))
+      }
+      assert(decoded.toSet === want && decoded.length === want.size, out)
+      assert(spark.read.format("ace").load(out)
+        .collect().map(_.toSeq).toSet === want, out)
+    }
+  }
+
+  test("write path: overwrite deletes prior .ace and .ace.gz parts alike") {
+    val s = spark
+    import s.implicits._
+    val dir = tmpDir("ace-trunc-both")
+    java.nio.file.Files.writeString(
+      new java.io.File(dir, "legacy.ace").toPath,
+      "Gene : \"OLD_PLAIN\"\nCGC_name \"v\"\n")
+    def one(ident: String) =
+      Seq(("Gene", ident, "CGC_name", "v", "assert"))
+        .toDF("cls", "ident", "path", "value", "op")
+    one("OLD_GZ").write.format("ace").mode("append").save(dir.getPath)
+    def idents = spark.read.format("ace").load(dir.getPath)
+      .select("ident").collect().map(_.getString(0)).toSet
+    assert(idents === Set("OLD_PLAIN", "OLD_GZ"))
+    one("NEW").write.format("ace").mode("overwrite").save(dir.getPath)
+    assert(idents === Set("NEW"))
+    val dumps = dir.listFiles().map(_.getName)
+      .filter(n => n.endsWith(".ace") || n.endsWith(".ace.gz"))
+    assert(dumps.length === 1 && dumps.head.endsWith(".ace.gz"),
+      dumps.mkString(", "))
   }
 
   test("op IN pushdown prunes per datom") {

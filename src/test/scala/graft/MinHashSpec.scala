@@ -76,6 +76,6 @@ class MinHashSpec extends SparkSpec {
     assert(added.length === 1, added.mkString("; "))
     val sig = spark.sparkContext.getPersistentRDDs(added.head.id)
     try assert(sig.count() === LlmOps.shingled(docs).count())
-    finally sig.unpersist()
+    finally RoundCheckpointer.free(sig)
   }
 }
